@@ -4,6 +4,7 @@ import graft.kg.canonical.Canonicalizer
 import graft.kg.pipeline.KgPipeline
 import graft.kg.table.Materializer
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
 /** spark-submit entry point for the production pipeline.
   *
@@ -59,11 +60,15 @@ object Main {
           println(s"snapshot=${report.snapshotId} committed=${report.bucketsCommitted.size} " +
             s"skipped=${report.bucketsSkipped.size} rows=${report.rows.toList.sortBy(_._1)}")
         case "canonical-triples" =>
-          val nodes = KgPipeline.nodesDirect(spark, transcripts, jurisdiction).toDF()
+          // one extraction pass, persisted once; its tagged edge rows take
+          // the broadcast-probe rewrite
+          val combined = KgPipeline.canonicalInputsDirect(spark, transcripts, jurisdiction).toDF()
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val edges = KgPipeline.edgesDirect(spark, transcripts, jurisdiction).toDF()
-          Canonicalizer.canonicalTriples(spark, nodes, edges)
+          Canonicalizer.canonicalTriples(spark,
+            combined.filter(col("m").isNotNull).select("m.*"),
+            combined.filter(col("e").isNotNull).select("e.*"))
             .write.mode("overwrite").parquet(output)
+          combined.unpersist()
           println(s"canonical triples written to $output: " +
             spark.read.parquet(output).count())
         case "entity-stats" =>

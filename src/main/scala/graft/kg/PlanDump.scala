@@ -10,6 +10,11 @@ import org.apache.spark.sql.execution.ExplainMode
   * each change).
   *
   *   runMain graft.kg.PlanDump <outDir> <suffix> <name,name,...> [sfDir]
+  *
+  * `canonical_chain` is the bench chain on generated transcripts in the
+  * conversation-contiguous layout: `canonicalInputsDirect` (persisted) →
+  * `Canonicalizer.canonicalTriples`, executed so the dump shows the final
+  * adaptive plan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -52,6 +57,20 @@ object PlanDump {
           .withColumn("ts", col("ts").cast("timestamp"))
         val rolled = graft.kg.streaming.TranscriptStream.eventRollup(src)
         dump(n, rolled.queryExecution.explainString(ExplainMode.fromString("formatted")))
+      case "canonical_chain" =>
+        import spark.implicits._
+        val path = java.nio.file.Files.createTempDirectory("plandump_chain").toString + "/t"
+        graft.kg.pipeline.KgPipeline.writeConversationPartitioned(
+          graft.kg.gen.TranscriptGen.turns(200, 40).toDF(), path, nFiles = cores * 4)
+        val combined = graft.kg.pipeline.KgPipeline.canonicalInputsDirect(spark,
+          graft.kg.pipeline.KgPipeline.readConversationPartitioned(spark, path),
+          prePartitioned = true).toDF().persist()
+        val ct = graft.kg.canonical.Canonicalizer.canonicalTriples(spark,
+          combined.filter(col("m").isNotNull).select("m.*"),
+          combined.filter(col("e").isNotNull).select("e.*"))
+        ct.collect()
+        dump(n, ct.queryExecution.explainString(ExplainMode.fromString("formatted")))
+        combined.unpersist()
       case _ =>
         val df = graft.SparkEntry.queries(n)(spark, dir)
         dump(n, df.queryExecution.explainString(ExplainMode.fromString("formatted")))

@@ -1,6 +1,6 @@
 package graft.kg.canonical
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Cross-conversation entity canonicalization.
@@ -21,49 +21,66 @@ import org.apache.spark.sql.functions._
   *    canonical id is the lexicographically smallest key in the component
   *    (deterministic under any partitioning).
   *
+  * This module owns the mention-key format. The Column expressions below
+  * build it relationally; [[mentionKey]] is their JVM twin, used by the
+  * extractor to tag edge endpoints as it emits them.
+  *
   * Hot entities (famous precedents appearing in most conversations) make the
   * component label and the final groupBy skewed — mitigated by AQE skew-join
   * handling plus the two-phase (salted) aggregation in `entityStats`.
   *
-  * CONTRACT — one live invocation per session: each top-level call
-  * (`canonicalTriples` / `canonicalPrecedents` / `entityStats`) unpersists
-  * the caches backing the PREVIOUS invocation's returned frame. Run each
-  * returned DataFrame's action(s) to completion before the next invocation
-  * on the same session; a frame held across invocations stays correct but
-  * silently recomputes its lineage (no cache) when acted on later. Do not
-  * interleave concurrent invocations on one session.
+  * Nothing here persists: every returned frame is plain lazy lineage, so
+  * frames from any number of calls may be held and acted on in any order.
   */
 object Canonicalizer {
 
-  private def normName(c: org.apache.spark.sql.Column) =
+  private def normName(c: Column) =
     lower(regexp_replace(trim(c), "\\s+", " "))
 
-  /** Per-session registry of the DataFrames this module has persisted.
-    * persist() registers a CacheManager entry the session strong-references
-    * for its lifetime, so without cleanup every canonicalTriples /
-    * canonicalPrecedents invocation leaked one (Bench re-enters 5+ times per
-    * session, kg_* queries per rep). Each top-level call releases the
-    * PREVIOUS invocation's caches on entry — the consumer has acted on them
-    * by then in every call pattern we have (Verify/Bench run one query to
-    * completion before the next); a straggler plan merely recomputes.
-    * Stopped sessions are evicted so a long-lived JVM cycling sessions does
-    * not grow driver memory. */
-  private val pinned = new java.util.IdentityHashMap[SparkSession, List[DataFrame]]()
+  private def citKey: Column =
+    concat(lit("cit:"), col("citationType"), lit(":"), normName(col("citation")))
 
-  private def pin(spark: SparkSession, df: DataFrame): DataFrame = pinned.synchronized {
-    val it = pinned.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey.sparkContext.isStopped) it.remove()
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pinned.put(spark, p :: Option(pinned.get(spark)).getOrElse(Nil))
-    p
+  private def conceptKey: Column = concat(lit("concept:"), col("conceptId"))
+
+  /** Column form of [[mentionKey]] over node columns. */
+  private def mentionKeyCol: Column =
+    when(col("nodeType") === "concept", conceptKey)
+      .when(col("nodeType") === "precedent", citKey)
+
+  private val WhitespaceRun = java.util.regex.Pattern.compile("\\s+")
+
+  /** JVM twin of `normName`, exact to Spark's string semantics: `trim`
+    * strips only U+0020 (a tab survives it and becomes a space below),
+    * `regexp_replace` is java.util.regex, and `lower` under Spark's default
+    * ICU case mappings lowers a pure-ASCII string bytewise and anything else
+    * with `UCharacter.toLowerCase`. */
+  private def normNameJvm(s: String): String = {
+    var a = 0
+    var b = s.length
+    while (a < b && s.charAt(a) == ' ') a += 1
+    while (b > a && s.charAt(b - 1) == ' ') b -= 1
+    val collapsed = WhitespaceRun.matcher(s.substring(a, b)).replaceAll(" ")
+    if (collapsed.forall(_ < 0x80)) collapsed.toLowerCase(java.util.Locale.ROOT)
+    else com.ibm.icu.lang.UCharacter.toLowerCase(collapsed)
   }
 
-  /** Unpersist every DataFrame this module cached for `spark`. Called
-    * automatically on re-entry; callers may also invoke it once their final
-    * action on a returned frame completes. */
-  def releaseCaches(spark: SparkSession): Unit = pinned.synchronized {
-    Option(pinned.remove(spark)).getOrElse(Nil).foreach(_.unpersist(false))
+  /** Pre-component key of one mention: "concept:" + conceptId for a
+    * concept, "cit:" + citationType + ":" + normalized citation for a
+    * precedent, null for any other node type or a null key field. Equal to
+    * the Column keys of [[precedentKeys]] (`cit_key`) and
+    * [[canonicalConcepts]] (`canonical_id`) for the same fields. */
+  def mentionKey(nodeType: String, conceptId: String,
+                 citationType: String, citation: String): String = nodeType match {
+    case "concept" if conceptId != null => "concept:" + conceptId
+    case "precedent" if citationType != null && citation != null =>
+      "cit:" + citationType + ":" + normNameJvm(citation)
+    case _ => null
   }
+
+  /** A no-op, kept only because the perfbench harness calls it after its
+    * query mix. Nothing in this module persists, so there is nothing to
+    * release. */
+  def releaseCaches(spark: SparkSession): Unit = ()
 
   /** Per-mention keys for precedent nodes: (convId, id, nameKey?, citKey). */
   def precedentKeys(nodes: DataFrame): DataFrame =
@@ -72,27 +89,23 @@ object Canonicalizer {
         col("convId"), col("id"),
         when(col("caseName").isNotNull,
           concat(lit("case:"), normName(col("caseName")))).as("name_key"),
-        concat(lit("cit:"), col("citationType"), lit(":"),
-          normName(col("citation"))).as("cit_key"))
+        citKey.as("cit_key"))
 
-  /** Mention → canonical_id for every precedent node.
-    *
-    * Job shape: ONE action here (runAuto's bounded take; the final join is
-    * lazy). `keys` persists lazily instead of an eager localCheckpoint, and
-    * the candidate edges are NOT pre-distinct'ed — runAuto distincts its
-    * input anyway, so the upstream distincts were two redundant shuffles of
-    * the mention stream per run. Persisted via `pin`: the previous
-    * invocation's cache entries are unpersisted on re-entry (see `pinned`). */
+  /** Name↔citation components (id, component) over the DISTINCT
+    * (name_key, cit_key) pairs, by one bounded job in `runAuto`. A citation
+    * key never seen with a name is in no pair: every lookup misses it and
+    * resolves it to itself, so it needs no self-edge. */
+  private def components(spark: SparkSession, keys: DataFrame): DataFrame =
+    ConnectedComponents.runAuto(spark,
+      keys.select(col("name_key").as("src"), col("cit_key").as("dst")))
+
+  /** Mention → canonical_id for every precedent node. The `precedentKeys`
+    * projection is cheap, so it is recomputed for the component job and
+    * the final (broadcast) lookup rather than persisted. */
   def canonicalPrecedents(spark: SparkSession, nodes: DataFrame): DataFrame = {
-    releaseCaches(spark)
-    val keys = pin(spark, precedentKeys(nodes))
-    val pairEdges = keys.filter(col("name_key").isNotNull)
-      .select(col("name_key").as("src"), col("cit_key").as("dst"))
-    // self-edges keep citation-only keys present in the component table
-    val selfEdges = keys.select(col("cit_key").as("src"), col("cit_key").as("dst"))
-    val comps = ConnectedComponents.runAuto(spark, pairEdges.union(selfEdges))
+    val keys = precedentKeys(nodes)
     keys
-      .join(comps.withColumnRenamed("id", "cit_key"), Seq("cit_key"), "left")
+      .join(components(spark, keys).withColumnRenamed("id", "cit_key"), Seq("cit_key"), "left")
       .select(col("convId"), col("id"),
         coalesce(col("component"), col("cit_key")).as("canonical_id"))
   }
@@ -100,45 +113,61 @@ object Canonicalizer {
   /** Mention → canonical_id for every concept node (broadcast-dictionary key). */
   def canonicalConcepts(nodes: DataFrame): DataFrame =
     nodes.filter(col("nodeType") === "concept")
-      .select(col("convId"), col("id"),
-        concat(lit("concept:"), col("conceptId")).as("canonical_id"))
+      .select(col("convId"), col("id"), conceptKey.as("canonical_id"))
 
   /** Full mention→canonical mapping (precedents ∪ concepts; other node kinds
     * are conversation-local by nature and keep conv-scoped ids). */
   def mentionMap(spark: SparkSession, nodes: DataFrame): DataFrame =
     canonicalPrecedents(spark, nodes).union(canonicalConcepts(nodes))
 
+  /** Fallback for edges that arrive without `subjKey`/`objKey`: derive them
+    * from the nodes with ONE co-partitioned join on convId against a
+    * per-conversation id → key map. Both endpoints resolve from the same
+    * map, so the mapping side has a single exchange (its aggregation) that
+    * both lookups share, and the edge side at most one, keyed by convId.
+    * Node ids are unique within a conversation; an id carrying two
+    * different keys fails the map build instead of duplicating edges. */
+  private def tagEndpoints(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val keyMaps = nodes.select(col("convId"), col("id"), mentionKeyCol.as("key"))
+      .filter(col("key").isNotNull)
+      .groupBy(col("convId"))
+      .agg(map_from_entries(collect_set(struct(col("id"), col("key")))).as("keys"))
+    edges.join(keyMaps, Seq("convId"), "left")
+      .withColumn("subjKey", col("keys")(col("source")))
+      .withColumn("objKey", col("keys")(col("target")))
+  }
+
   /** Rewrite the triple table onto canonical entity ids (the cross-document
     * analog of rewire_edges_after_dedup, extractor.py:4107-4116).
     *
-    * Shuffle shape: the mapping is conversation-local, so BOTH resolution
-    * joins key on (convId, endpoint). Co-partitioning edges and mapping by
-    * convId alone satisfies the clustering requirement of both joins
-    * (HashPartitioning on a subset of the join keys), so subj and obj
-    * resolve with TWO exchanges total — the naive plan re-shuffled the edge
-    * stream and the mapping once per endpoint (four exchanges), which at
-    * corpus scale doubles the largest shuffle of the pipeline. */
+    * Shuffle shape: edges from [[graft.kg.pipeline.KgPipeline.canonicalInputsDirect]]
+    * arrive TAGGED — the extractor wrote each endpoint's pre-component key
+    * ([[mentionKey]]) into `subjKey`/`objKey` when it emitted the edge. The
+    * rewrite is then a map-side probe of the small key → component table
+    * (distinct name↔citation keys, not mentions; a driver-built
+    * LocalRelation when `runAuto` takes its union-find branch, so Spark
+    * broadcasts it): two broadcast hash joins and ZERO Exchanges on the
+    * edge stream. The component job itself reads only the mention rows.
+    * Untagged edges (planted frames, the columnar kg_* memo, the
+    * `nodesDirect`/`edgesDirect` paths) are selected by schema and go
+    * through `tagEndpoints` first, which adds its convId-keyed exchanges;
+    * the probe after it is the same. An endpoint whose key misses the
+    * component table resolves to the key itself, and one without a key to
+    * "convId/id". */
   def canonicalTriples(spark: SparkSession, nodes: DataFrame, edges: DataFrame): DataFrame = {
-    // persist (lazy, via pin — released on the next invocation) rather than
-    // an eager localCheckpoint: the mapping materializes inside the
-    // consumer's own job, and the shared repartition node below is reused by
-    // both the subj and obj branches
-    val mapping = pin(spark, mentionMap(spark, nodes))
-      .repartition(col("convId"))
-    val subjMap = mapping.withColumnRenamed("id", "source")
-      .withColumnRenamed("canonical_id", "subj_canonical")
-    val objMap = mapping.withColumnRenamed("id", "target")
-      .withColumnRenamed("canonical_id", "obj_canonical")
-    edges
-      .repartition(col("convId"))
-      .join(subjMap, Seq("convId", "source"), "left")
-      .join(objMap, Seq("convId", "target"), "left")
+    val tagged =
+      if (edges.columns.contains("subjKey") && edges.columns.contains("objKey")) edges
+      else tagEndpoints(nodes, edges)
+    val comps = components(spark, precedentKeys(nodes))
+    def probe(df: DataFrame, key: String, comp: String) =
+      df.join(comps.select(col("id").as(key), col("component").as(comp)), Seq(key), "left")
+    probe(probe(tagged, "subjKey", "subj_comp"), "objKey", "obj_comp")
       .select(
         col("convId").as("conv_id"),
-        coalesce(col("subj_canonical"),
+        coalesce(col("subj_comp"), col("subjKey"),
           concat(col("convId"), lit("/"), col("source"))).as("subj"),
         col("relation").as("pred"),
-        coalesce(col("obj_canonical"),
+        coalesce(col("obj_comp"), col("objKey"),
           concat(col("convId"), lit("/"), col("target"))).as("obj"))
   }
 

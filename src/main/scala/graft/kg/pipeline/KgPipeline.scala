@@ -1,5 +1,6 @@
 package graft.kg.pipeline
 
+import graft.kg.canonical.Canonicalizer
 import graft.kg.extract.DocExtractor
 import graft.kg.model._
 import graft.kg.ontology.{Ontology, OntologyData}
@@ -40,8 +41,14 @@ final case class MentionKeyRow(
     convId: String, id: String, nodeType: String, conceptId: String,
     caseName: String, citation: String, citationType: String)
 
-/** Column-pruned edge row for the canonical triple rewrite. */
-final case class TripleEdgeRow(convId: String, source: String, relation: String, target: String)
+/** Column-pruned edge row for the canonical triple rewrite, its endpoints
+  * tagged at emission with their pre-component keys
+  * ([[graft.kg.canonical.Canonicalizer.mentionKey]]; null for endpoints
+  * that are neither concepts nor precedents), so the rewrite needs no join
+  * back to the mention rows. */
+final case class TripleEdgeRow(
+    convId: String, source: String, relation: String, target: String,
+    subjKey: String, objKey: String)
 
 /** Tagged union of EVERY materialized table's row type, emitted by
   * [[KgPipeline.allTablesDirect]] in one extraction pass. Persisted as a
@@ -259,9 +266,11 @@ object KgPipeline {
 
   /** Extraction → canonicalization inputs in ONE pass, pruned at the
     * boundary: mention-key rows for concept/precedent nodes + slim edge
-    * rows. Persist the result and project with `filter(m.isNotNull)` /
-    * `filter(e.isNotNull)` — the canonical-triple chain then caches ~10×
-    * fewer bytes than the full [[NodeOrEdge]] union. */
+    * rows whose endpoints carry their mention keys (looked up in the
+    * conversation's own nodes, so tagging costs no join). Persist the
+    * result and project with `filter(m.isNotNull)` / `filter(e.isNotNull)`
+    * — the canonical-triple chain then caches ~10× fewer bytes than the
+    * full [[NodeOrEdge]] union, and its rewrite is a broadcast probe. */
   def canonicalInputsDirect(
       spark: SparkSession,
       transcripts: DataFrame,
@@ -269,12 +278,15 @@ object KgPipeline {
       prePartitioned: Boolean = false): Dataset[CanonInputRow] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[CanonInputRow]
     flatExtract(spark, transcripts, jurisdiction, prePartitioned = prePartitioned) { g =>
-      g.nodes.iterator
-        .filter(n => n.nodeType == "concept" || n.nodeType == "precedent")
+      val mentions = g.nodes.filter(n => n.nodeType == "concept" || n.nodeType == "precedent")
+      val keyOf = mentions.iterator.map(n => n.id -> Canonicalizer.mentionKey(
+        n.nodeType, n.conceptId, n.citationType, n.citation)).toMap
+      mentions.iterator
         .map(n => CanonInputRow(Some(MentionKeyRow(n.convId, n.id, n.nodeType,
           n.conceptId, n.caseName, n.citation, n.citationType)), None)) ++
         g.edges.iterator.map(e => CanonInputRow(None,
-          Some(TripleEdgeRow(e.convId, e.source, e.relation, e.target))))
+          Some(TripleEdgeRow(e.convId, e.source, e.relation, e.target,
+            keyOf.getOrElse(e.source, null), keyOf.getOrElse(e.target, null)))))
     }
   }
 

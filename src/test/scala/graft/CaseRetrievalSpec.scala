@@ -47,6 +47,30 @@ class CaseRetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
   }
 
+  /** The fixture's own profiles, read field by field (every channel plus
+    * `concept_text` and `full_case_text`): the input for checks that need
+    * realistic profiles but not the reference graphs. `conceptOrder` is the
+    * key order of `all_concepts`, which the generator wrote in the
+    * reference's insertion order. */
+  private lazy val fixtureProfiles: Seq[Profile] =
+    fx.path("profiles").elements().asScala.map { pj =>
+      val outcome = pj.path("outcome")
+      Profile(
+        caseId = pj.path("case_id").asText(),
+        label = Some(pj.path("label").asInt()),
+        ontologyConcepts = mapOf(pj.path("ontology_concepts")),
+        statuteFamilies = mapOf(pj.path("statute_families")),
+        allConcepts = mapOf(pj.path("all_concepts")),
+        conceptOrder = pj.path("all_concepts").fieldNames().asScala.toVector,
+        schemes = imapOf(pj.path("schemes")),
+        precedentCitations = seqOf(pj.path("precedent_citations")).toSet,
+        factTypes = imapOf(pj.path("fact_types")),
+        edgeTypes = imapOf(pj.path("edge_types")),
+        outcome = if (outcome.isTextual) Some(outcome.asText()) else None,
+        conceptText = pj.path("concept_text").asText(),
+        fullCaseText = pj.path("full_case_text").asText())
+    }.toSeq
+
   private def near(a: Double, b: Double, tol: Double = 1e-9) = math.abs(a - b) <= tol
 
   test("concept-token normalization and statute families are string-exact") {
@@ -197,8 +221,8 @@ class CaseRetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(idx3.similarity("a", "c") > idx3.similarity("b", "c")) // a,c also share yy
     // end-to-end: LOO with the text channel on the fixture profiles runs
     // and yields valid probabilities
-    val ts = CaseTextTfidf.textSim(profiles, stop)
-    val loo = leaveOneOut(profiles, 10, Weights(), Some(ts), None)
+    val ts = CaseTextTfidf.textSim(fixtureProfiles, stop)
+    val loo = leaveOneOut(fixtureProfiles, 10, Weights(), Some(ts), None)
     for (m <- Methods; p <- loo(m).probs) assert(p >= 0.0 && p <= 1.0)
   }
 

@@ -251,6 +251,126 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"mapping exchange not shared:\n${plan.take(3000)}")
   }
 
+  /** Precedents across conversations: name+citation, citation-only and
+    * name-only mentions, the same citations written with runs of
+    * whitespace, tabs, padding and mixed case, plus two generated
+    * conversations for concept mentions. */
+  private def canonicalTurns = {
+    import spark.implicits._
+    val texts = Seq(
+      "cA" -> Seq(
+        "As held in Maneka Gandhi v. Union of India, AIR 1978 SC 597, the procedure must be fair.",
+        "The question is whether the impugned order violates the principles of natural justice.",
+        "We hold that the order fails. The appeal is allowed."),
+      "cB" -> Seq(
+        "Following the ratio in air  1978\tsc 597, fairness governs.",
+        "We hold that the order fails. The appeal is allowed."),
+      "cC" -> Seq(
+        "As held in Maneka Gandhi v. Union of India, (1978) 1 SCC 248, fairness is required.",
+        "We hold that the order fails. The appeal is allowed."),
+      "cD" -> Seq(
+        "The court relied on   Air 1978 Sc 597   and on Kesavananda Bharati v. State of Kerala.",
+        "We hold that the order fails. The appeal is dismissed."),
+      "cE" -> Seq(
+        "In Kesavananda Bharati v. State of Kerala, AIR 1973 SC 1461, the basic structure was settled.",
+        "We accordingly hold that the restriction does not satisfy the requirement of proportionality.",
+        "The appeal is allowed."),
+      "cF" -> Seq(
+        "See\tAIR 1973\t\tSC  1461 and (1978)  1  scc 248 on the same point.",
+        "We hold that the order fails. The appeal is allowed."))
+    (texts.flatMap { case (c, ts) =>
+      ts.zipWithIndex.map { case (t, i) => graft.kg.model.Turn(c, i, "user", t, null, null) }
+    } ++ TranscriptGen.conversation("cG", 12) ++ TranscriptGen.conversation("cH", 12)).toDF()
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("tagged canonical triples equal the join-fallback triples") {
+    val turns = canonicalTurns
+    val combined = KgPipeline.canonicalInputsDirect(spark, turns).toDF().persist()
+    val mentions = combined.filter(col("m").isNotNull).select("m.*")
+    val tagged = combined.filter(col("e").isNotNull).select("e.*")
+    val precedents = mentions.filter(col("nodeType") === "precedent")
+    // the inputs really carry every mention shape the rewrite must handle
+    assert(precedents.filter(col("caseName").isNotNull).count() > 0)
+    assert(precedents.filter(col("caseName").isNull).count() > 0)
+    assert(precedents.filter(col("citation").contains("\t") ||
+      col("citation").contains("  ")).count() > 0)
+    assert(precedents.select("citation").distinct().count() >
+      precedents.select(lower(col("citation"))).distinct().count())
+    assert(mentions.filter(col("nodeType") === "concept").count() > 0)
+    assert(tagged.filter(col("subjKey").isNotNull || col("objKey").isNotNull).count() > 0)
+    val viaTags = sortedRows(graft.kg.canonical.Canonicalizer
+      .canonicalTriples(spark, mentions, tagged))
+    val nodes = KgPipeline.nodesDirect(spark, turns).toDF()
+    val edges = KgPipeline.edgesDirect(spark, turns).toDF()
+    assert(!edges.columns.contains("subjKey"))
+    val viaJoins = sortedRows(graft.kg.canonical.Canonicalizer
+      .canonicalTriples(spark, nodes, edges))
+    combined.unpersist()
+    assert(viaTags.nonEmpty && viaTags.size == edges.count())
+    assert(viaTags == viaJoins)
+    // cB's bare "air  1978<TAB>sc 597" resolved to the entity named in cA
+    assert(viaTags.contains("[cB,cB/h1,follows,case:maneka gandhi v. union of india]"), viaTags)
+  }
+
+  test("mentionKey equals the Column mention keys over generated strings") {
+    import org.scalacheck.Gen
+    import spark.implicits._
+    val special = Seq(' ', ' ', '\t', '\n', '\r', '\u000B', '\f', '\u00A0', '\u2003',
+      'À', 'É', 'Ñ', 'Ö', 'Σ', 'Д', 'İ', 'ẞ', 'ǅ', 'é', 'ß')
+    val charGen = Gen.frequency(
+      5 -> Gen.alphaNumChar, 4 -> Gen.oneOf(special),
+      1 -> Gen.choose('\u0080', '\uD7FF'))
+    val strGen = Gen.frequency(
+      1 -> Gen.const(null: String), 9 -> Gen.listOf(charGen).map(_.mkString))
+    val rowGen = for {
+      nodeType <- Gen.oneOf("precedent", "precedent", "concept", "fact")
+      conceptId <- strGen
+      citationType <- Gen.frequency(1 -> Gen.const(null: String), 9 -> Gen.oneOf("air", "scc", "Scr"))
+      citation <- strGen
+    } yield (nodeType, conceptId, citationType, citation)
+    val rows = Gen.listOfN(3000, rowGen)
+      .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(20261017L))
+      .zipWithIndex.map { case ((t, c, ct, cit), i) => (s"conv${i % 7}", s"n$i", t, c, ct, cit) }
+    val mustCover = Set('\t', '\n', '\u00A0', 'İ', 'Σ')
+    assert(mustCover.forall(ch => rows.exists(r => r._6 != null && r._6.contains(ch))))
+    assert(rows.exists(_._6 == null) && rows.exists(_._4 == null))
+    val nodes = rows.toDF("convId", "id", "nodeType", "conceptId", "citationType", "citation")
+      .withColumn("caseName", lit(null).cast("string"))
+    val columnKeys =
+      (graft.kg.canonical.Canonicalizer.precedentKeys(nodes).select(col("id"), col("cit_key")).collect() ++
+        graft.kg.canonical.Canonicalizer.canonicalConcepts(nodes).select("id", "canonical_id").collect())
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+    val mismatches = rows.filter { case (_, id, t, c, ct, cit) =>
+      graft.kg.canonical.Canonicalizer.mentionKey(t, c, ct, cit) != columnKeys.getOrElse(id, null)
+    }
+    assert(mismatches.isEmpty, mismatches.take(5).map(r =>
+      r.toString + " jvm=" + graft.kg.canonical.Canonicalizer.mentionKey(r._3, r._4, r._5, r._6) +
+        " col=" + columnKeys.getOrElse(r._2, null)).mkString("\n"))
+  }
+
+  test("tagged canonical rewrite: no hash Exchange, only broadcasts, on the chain") {
+    // the bench chain: the conversation-contiguous layout (no extraction
+    // exchange), the persisted canonical inputs, then the rewrite — whose
+    // executed plan may exchange nothing but the broadcast component table
+    val path = Files.createTempDirectory("graft_tagged").toString + "/t"
+    KgPipeline.writeConversationPartitioned(transcriptsDF(40), path, nFiles = 4)
+    val combined = KgPipeline.canonicalInputsDirect(spark, spark.read.parquet(path),
+      prePartitioned = true).toDF().persist()
+    val ct = graft.kg.canonical.Canonicalizer.canonicalTriples(spark,
+      combined.filter(col("m").isNotNull).select("m.*"),
+      combined.filter(col("e").isNotNull).select("e.*"))
+    assert(ct.collect().nonEmpty)
+    val plan = ct.queryExecution.executedPlan.toString
+    combined.unpersist()
+    assert(!plan.contains("Exchange hashpartitioning"), plan.take(4000))
+    val exchanges = plan.linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(exchanges.nonEmpty && exchanges.forall(_.contains("BroadcastExchange")),
+      plan.take(4000))
+  }
+
   test("quality scores are in [1,10] and edge validity is 1.0 post-repair") {
     val df = transcriptsDF(25)
     val nodes = KgPipeline.nodesDirect(spark, df).toDF()
