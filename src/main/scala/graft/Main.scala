@@ -1,12 +1,20 @@
 package graft
 
 import graft.kg.canonical.Canonicalizer
+import graft.kg.gen.TranscriptGen
 import graft.kg.pipeline.KgPipeline
+import graft.kg.streaming.TranscriptStream
 import graft.kg.table.Materializer
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types._
 
-/** spark-submit entry point for the production pipeline.
+/** The one runnable entry point of the engine, besides the frozen
+  * correctness/throughput harness `graft.Bench`/`graft.Verify` and the
+  * fixture generator `graft.kg.GoldenGen`.
   *
   * {{{
   * spark-submit --class graft.Main <jar> materialize \
@@ -14,70 +22,219 @@ import org.apache.spark.sql.functions.col
   *   [--buckets 512] [--jurisdiction in]
   * spark-submit --class graft.Main <jar> canonical-triples \
   *   --input <transcripts path> --output <parquet out>
+  * spark-submit --class graft.Main <jar> stream \
+  *   --input <transcripts dir> --output <parquet sink> --checkpoint <dir> \
+  *   [--gap-minutes 30] [--jurisdiction in] [--once true]
+  * sbt "runMain graft.Main demo --convs 50 --turns 14"
+  * sbt "runMain graft.Main plans --output <dir> --suffix <s> --names a,b [--sf <dir>]"
   * }}}
   *
-  * On a cluster no master/memory settings are forced here — they come from
-  * spark-submit. `materialize` is resumable: re-running after a failure
-  * recomputes only buckets missing from the snapshot log.
+  * Under spark-submit the master and memory come from spark-submit; run
+  * anywhere else, the session is `local[SPARK_GRAFT_CPUS]` (default 8).
+  * `materialize` is resumable: re-running after a failure recomputes only
+  * buckets missing from the snapshot log. `stream` resumes exactly-once
+  * from its checkpoint; `--once true` stops when it has caught up.
   */
 object Main {
 
+  private val usage =
+    """usage: graft.Main <command> [--option value ...]
+      |  materialize        --input <path> --output <path> [--buckets 512] [--jurisdiction in|echr|tr]
+      |  canonical-triples  --input <path> --output <path> [--jurisdiction in|echr|tr]
+      |  entity-stats       --input <path> --output <path> [--jurisdiction in|echr|tr]
+      |  stream             --input <dir> --output <dir> --checkpoint <dir>
+      |                     [--gap-minutes 30] [--jurisdiction in] [--once true]
+      |  demo               [--convs 50] [--turns 14]
+      |  plans              --output <dir> --suffix <s> --names a,b,... [--sf <dir>]""".stripMargin
+
+  private val commands = Set(
+    "materialize", "canonical-triples", "entity-stats", "stream", "demo", "plans")
+
   private def parseArgs(args: Array[String]): (String, Map[String, String]) = {
-    require(args.nonEmpty, usage)
-    val cmd = args.head
+    require(args.nonEmpty && commands(args.head), usage)
     val opts = args.tail.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
     }.toMap
-    (cmd, opts)
+    (args.head, opts)
   }
-
-  private val usage =
-    """usage: graft.Main <materialize|canonical-triples|entity-stats> --input <path> --output <path>
-      |       [--buckets N] [--jurisdiction in|echr|tr]""".stripMargin
 
   def main(args: Array[String]): Unit = {
     val (cmd, opts) = parseArgs(args)
-    val input = opts.getOrElse("input", sys.error(usage))
-    val output = opts.getOrElse("output", sys.error(usage))
-    val jurisdiction = opts.getOrElse("jurisdiction", "in")
-    val buckets = opts.getOrElse("buckets", "512").toInt
+    val spark = session(cmd)
+    try run(spark, cmd, opts) finally spark.stop()
+  }
 
+  /** The session factory: AQE, skew join and UTC everywhere. The master is
+    * spark-submit's when it set one, else `local[SPARK_GRAFT_CPUS]` with
+    * cores × 4 shuffle partitions and no UI. */
+  private def session(cmd: String): SparkSession = {
     val builder = SparkSession.builder().appName(s"graft-$cmd")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-    // local fallback for running outside spark-submit
-    val spark = (if (sys.env.contains("SPARK_GRAFT_LOCAL"))
-      builder.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-    else builder).getOrCreate()
+    val spark = (if (new SparkConf().contains("spark.master")) builder else {
+      val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+      builder.master(s"local[$cores]")
+        .config("spark.sql.shuffle.partitions", (cores * 4).toString)
+        .config("spark.ui.enabled", "false")
+    }).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
-    try {
-      val transcripts = spark.read.parquet(input)
-      cmd match {
-        case "materialize" =>
-          val report = Materializer.run(spark, transcripts, output, buckets, jurisdiction)
-          println(s"snapshot=${report.snapshotId} committed=${report.bucketsCommitted.size} " +
-            s"skipped=${report.bucketsSkipped.size} rows=${report.rows.toList.sortBy(_._1)}")
-        case "canonical-triples" =>
-          // one extraction pass, persisted once; its tagged edge rows take
-          // the broadcast-probe rewrite
-          val combined = KgPipeline.canonicalInputsDirect(spark, transcripts, jurisdiction).toDF()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          Canonicalizer.canonicalTriples(spark,
-            combined.filter(col("m").isNotNull).select("m.*"),
-            combined.filter(col("e").isNotNull).select("e.*"))
-            .write.mode("overwrite").parquet(output)
-          combined.unpersist()
-          println(s"canonical triples written to $output: " +
-            spark.read.parquet(output).count())
-        case "entity-stats" =>
-          val nodes = KgPipeline.nodesDirect(spark, transcripts, jurisdiction).toDF()
-          Canonicalizer.entityStats(spark, nodes)
-            .write.mode("overwrite").parquet(output)
-          println(s"entity stats written to $output")
-        case other => sys.error(s"unknown command: $other\n$usage")
+  /** Run one command on `spark`; each command checks its own options. */
+  def run(spark: SparkSession, cmd: String, opts: Map[String, String]): Unit = {
+    def need(key: String): String =
+      opts.getOrElse(key, sys.error(s"$cmd: missing --$key\n$usage"))
+    val jurisdiction = opts.getOrElse("jurisdiction", "in")
+    cmd match {
+      case "materialize" =>
+        val report = Materializer.run(spark, spark.read.parquet(need("input")), need("output"),
+          opts.getOrElse("buckets", "512").toInt, jurisdiction)
+        println(s"snapshot=${report.snapshotId} committed=${report.bucketsCommitted.size} " +
+          s"skipped=${report.bucketsSkipped.size} rows=${report.rows.toList.sortBy(_._1)}")
+      case "canonical-triples" =>
+        val (input, output) = (need("input"), need("output"))
+        // one extraction pass, persisted once; its tagged edge rows take
+        // the broadcast-probe rewrite
+        val combined = KgPipeline.canonicalInputsDirect(spark, spark.read.parquet(input),
+          jurisdiction).toDF().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Canonicalizer.canonicalTriples(spark,
+          combined.filter(col("m").isNotNull).select("m.*"),
+          combined.filter(col("e").isNotNull).select("e.*"))
+          .write.mode("overwrite").parquet(output)
+        combined.unpersist()
+        println(s"canonical triples written to $output: " +
+          spark.read.parquet(output).count())
+      case "entity-stats" =>
+        val (input, output) = (need("input"), need("output"))
+        val nodes = KgPipeline.nodesDirect(spark, spark.read.parquet(input), jurisdiction).toDF()
+        Canonicalizer.entityStats(spark, nodes)
+          .write.mode("overwrite").parquet(output)
+        println(s"entity stats written to $output")
+      case "stream" =>
+        stream(spark, need("input"), need("output"), need("checkpoint"),
+          opts.getOrElse("gap-minutes", "30").toInt, jurisdiction,
+          opts.get("once").contains("true"))
+      case "demo" =>
+        demo(spark, opts.getOrElse("convs", "50").toInt, opts.getOrElse("turns", "14").toInt)
+      case "plans" =>
+        val names = need("names").split(",").toSeq
+        val sf = if (names.forall(_ == "canonical_chain")) "" else need("sf")
+        plans(spark, need("output"), need("suffix"), names, sf)
+      case other => sys.error(s"unknown command: $other\n$usage")
+    }
+  }
+
+  private val TranscriptSchema: StructType = StructType(Seq(
+    StructField("conv_id", StringType), StructField("turn_idx", IntegerType),
+    StructField("role", StringType), StructField("text", StringType),
+    StructField("tool", StringType), StructField("ts", TimestampType)))
+
+  /** Deployable streaming job: watch a directory for new transcript parquet
+    * files, extract each conversation once its turn stream goes quiet, append
+    * triples to a parquet sink. The checkpoint location makes the query
+    * resume exactly-once across restarts (the streaming counterpart of the
+    * batch snapshot log). `once` uses Trigger.AvailableNow and returns when
+    * caught up. */
+  private def stream(spark: SparkSession, in: String, out: String, ckpt: String,
+      gapMinutes: Int, jurisdiction: String, once: Boolean): Unit = {
+    val turns = spark.readStream.schema(TranscriptSchema).parquet(in)
+    val triples = TranscriptStream.triples(spark, turns, jurisdiction, gapMinutes)
+
+    val writer = triples.writeStream
+      .format("parquet")
+      .option("path", out)
+      .option("checkpointLocation", ckpt)
+      .outputMode("append")
+    val q = (if (once) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    q.awaitTermination()
+  }
+
+  /** End-to-end smoke drive: synthesize a transcripts table, run the full
+    * extraction pipeline, print table counts + samples. */
+  private def demo(spark: SparkSession, nConvs: Int, turnsPerConv: Int): Unit = {
+    import spark.implicits._
+
+    val dir = java.nio.file.Files.createTempDirectory("graft_demo").toString
+    TranscriptGen.turns(nConvs, turnsPerConv).toDF()
+      .repartition(8).write.mode("overwrite").parquet(s"$dir/transcripts")
+    val transcripts = spark.read.parquet(s"$dir/transcripts")
+    println(s"transcripts: ${transcripts.count()} turns, $nConvs convs → $dir")
+
+    val g = KgPipeline.graphs(spark, transcripts).cache()
+    val nodes = KgPipeline.nodes(g)
+    val edges = KgPipeline.edges(g)
+    val triples = KgPipeline.triples(edges)
+    println(s"nodes: ${nodes.count()}  edges: ${edges.count()}  triples: ${triples.count()}")
+    println(s"justificationSets: ${KgPipeline.justificationSets(g).count()}  chains: ${KgPipeline.chains(g).count()}")
+
+    println("--- tier histogram ---")
+    KgPipeline.tierHistogram(KgPipeline.summaries(g)).show(10, truncate = false)
+    println("--- sample triples ---")
+    triples.orderBy("conv_id", "subj", "pred", "obj").show(15, truncate = false)
+    println("--- orphans ---")
+    KgPipeline.orphans(nodes, edges).groupBy("nodeType").count().show(10, truncate = false)
+    println("--- per-type node counts ---")
+    nodes.groupBy("nodeType").count().orderBy("nodeType").show(10, truncate = false)
+
+    triples.write.mode("overwrite").parquet(s"$dir/triples")
+    println(s"triples parquet written: ${spark.read.parquet(s"$dir/triples").count()} rows")
+  }
+
+  /** Dump `.explain("formatted")` for named SparkEntry queries (plus the
+    * tfidf index build and the raw streaming operators) to
+    * `<outDir>/<name>_<suffix>.txt`: the before/after plan evidence of a
+    * change that alters a plan. `dir` is the generated-table directory the
+    * queries read.
+    *
+    * `canonical_chain` is the bench chain on generated transcripts in the
+    * conversation-contiguous layout: `canonicalInputsDirect` (persisted) →
+    * `Canonicalizer.canonicalTriples`, executed so the dump shows the final
+    * adaptive plan. */
+  private def plans(spark: SparkSession, outDir: String, suffix: String,
+      names: Seq[String], dir: String): Unit = {
+    new java.io.File(outDir).mkdirs()
+
+    def dump(name: String, text: => String): Unit =
+      try {
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), text)
+        println(s"[plans] wrote $name")
+      } catch {
+        case e: Throwable => println(s"[plans] $name FAILED: ${e.getMessage}")
       }
-    } finally spark.stop()
+
+    for (n <- names) n match {
+      case "tfidf_index_build" =>
+        val docs = spark.read.parquet(s"$dir/documents.parquet")
+          .select(col("doc_id").as("conv_id"), col("text").as("doc_text"))
+        val idx = graft.kg.query.Retrieval.buildTfidfIndex(spark, docs)
+        dump(n, idx.docVectors.queryExecution.explainString(ExplainMode.fromString("formatted")))
+      case "q92_stream_plan" =>
+        val schema = spark.read.parquet(s"$dir/events.parquet").schema
+        val src = spark.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(dir)
+          .withColumn("ts", col("ts").cast("timestamp"))
+        val rolled = TranscriptStream.eventRollup(src)
+        dump(n, rolled.queryExecution.explainString(ExplainMode.fromString("formatted")))
+      case "canonical_chain" =>
+        import spark.implicits._
+        val path = java.nio.file.Files.createTempDirectory("plandump_chain").toString + "/t"
+        KgPipeline.writeConversationPartitioned(TranscriptGen.turns(200, 40).toDF(), path,
+          nFiles = spark.sparkContext.defaultParallelism * 4)
+        val combined = KgPipeline.canonicalInputsDirect(spark,
+          KgPipeline.readConversationPartitioned(spark, path),
+          prePartitioned = true).toDF().persist()
+        val ct = Canonicalizer.canonicalTriples(spark,
+          combined.filter(col("m").isNotNull).select("m.*"),
+          combined.filter(col("e").isNotNull).select("e.*"))
+        ct.collect()
+        dump(n, ct.queryExecution.explainString(ExplainMode.fromString("formatted")))
+        combined.unpersist()
+      case _ =>
+        val df = SparkEntry.queries(n)(spark, dir)
+        dump(n, df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+    }
   }
 }

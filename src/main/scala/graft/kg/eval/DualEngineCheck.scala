@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cannot re-derive, so those CORRECTNESS rows are `no_oracle`. This check
   * recomputes the same projections with a SECOND engine: the pure-JVM
   * single-thread extractor loop (TranscriptGen.conversation →
-  * DocExtractor.extract directly — the ScalingProbe path, no Spark
+  * DocExtractor.extract directly — no Spark
   * partitioning/shuffle/grouping/encoders anywhere), and asserts
   * multiset-equality against the Spark pipeline output. Agreement pins the
   * entire distributed plumbing — conv_id repartition, (turn_idx, text)

@@ -28,12 +28,6 @@ import org.apache.spark.sql.functions._
   * generated deserializer code must be able to instantiate it.) */
 final case class SlimTurn(conv_id: String, turn_idx: Int, text: String)
 
-/** Tagged union emitted by [[KgPipeline.nodesAndEdgesDirect]]: one extraction
-  * pass yields BOTH projections, so a caller that needs nodes and edges
-  * persists this dataset once instead of extracting twice. (Top-level +
-  * public for the Spark encoder.) */
-final case class NodeOrEdge(node: Option[Node], edge: Option[EdgeRow])
-
 /** Column-pruned mention row for cross-conversation canonicalization: only
   * concept/precedent nodes, only the key-material columns
   * ([[graft.kg.canonical.Canonicalizer]] reads nothing else). */
@@ -63,10 +57,10 @@ final case class MatRow(
 
 /** Tagged union emitted by [[KgPipeline.canonicalInputsDirect]]: the
   * extraction-boundary projection of exactly what canonicalization consumes.
-  * The full [[NodeOrEdge]] union persists every node field (text, anchors,
-  * provenance — ~10× the bytes); when the downstream is canonical triples
-  * only, pruning at the extraction boundary is the same column-pruning
-  * Catalyst would apply to a relational scan. */
+  * Full [[Node]] rows carry every node field (text, anchors, provenance —
+  * ~10× the bytes); when the downstream is canonical triples only, pruning
+  * at the extraction boundary is the same column-pruning Catalyst would
+  * apply to a relational scan. */
 final case class CanonInputRow(m: Option[MentionKeyRow], e: Option[TripleEdgeRow])
 
 object KgPipeline {
@@ -78,8 +72,7 @@ object KgPipeline {
     * numPartitions repartition is exempt from AQE coalescing and satisfies
     * groupByKey's clustered distribution, so no second exchange is added. */
   private def extractionPartitions(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.extract.partitions").map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism * 4)
+    spark.sparkContext.defaultParallelism * 4
 
   /** One exchange total: explicit hash repartition on conv_id (AQE-exempt)
     * + sortWithinPartitions, then consecutive-run grouping in mapPartitions.
@@ -249,28 +242,13 @@ object KgPipeline {
     flatExtract(spark, transcripts, jurisdiction, prePartitioned = prePartitioned)(_.nodes)
   }
 
-  /** Extraction → nodes AND edges in ONE pass, as a tagged union. Persist
-    * the result and project with `flatMap(_.node)` / `flatMap(_.edge)`:
-    * extraction (the expensive stage) runs once, not once per projection. */
-  def nodesAndEdgesDirect(
-      spark: SparkSession,
-      transcripts: DataFrame,
-      jurisdiction: String = "in",
-      prePartitioned: Boolean = false): Dataset[NodeOrEdge] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[NodeOrEdge]
-    flatExtract(spark, transcripts, jurisdiction, prePartitioned = prePartitioned) { g =>
-      g.nodes.iterator.map(n => NodeOrEdge(Some(n), None)) ++
-        g.edges.iterator.map(e => NodeOrEdge(None, Some(e)))
-    }
-  }
-
   /** Extraction → canonicalization inputs in ONE pass, pruned at the
     * boundary: mention-key rows for concept/precedent nodes + slim edge
     * rows whose endpoints carry their mention keys (looked up in the
     * conversation's own nodes, so tagging costs no join). Persist the
     * result and project with `filter(m.isNotNull)` / `filter(e.isNotNull)`
-    * — the canonical-triple chain then caches ~10× fewer bytes than the
-    * full [[NodeOrEdge]] union, and its rewrite is a broadcast probe. */
+    * — the canonical-triple chain then caches ~10× fewer bytes than full
+    * node and edge rows, and its rewrite is a broadcast probe. */
   def canonicalInputsDirect(
       spark: SparkSession,
       transcripts: DataFrame,

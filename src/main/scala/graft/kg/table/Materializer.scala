@@ -47,8 +47,7 @@ object Materializer {
       nBuckets: Int = 32,
       jurisdiction: String = "in",
       ontology: OntologyData = null,
-      prePartitioned: Boolean = false,
-      integrityCheck: Boolean = true): Report = {
+      prePartitioned: Boolean = false): Report = {
 
     val store = new SnapshotStore(root)
     val done = store.completedBuckets
@@ -126,7 +125,7 @@ object Materializer {
     // grouping would emit two half-graphs for one conv_id — one graph per
     // conversation is the invariant. Cheap: one conv_id-only distinct over
     // the input vs the already-written summaries count.
-    if (prePartitioned && integrityCheck) {
+    if (prePartitioned) {
       val nConvs = pending.select(col("conv_id")).distinct().count()
       val nGraphs = rowCounts("summaries")
       require(nGraphs == nConvs,

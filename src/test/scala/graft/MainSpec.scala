@@ -1,0 +1,62 @@
+package graft
+
+import graft.kg.gen.TranscriptGen
+import graft.kg.model.Triple
+import graft.kg.pipeline.KgPipeline
+import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[2]")
+    .appName("graft-main-test")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    .getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
+
+  test("stream --once: the sink holds the batch triples of every closed conversation") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_main_stream").toString
+    // 10 conversations, plus one heartbeat conversation a day later whose
+    // turns move the watermark past every other conversation's session gap
+    val closed = TranscriptGen.turns(10, 10)
+    val heartbeat = TranscriptGen.conversation("conv_zzzzzz", 4).map(t =>
+      t.copy(ts = new java.sql.Timestamp(t.ts.getTime + 86400000L)))
+    (closed ++ heartbeat).toDF().write.parquet(s"$dir/in")
+
+    Main.run(spark, "stream", Map("input" -> s"$dir/in", "output" -> s"$dir/out",
+      "checkpoint" -> s"$dir/ckpt", "once" -> "true"))
+
+    val streamed = spark.read.parquet(s"$dir/out").as[Triple].collect().toSeq
+    val batch = KgPipeline.triplesDirect(spark, closed.toDF()).collect().toSeq
+    assert(batch.map(_.convId).distinct.size == 10)
+    def sorted(ts: Seq[Triple]) = ts.sortBy(t => (t.convId, t.subj, t.pred, t.obj))
+    assert(sorted(streamed) == sorted(batch))
+  }
+
+  test("graft.Main, Bench, Verify and GoldenGen are the only mains in src/main/scala") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root: $root missing")
+    val ObjectDecl = """(?m)^\s*(?:private(?:\[\w+\])?\s+)?object\s+(\w+)""".r
+    val Pkg = """(?m)^package\s+([\w.]+)""".r
+    val mains = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { (p: Path) =>
+        val src = Files.readString(p)
+        val pkg = Pkg.findFirstMatchIn(src).map(_.group(1) + ".").getOrElse("")
+        val objects = ObjectDecl.findAllMatchIn(src).map(m => m.start -> m.group(1)).toSeq
+        """def main\s*\(""".r.findAllMatchIn(src).map { m =>
+          pkg + objects.filter(_._1 < m.start).lastOption.map(_._2).getOrElse(p.toString)
+        }
+      }.toSet
+    assert(mains == Set("graft.Main", "graft.Bench", "graft.Verify", "graft.kg.GoldenGen"))
+  }
+}
