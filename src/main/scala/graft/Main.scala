@@ -162,15 +162,15 @@ object Main {
     val transcripts = spark.read.parquet(s"$dir/transcripts")
     println(s"transcripts: ${transcripts.count()} turns, $nConvs convs → $dir")
 
-    val g = KgPipeline.graphs(spark, transcripts).cache()
-    val nodes = KgPipeline.nodes(g)
-    val edges = KgPipeline.edges(g)
+    val g = KgPipeline.allTablesDirect(spark, transcripts).toDF().cache()
+    val nodes = KgPipeline.branch(g, "node")
+    val edges = KgPipeline.branch(g, "edge")
     val triples = KgPipeline.triples(edges)
     println(s"nodes: ${nodes.count()}  edges: ${edges.count()}  triples: ${triples.count()}")
-    println(s"justificationSets: ${KgPipeline.justificationSets(g).count()}  chains: ${KgPipeline.chains(g).count()}")
+    println(s"justificationSets: ${KgPipeline.branch(g, "js").count()}  chains: ${KgPipeline.branch(g, "chain").count()}")
 
     println("--- tier histogram ---")
-    KgPipeline.tierHistogram(KgPipeline.summaries(g)).show(10, truncate = false)
+    KgPipeline.tierHistogram(KgPipeline.branch(g, "summary")).show(10, truncate = false)
     println("--- sample triples ---")
     triples.orderBy("conv_id", "subj", "pred", "obj").show(15, truncate = false)
     println("--- orphans ---")

@@ -55,45 +55,31 @@ object SparkEntry {
     TranscriptGen.turns(nConvs, 14).toDF()
   }
 
-  /** Extraction memo, keyed per (live session, sf dir): the 12 kg_* queries
-    * all consume the same extracted corpus, and the reference's own design
-    * materializes once and queries many (run_iltur.py checkpoint → eval
-    * scripts read the files). Re-running the extraction per query would pay
-    * ~12 redundant extraction jobs in a Verify/Bench sweep, so the ConvGraph
-    * dataset is extracted ONCE per (session, dir) and persisted; every kg_*
-    * query is a projection of the cached corpus. Keyed on the session OBJECT
-    * (IdentityHashMap — identityHashCode alone can collide across sessions),
-    * with stopped sessions evicted on every lookup so a long-lived Bench JVM
-    * that cycles many sessions neither reuses stale persisted plans nor
-    * accumulates dead entries. */
-  private val kgMemo =
-    new java.util.IdentityHashMap[SparkSession, scala.collection.mutable.Map[String, (org.apache.spark.sql.Dataset[graft.kg.model.ConvGraph], DataFrame)]]()
-
-  private def kgMemoEntry(s: SparkSession, dir: String): (org.apache.spark.sql.Dataset[graft.kg.model.ConvGraph], DataFrame) =
-    kgMemo.synchronized {
-      val it = kgMemo.entrySet().iterator()
-      while (it.hasNext) if (it.next().getKey.sparkContext.isStopped) it.remove()
-      var m = kgMemo.get(s)
-      if (m == null) { m = scala.collection.mutable.Map.empty; kgMemo.put(s, m) }
-      m.getOrElseUpdate(dir, {
-        val g = KgPipeline.graphs(s, transcripts(s, dir))
+  /** Extraction memo, owned by the session: the 12 kg_* queries all consume
+    * the same extracted corpus, and the reference's own design materializes
+    * once and queries many (run_iltur.py checkpoint → eval scripts read the
+    * files). The corpus is extracted ONCE per (session, dir) into the
+    * columnar [[graft.kg.pipeline.MatRow]] union (the lossless encoding of
+    * the graphs), persisted, and registered as a temp view of that session
+    * named by the hex of `dir`'s UTF-8 bytes (injective, so two dirs never
+    * share a view). Every kg_* query is a projection of the view. The view
+    * belongs to the session: a new session sees none, and no JVM-global
+    * registry keeps a stopped session's cache. Check-and-create holds the
+    * session's lock, so concurrent queries on one session extract once. */
+  private def kgGraphs(s: SparkSession, dir: String): DataFrame = {
+    val view = "graft_kg_" +
+      dir.getBytes(java.nio.charset.StandardCharsets.UTF_8).map(b => f"$b%02x").mkString
+    s.synchronized {
+      if (!s.catalog.tableExists(view))
+        KgPipeline.allTablesDirect(s, transcripts(s, dir)).toDF()
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // columnar tagged-union projection of the SAME cached corpus: every
-        // relational kg_* query reads only its branch's struct column from
-        // this cache instead of paying a full ConvGraph object decode per
-        // projection per rep (kg_json_export alone still consumes the graph
-        // objects). Queries remain projections of the extract-once memo.
-        val u = KgPipeline.allTables(g).toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (g, u)
-      })
+          .createTempView(view)
     }
-
-  private def kgGraphs(s: SparkSession, dir: String): org.apache.spark.sql.Dataset[graft.kg.model.ConvGraph] =
-    kgMemoEntry(s, dir)._1
+    s.table(view)
+  }
 
   private def kgBranch(s: SparkSession, dir: String, branch: String): DataFrame =
-    kgMemoEntry(s, dir)._2.filter(col(branch).isNotNull).select(col(branch + ".*"))
+    KgPipeline.branch(kgGraphs(s, dir), branch)
 
   private def kgNodes(s: SparkSession, dir: String): DataFrame =
     kgBranch(s, dir, "node")
@@ -103,7 +89,7 @@ object SparkEntry {
   /** Flagship query on sf=0.001: full extract → triples. */
   def entry(spark: SparkSession): DataFrame = {
     val g = kgGraphs(spark, "/root/testdata/sf0.001")
-    KgPipeline.triples(KgPipeline.edges(g))
+    KgPipeline.triples(KgPipeline.branch(g, "edge"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -2438,10 +2424,7 @@ object SparkEntry {
     }),
     // no oracle: input is the generated transcripts table, not sf-dir parquet
     "kg_triples" -> ((s, dir) => {
-      // same projection as KgPipeline.triples, over the columnar edge branch
-      kgEdges(s, dir).select(
-        col("convId").as("conv_id"), col("source").as("subj"),
-        col("relation").as("pred"), col("target").as("obj"))
+      KgPipeline.triples(kgEdges(s, dir))
         .orderBy(col("conv_id"), col("subj"), col("pred"), col("obj"))
     }),
     // no oracle: input is the generated transcripts table, not sf-dir parquet
@@ -2458,9 +2441,7 @@ object SparkEntry {
     }),
     // no oracle: input is the generated transcripts table, not sf-dir parquet
     "kg_tier_histogram" -> ((s, dir) => {
-      // same shape as KgPipeline.tierHistogram, over the summary branch
-      kgBranch(s, dir, "summary")
-        .groupBy(col("qualityTier")).count().orderBy(col("qualityTier"))
+      KgPipeline.tierHistogram(kgBranch(s, dir, "summary"))
     }),
     // --- cross-conversation canonicalization (union-find over candidate
     //     name↔citation match edges; C1 lifted to corpus scale) ---

@@ -73,15 +73,15 @@ object DualEngineCheck {
     * full distributed path (conv_id exchange + sort + grouping). */
   def spark(spark: SparkSession, nConvs: Int, turnsPerConv: Int): Side = {
     import spark.implicits._
-    val g = KgPipeline.graphs(spark, TranscriptGen.turns(nConvs, turnsPerConv).toDF())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val g = KgPipeline.allTablesDirect(spark, TranscriptGen.turns(nConvs, turnsPerConv).toDF())
+      .toDF().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (nodes, edges) = (KgPipeline.branch(g, "node"), KgPipeline.branch(g, "edge"))
     try fromSpark(
-      KgPipeline.triples(KgPipeline.edges(g)),
-      KgPipeline.nodes(g).toDF().groupBy("nodeType").count(),
-      KgPipeline.edges(g).toDF().groupBy("relation").count(),
-      KgPipeline.tierHistogram(KgPipeline.summaries(g)),
-      KgPipeline.orphans(KgPipeline.nodes(g), KgPipeline.edges(g))
-        .groupBy("nodeType").count())
+      KgPipeline.triples(edges),
+      nodes.groupBy("nodeType").count(),
+      edges.groupBy("relation").count(),
+      KgPipeline.tierHistogram(KgPipeline.branch(g, "summary")),
+      KgPipeline.orphans(nodes, edges).groupBy("nodeType").count())
     finally g.unpersist()
   }
 

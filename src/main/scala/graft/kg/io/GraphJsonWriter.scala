@@ -3,7 +3,7 @@ package graft.kg.io
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import graft.kg.model.{Anchor, ChainRow, EdgeRow, JustificationSetRow, Node, Provenance}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Writer for the reference's published per-case graph JSON format — the
   * inverse of RefGraphJson. Emits the schema-v2.1 layout (typed node lists,
@@ -181,13 +181,12 @@ object GraphJsonWriter {
     mapper.writeValueAsString(root)
   }
 
-  /** Distributed corpus export: one (case_id, json) row per conversation —
-    * extraction runs per group, serialization inside the task, no collects. */
-  def corpus(
-      spark: SparkSession,
-      graphs: Dataset[graft.kg.model.ConvGraph]): DataFrame = {
+  /** Distributed corpus export: one (case_id, json) row per conversation of
+    * the extracted [[graft.kg.pipeline.MatRow]] union — graphs re-assembled
+    * and serialized inside the task, no shuffle, no collects. */
+  def corpus(spark: SparkSession, union: DataFrame): DataFrame = {
     import spark.implicits._
-    graphs.map { g =>
+    graft.kg.pipeline.KgPipeline.graphsOf(union).map { g =>
       (g.summary.convId, toJson(g.summary.convId, g.nodes, g.edges,
         g.justificationSets, g.chains, g.summary.qualityTier, g.warnings))
     }.toDF("case_id", "json")

@@ -44,16 +44,20 @@ final case class TripleEdgeRow(
     convId: String, source: String, relation: String, target: String,
     subjKey: String, objKey: String)
 
-/** Tagged union of EVERY materialized table's row type, emitted by
-  * [[KgPipeline.allTablesDirect]] in one extraction pass. Persisted as a
-  * DataFrame (columnar cache), each table projection reads ONLY its own
-  * struct column — unlike a cached Dataset[ConvGraph], whose every
-  * projection pays a full object-decode of the nested graph per row.
+/** The columnar encoding of [[ConvGraph]], and the one full-extraction
+  * representation: a tagged union with one branch per graph field, emitted
+  * by [[KgPipeline.allTablesDirect]] in one extraction pass. Each
+  * conversation's rows are contiguous, in the order nodes, edges, js,
+  * chains, members, requirements, warnings, and its summary row comes last,
+  * so the union is lossless ([[KgPipeline.graphsOf]] re-assembles the
+  * graphs). Persisted as a DataFrame, each table projection
+  * ([[KgPipeline.branch]]) reads only its own struct column.
   * (Top-level + public for the Spark encoder.) */
 final case class MatRow(
     node: Option[Node], edge: Option[EdgeRow], js: Option[JustificationSetRow],
     chain: Option[ChainRow], member: Option[ClusterMemberRow],
-    requirement: Option[RequirementRow], summary: Option[ConvSummary])
+    requirement: Option[RequirementRow], warning: Option[String],
+    summary: Option[ConvSummary])
 
 /** Tagged union emitted by [[KgPipeline.canonicalInputsDirect]]: the
   * extraction-boundary projection of exactly what canonicalization consumes.
@@ -177,33 +181,18 @@ object KgPipeline {
       .as[SlimTurn]
   }
 
-  /** Run extraction: transcripts (conv_id, turn_idx, ..., text) → ConvGraph. */
-  def graphs(
-      spark: SparkSession,
-      transcripts: DataFrame,
-      jurisdiction: String = "in",
-      ontology: OntologyData = null,
-      prePartitioned: Boolean = false): Dataset[ConvGraph] = {
-    import spark.implicits._
-    val ont = Option(ontology).getOrElse(Ontology.forJurisdiction(jurisdiction))
-    val slim =
-      if (prePartitioned) slimTurnsPrePartitioned(spark, transcripts)
-      else slimTurns(spark, transcripts)
-    slim.mapPartitions(it => perConversation(it, ont, jurisdiction)(Iterator.single(_)))
-  }
-
-  /** Fast path: run extraction and emit projected rows DIRECTLY from
-    * `flatMapGroups`, skipping the heavyweight ConvGraph encoder round-trip
-    * (serialize deep nested graph → deserialize → re-serialize projection).
-    * This is the production shape for single-table outputs: one shuffle, one
-    * small-row encoder. */
+  /** Run extraction and emit projected rows DIRECTLY from the
+    * per-conversation task, skipping the heavyweight ConvGraph encoder
+    * round-trip (serialize deep nested graph → deserialize → re-serialize
+    * projection): one shuffle (none when `prePartitioned`), one small-row
+    * encoder. The ontology is the jurisdiction's. */
   def flatExtract[T: org.apache.spark.sql.Encoder](
       spark: SparkSession,
       transcripts: DataFrame,
       jurisdiction: String = "in",
-      ontology: OntologyData = Ontology.default,
       prePartitioned: Boolean = false)(
       f: ConvGraph => IterableOnce[T]): Dataset[T] = {
+    val ontology = Ontology.forJurisdiction(jurisdiction)
     val slim =
       if (prePartitioned) slimTurnsPrePartitioned(spark, transcripts)
       else slimTurns(spark, transcripts)
@@ -268,92 +257,80 @@ object KgPipeline {
     }
   }
 
-  /** Extraction → ALL 7 table projections in ONE pass, as a tagged union
-    * (one branch per output table; triples derive from the edge branch).
-    * Persist `.toDF()` and project each table with
-    * `filter(col(branch).isNotNull).select(col("branch.*"))`: extraction
-    * runs once, and every projection is a column-pruned scan of the
-    * columnar cache instead of a full ConvGraph object decode. Emission
-    * order per conversation (nodes, edges, js, chains, members,
-    * requirements, summary) keeps each filtered branch in exactly the row
-    * order the per-table `flatMap` projections produced. */
   private def matRows(g: ConvGraph): Iterator[MatRow] = {
-    val empty = MatRow(None, None, None, None, None, None, None)
+    val empty = MatRow(None, None, None, None, None, None, None, None)
     g.nodes.iterator.map(n => empty.copy(node = Some(n))) ++
       g.edges.iterator.map(e => empty.copy(edge = Some(e))) ++
       g.justificationSets.iterator.map(j => empty.copy(js = Some(j))) ++
       g.chains.iterator.map(c => empty.copy(chain = Some(c))) ++
       g.clusterMembers.iterator.map(m => empty.copy(member = Some(m))) ++
       g.requirements.iterator.map(r => empty.copy(requirement = Some(r))) ++
+      g.warnings.iterator.map(w => empty.copy(warning = Some(w))) ++
       Iterator.single(empty.copy(summary = Some(g.summary)))
   }
 
+  /** Extraction → the [[MatRow]] union in ONE pass. Persist `.toDF()` and
+    * project each table with [[branch]]: extraction runs once, and every
+    * projection is a column-pruned scan of the columnar cache. */
   def allTablesDirect(
       spark: SparkSession,
       transcripts: DataFrame,
       jurisdiction: String = "in",
-      ontology: OntologyData = Ontology.default,
       prePartitioned: Boolean = false): Dataset[MatRow] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[MatRow]
-    flatExtract(spark, transcripts, jurisdiction, ontology, prePartitioned)(matRows)
+    flatExtract(spark, transcripts, jurisdiction, prePartitioned)(matRows)
   }
 
-  /** The same tagged union projected from an already-extracted graph
-    * dataset (one object-decode pass; projections of the persisted result
-    * are then column-pruned cache scans). */
-  def allTables(g: Dataset[ConvGraph]): Dataset[MatRow] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[MatRow]
-    g.flatMap(matRows)
-  }
+  /** One table of the union: the rows of struct branch `name` (`node`,
+    * `edge`, `js`, `chain`, `member`, `requirement` or `summary`),
+    * flattened to that table's columns, in emission order. */
+  def branch(union: DataFrame, name: String): DataFrame =
+    union.filter(col(name).isNotNull).select(col(name + ".*"))
 
-  /** Extraction → per-conversation summaries in one pass. */
-  def summariesDirect(
-      spark: SparkSession,
-      transcripts: DataFrame,
-      jurisdiction: String = "in",
-      prePartitioned: Boolean = false): Dataset[ConvSummary] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[ConvSummary]
-    flatExtract(spark, transcripts, jurisdiction, prePartitioned = prePartitioned)(
-      g => Iterator.single(g.summary))
-  }
-
-  def nodes(g: Dataset[ConvGraph]): Dataset[Node] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[Node]
-    g.flatMap(_.nodes)
-  }
-
-  def edges(g: Dataset[ConvGraph]): Dataset[EdgeRow] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[EdgeRow]
-    g.flatMap(_.edges)
-  }
-
-  def justificationSets(g: Dataset[ConvGraph]): Dataset[JustificationSetRow] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[JustificationSetRow]
-    g.flatMap(_.justificationSets)
-  }
-
-  def chains(g: Dataset[ConvGraph]): Dataset[ChainRow] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[ChainRow]
-    g.flatMap(_.chains)
-  }
-
-  def clusterMembers(g: Dataset[ConvGraph]): Dataset[ClusterMemberRow] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[ClusterMemberRow]
-    g.flatMap(_.clusterMembers)
-  }
-
-  def requirements(g: Dataset[ConvGraph]): Dataset[RequirementRow] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[RequirementRow]
-    g.flatMap(_.requirements)
-  }
-
-  def summaries(g: Dataset[ConvGraph]): Dataset[ConvSummary] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[ConvSummary]
-    g.map(_.summary)
+  /** Re-assemble the graphs from the union without a shuffle: every
+    * conversation's rows are one consecutive run inside one partition (one
+    * task emitted them), ending in its summary row, so a partition-local
+    * scan rebuilds each [[ConvGraph]] field for field and in order. Fails
+    * if a run does not end in a summary of the same conversation (the
+    * union was re-partitioned or filtered). */
+  def graphsOf(union: DataFrame): Dataset[ConvGraph] = {
+    implicit val enc = org.apache.spark.sql.Encoders.product[ConvGraph]
+    union.as[MatRow](org.apache.spark.sql.Encoders.product[MatRow]).mapPartitions { it =>
+      new Iterator[ConvGraph] {
+        def hasNext: Boolean = it.hasNext
+        def next(): ConvGraph = {
+          val nodes = Vector.newBuilder[Node]
+          val edges = Vector.newBuilder[EdgeRow]
+          val js = Vector.newBuilder[JustificationSetRow]
+          val chains = Vector.newBuilder[ChainRow]
+          val members = Vector.newBuilder[ClusterMemberRow]
+          val requirements = Vector.newBuilder[RequirementRow]
+          val warnings = Vector.newBuilder[String]
+          var convIds = Set.empty[String]
+          var summary: ConvSummary = null
+          while (summary == null) {
+            require(it.hasNext, s"union run of ${convIds.mkString(",")} has no summary row")
+            val r = it.next()
+            r.node.foreach { n => nodes += n; convIds += n.convId }
+            r.edge.foreach { e => edges += e; convIds += e.convId }
+            r.js.foreach { j => js += j; convIds += j.convId }
+            r.chain.foreach { c => chains += c; convIds += c.convId }
+            r.member.foreach { m => members += m; convIds += m.convId }
+            r.requirement.foreach { q => requirements += q; convIds += q.convId }
+            r.warning.foreach(warnings += _)
+            r.summary.foreach(s => summary = s)
+          }
+          require(convIds.forall(_ == summary.convId),
+            s"union run of ${convIds.mkString(",")} ends in the summary of ${summary.convId}")
+          ConvGraph(summary, nodes.result(), edges.result(), js.result(), chains.result(),
+            members.result(), requirements.result(), warnings.result())
+        }
+      }
+    }
   }
 
   /** The (subj, pred, obj) triple projection of the edge table. */
-  def triples(edges: Dataset[EdgeRow]): DataFrame =
+  def triples(edges: Dataset[_]): DataFrame =
     edges.toDF().select(
       col("convId").as("conv_id"),
       col("source").as("subj"),
@@ -374,6 +351,6 @@ object KgPipeline {
   }
 
   /** Quality-tier histogram (checkpoint stats analog, run_iltur.py:625-668). */
-  def tierHistogram(summaries: Dataset[ConvSummary]): DataFrame =
+  def tierHistogram(summaries: Dataset[_]): DataFrame =
     summaries.toDF().groupBy(col("qualityTier")).count().orderBy(col("qualityTier"))
 }

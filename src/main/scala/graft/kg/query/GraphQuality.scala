@@ -20,21 +20,6 @@ object GraphQuality {
   def tierFilter(tierCol: org.apache.spark.sql.Column, tiers: Set[String]): org.apache.spark.sql.Column =
     lower(coalesce(tierCol, lit(""))).isin(tiers.toSeq.map(_.toLowerCase).sorted: _*)
 
-  /** Edge validity: share of edges whose (src_type, tgt_type, relation) is in
-    * the validation matrix. The matrix is broadcast as a literal lookup set. */
-  def edgeValidity(edges: DataFrame): DataFrame = {
-    val validTriples: Seq[String] = Relations.Matrix.toSeq.flatMap {
-      case ((s, t), rels) => rels.map(r => s"$s|$t|$r")
-    }.sorted
-    val typeOf = udf((id: String) => Relations.nodeTypeFromId(id))
-    edges
-      .withColumn("sig", concat_ws("|",
-        typeOf(col("source")), typeOf(col("target")), col("relation")))
-      .withColumn("valid", col("sig").isin(validTriples: _*))
-      .groupBy(col("convId").as("conv_id"))
-      .agg((count_if(col("valid")) / count(lit(1))).as("edge_validity"))
-  }
-
   /** Composite per-conversation quality report + 1-10 score.
     *
     * One aggregation pass per input table (edges, nodes) and ONE join, instead

@@ -1,6 +1,5 @@
 package graft.kg.table
 
-import graft.kg.ontology.{Ontology, OntologyData}
 import graft.kg.pipeline.KgPipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -46,7 +45,6 @@ object Materializer {
       root: String,
       nBuckets: Int = 32,
       jurisdiction: String = "in",
-      ontology: OntologyData = null,
       prePartitioned: Boolean = false): Report = {
 
     val store = new SnapshotStore(root)
@@ -59,22 +57,18 @@ object Materializer {
     if (pendingBuckets.isEmpty)
       return Report(store.snapshots.last.id, Nil, done.toList.sorted, Map.empty)
 
-    // one extraction pass, persisted as a COLUMNAR tagged union and fanned
+    // one extraction pass, persisted as the COLUMNAR MatRow union and fanned
     // out to the 8 output tables: each table projection reads only its own
-    // struct column from the cache (column pruning), where the previous
-    // Dataset[ConvGraph] cache paid a full nested-object decode per row for
-    // every one of the 8 writes (guide §1.2 "don't compute things you throw
-    // away"). The resume filter preserves within-partition order, so the
-    // pre-partitioned (shuffle-free) layout stays conversation-contiguous
-    // and each branch keeps the exact row order of the per-table flatMaps.
+    // struct column from the cache (column pruning) instead of decoding
+    // whole graphs for every one of the 8 writes. The resume filter
+    // preserves within-partition order, so the pre-partitioned
+    // (shuffle-free) layout stays conversation-contiguous and each branch
+    // keeps the extractor's row order.
     val union: DataFrame =
-      KgPipeline.allTablesDirect(spark, pending.drop("bucket"), jurisdiction,
-        Option(ontology).getOrElse(graft.kg.ontology.Ontology.forJurisdiction(jurisdiction)),
-        prePartitioned = prePartitioned)
+      KgPipeline.allTablesDirect(spark, pending.drop("bucket"), jurisdiction, prePartitioned)
         .toDF()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def branch(name: String): DataFrame =
-      union.filter(col(name).isNotNull).select(col(name + ".*"))
+    def branch(name: String): DataFrame = KgPipeline.branch(union, name)
 
     def addBucket(df: DataFrame, convCol: String): DataFrame =
       df.withColumn("bucket", bucketOf(col(convCol), nBuckets))
@@ -134,54 +128,12 @@ object Materializer {
           s"(read the layout via KgPipeline.readConversationPartitioned)")
     }
 
-    // per-bucket lineage: extraction counts from summaries + an
-    // order-independent content hash over the triple set. Both aggregate the
-    // JUST-WRITTEN parquet (tiny columnar scans, bucket-pruned to this run's
-    // buckets) instead of re-decoding the extraction cache two more times —
-    // the same rows by construction (reconstructStats reads the same files).
-    val pendingSet = pendingBuckets
-    val lineageAgg = spark.read.parquet(s"$root/summaries")
-      .filter(col("bucket").isin(pendingSet: _*))
-      .groupBy(col("bucket")).agg(
-      count(lit(1)).as("convs"),
-      sum(col("nTurns")).as("input_rows"),
-      sum(col("nFacts")).as("facts"), sum(col("nConcepts")).as("concepts"),
-      sum(col("nIssues")).as("issues"), sum(col("nArguments")).as("arguments"),
-      sum(col("nHoldings")).as("holdings"), sum(col("nPrecedents")).as("precedents"),
-      sum(col("nEdges")).as("edges"), sum(col("nChains")).as("chains"))
-      .collect().map(r => r.getInt(0) -> r).toMap
-
-    val hashByBucket = spark.read.parquet(s"$root/triples")
-      .filter(col("bucket").isin(pendingSet: _*))
-      .withColumn("rh", xxhash64(concat_ws("|", col("convId"), col("subj"), col("pred"), col("obj"))))
-      .groupBy(col("bucket"))
-      // bit_xor: order-independent, overflow-free under ANSI mode
-      .agg(expr("bit_xor(rh)").as("h"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-
     union.unpersist()
 
-    val lineage = pendingBuckets.map { b =>
-      lineageAgg.get(b) match {
-        case Some(r) =>
-          BucketLineage(
-            bucket = b, stage = "extract",
-            inputRows = r.getAs[Long]("input_rows"),
-            outputRows = Map(
-              "convs" -> r.getAs[Long]("convs"),
-              "edges" -> r.getAs[Long]("edges")),
-            extractionCounts = Map(
-              "facts" -> r.getAs[Long]("facts"), "concepts" -> r.getAs[Long]("concepts"),
-              "issues" -> r.getAs[Long]("issues"), "arguments" -> r.getAs[Long]("arguments"),
-              "holdings" -> r.getAs[Long]("holdings"), "precedents" -> r.getAs[Long]("precedents"),
-              "chains" -> r.getAs[Long]("chains")),
-            contentHash = java.lang.Long.toHexString(hashByBucket.getOrElse(b, 0L)))
-        case None => // bucket had no conversations — still committed as done
-          BucketLineage(b, "extract", 0L, Map.empty, Map.empty, "0")
-      }
-    }
-
-    val snap = store.commit(lineage)
+    // a bucket without conversations has no rows but is still committed
+    val found = lineage(spark, root, "extract", Some(pendingBuckets))
+    val snap = store.commit(pendingBuckets.map(b =>
+      found.getOrElse(b, BucketLineage(b, "extract", 0L, Map.empty, Map.empty, "0"))))
     Report(snap.id, pendingBuckets, done.toList.sorted, rowCounts)
   }
 
@@ -194,29 +146,41 @@ object Materializer {
     * from the materialized tables themselves and commit a fresh snapshot
     * covering every bucket found on disk. Returns the new snapshot. */
   def reconstructStats(spark: SparkSession, root: String): Snapshot = {
-    val summaries = read(spark, root, "summaries")
-    val lineageAgg = summaries.groupBy(col("bucket")).agg(
+    val found = lineage(spark, root, "reconstruct", None)
+    new SnapshotStore(root).commit(found.keys.toList.sorted.map(found))
+  }
+
+  /** Per-bucket lineage of the written tables, for the buckets in `only`
+    * (all when None): extraction counts from summaries and an
+    * order-independent content hash over the triple set. Both aggregate
+    * tiny bucket-pruned columnar scans of the parquet on disk, never the
+    * extraction cache. */
+  private def lineage(spark: SparkSession, root: String, stage: String,
+      only: Option[Seq[Int]]): Map[Int, BucketLineage] = {
+    def scan(table: String): DataFrame = {
+      val df = read(spark, root, table)
+      only.fold(df)(bs => df.filter(col("bucket").isin(bs: _*)))
+    }
+    val hashByBucket = scan("triples")
+      .withColumn("rh", xxhash64(concat_ws("|",
+        col("convId"), col("subj"), col("pred"), col("obj"))))
+      // bit_xor: order-independent, overflow-free under ANSI mode
+      .groupBy(col("bucket")).agg(expr("bit_xor(rh)").as("h"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    scan("summaries").groupBy(col("bucket")).agg(
       count(lit(1)).as("convs"), sum(col("nTurns")).as("input_rows"),
       sum(col("nFacts")).as("facts"), sum(col("nConcepts")).as("concepts"),
       sum(col("nIssues")).as("issues"), sum(col("nArguments")).as("arguments"),
       sum(col("nHoldings")).as("holdings"), sum(col("nPrecedents")).as("precedents"),
       sum(col("nEdges")).as("edges"), sum(col("nChains")).as("chains"))
-      .collect().map(r => r.getInt(0) -> r).toMap
-    val hashByBucket = read(spark, root, "triples")
-      .withColumn("rh", xxhash64(concat_ws("|",
-        col("convId"), col("subj"), col("pred"), col("obj"))))
-      .groupBy(col("bucket")).agg(expr("bit_xor(rh)").as("h"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val lineage = lineageAgg.keys.toList.sorted.map { b =>
-      val r = lineageAgg(b)
-      BucketLineage(b, "reconstruct", r.getAs[Long]("input_rows"),
-        Map("convs" -> r.getAs[Long]("convs"), "edges" -> r.getAs[Long]("edges")),
-        Map("facts" -> r.getAs[Long]("facts"), "concepts" -> r.getAs[Long]("concepts"),
-          "issues" -> r.getAs[Long]("issues"), "arguments" -> r.getAs[Long]("arguments"),
-          "holdings" -> r.getAs[Long]("holdings"), "precedents" -> r.getAs[Long]("precedents"),
-          "chains" -> r.getAs[Long]("chains")),
-        java.lang.Long.toHexString(hashByBucket.getOrElse(b, 0L)))
-    }
-    new SnapshotStore(root).commit(lineage)
+      .collect().map { r =>
+        val b = r.getInt(0)
+        def n(c: String): Long = r.getAs[Long](c)
+        b -> BucketLineage(b, stage, n("input_rows"),
+          Map("convs" -> n("convs"), "edges" -> n("edges")),
+          Seq("facts", "concepts", "issues", "arguments", "holdings", "precedents", "chains")
+            .map(c => c -> n(c)).toMap,
+          java.lang.Long.toHexString(hashByBucket.getOrElse(b, 0L)))
+      }.toMap
   }
 }

@@ -4,6 +4,24 @@ import graft.kg.extract.DocExtractor
 import graft.kg.ontology.Ontology
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The ECHR and Turkish fixture conversations (turn index → text), shared
+  * with the Spark-path jurisdiction test in SparkPipelineSpec. */
+object JurisdictionSpec {
+  val echrTurns: Seq[(Int, String)] = Seq(
+    0 -> "The applicant complained under Article 3 of the Convention about the conditions of detention.",
+    1 -> "In Selmouni v. France [GC], no. 25803/94, the Court held that the Convention is a living instrument.",
+    2 -> "The question is whether the treatment attained the minimum level of severity.",
+    3 -> "We hold that there has been a violation of Article 3 of the Convention.",
+    4 -> "The application is accordingly allowed.")
+
+  val trTurns: Seq[(Int, String)] = Seq(
+    0 -> "Başvurucu, 5237 sayılı Kanun uyarınca verilen karar nedeniyle başvuruda bulunmuştur.",
+    1 -> "AYM, E.2018/123, K.2019/456 sayılı kararında ölçülülük ilkesini değerlendirmiştir.",
+    2 -> "The question is whether the restriction was proportionate.",
+    3 -> "We hold that the interference was not proportionate to the aim pursued.",
+    4 -> "The appeal is allowed.")
+}
+
 /** End-to-end extraction over ECHR and Turkish fixture conversations,
   * exercising the M2/M3 citation grammars, the per-jurisdiction ontologies,
   * and the Turkish case-fold path. */
@@ -13,13 +31,7 @@ class JurisdictionSpec extends AnyFunSuite {
     val o = Ontology.echr
     assert(o.concepts.size == 55)
     assert(o.patterns.nonEmpty)
-    val turns = Seq(
-      0 -> "The applicant complained under Article 3 of the Convention about the conditions of detention.",
-      1 -> "In Selmouni v. France [GC], no. 25803/94, the Court held that the Convention is a living instrument.",
-      2 -> "The question is whether the treatment attained the minimum level of severity.",
-      3 -> "We hold that there has been a violation of Article 3 of the Convention.",
-      4 -> "The application is accordingly allowed.")
-    val g = DocExtractor.extract("echr_fix", turns, o, jurisdiction = "echr")
+    val g = DocExtractor.extract("echr_fix", JurisdictionSpec.echrTurns, o, jurisdiction = "echr")
     val precedents = g.nodes.filter(_.nodeType == "precedent")
     assert(precedents.nonEmpty)
     assert(precedents.exists(p => Option(p.caseName).exists(_.contains("Selmouni"))))
@@ -30,13 +42,7 @@ class JurisdictionSpec extends AnyFunSuite {
   test("turkish: ontology loads and extraction handles turkish citations + fold") {
     val o = Ontology.turkish
     assert(o.concepts.size == 77)
-    val turns = Seq(
-      0 -> "Başvurucu, 5237 sayılı Kanun uyarınca verilen karar nedeniyle başvuruda bulunmuştur.",
-      1 -> "AYM, E.2018/123, K.2019/456 sayılı kararında ölçülülük ilkesini değerlendirmiştir.",
-      2 -> "The question is whether the restriction was proportionate.",
-      3 -> "We hold that the interference was not proportionate to the aim pursued.",
-      4 -> "The appeal is allowed.")
-    val g = DocExtractor.extract("tr_fix", turns, o, jurisdiction = "tr")
+    val g = DocExtractor.extract("tr_fix", JurisdictionSpec.trTurns, o, jurisdiction = "tr")
     val precedents = g.nodes.filter(_.nodeType == "precedent")
     assert(precedents.exists(_.citationType.startsWith("tr_")), precedents.map(_.citationType).toString)
     assert(g.summary.nSentences > 0)

@@ -42,6 +42,17 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sorted(streamed) == sorted(batch))
   }
 
+  test("demo: extracts, prints every table and writes the triples") {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Main.run(spark, "demo", Map("convs" -> "12", "turns" -> "12")))
+    val text = out.toString("UTF-8")
+    assert("""transcripts: \d+ turns, 12 convs""".r.findFirstIn(text).nonEmpty, text)
+    val Counts = """nodes: (\d+)  edges: (\d+)  triples: (\d+)""".r.unanchored
+    val Counts(nodes, edges, triples) = text
+    assert(nodes.toInt > 0 && triples.toInt > 0 && edges == triples, text)
+    assert(text.contains(s"triples parquet written: $triples rows"), text)
+  }
+
   test("graft.Main, Bench, Verify and GoldenGen are the only mains in src/main/scala") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root: $root missing")

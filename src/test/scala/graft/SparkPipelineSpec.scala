@@ -1,6 +1,9 @@
 package graft
 
+import graft.kg.extract.DocExtractor
 import graft.kg.gen.TranscriptGen
+import graft.kg.model.Triple
+import graft.kg.ontology.Ontology
 import graft.kg.pipeline.KgPipeline
 import graft.kg.table.{BucketLineage, Materializer, SnapshotStore}
 import org.apache.spark.sql.SparkSession
@@ -73,8 +76,8 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       // the trusting read on a SPLIT file emits >1 graph for some conv_id —
       // this is the silent-correctness cliff the pinned reader exists to close
       val rawConvs = KgPipeline
-        .summariesDirect(spark, raw, prePartitioned = true)
-        .toDF().select(col("convId")).collect().map(_.getString(0))
+        .branch(KgPipeline.allTablesDirect(spark, raw, prePartitioned = true).toDF(), "summary")
+        .select(col("convId")).collect().map(_.getString(0))
       assert(rawConvs.length > rawConvs.distinct.length,
         "adversarial split no longer bisects conversations; tighten the confs")
       // the pinned reader is immune: overrides the confs, one whole file per task
@@ -399,6 +402,10 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val origHashes = orig.lineage.map(l => l.bucket -> l.contentHash).toMap
     for (l <- rebuilt.lineage if l.inputRows > 0)
       assert(l.contentHash == origHashes(l.bucket), s"bucket ${l.bucket}")
+    // one lineage function: only the stage label differs
+    val origByBucket = orig.lineage.map(l => l.bucket -> l).toMap
+    for (l <- rebuilt.lineage)
+      assert(l.copy(stage = "extract") == origByBucket(l.bucket), s"bucket ${l.bucket}")
   }
 
   test("GraphStore point lookups prune to one bucket partition") {
@@ -422,24 +429,60 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("conv_id", "holding_id"))
   }
 
-  test("allTables tagged-union branches equal the typed per-table projections") {
-    // pins the columnar MatRow union (Materializer + the kg_* query memo)
-    // against the original Dataset[ConvGraph] flatMap projections: same
-    // rows, same multiset, for every branch
-    val df = transcriptsDF(25)
-    val g = KgPipeline.graphs(spark, df).persist()
-    val union = KgPipeline.allTables(g).toDF()
-    def branch(name: String) =
-      union.filter(col(name).isNotNull).select(col(name + ".*"))
-        .collect().map(_.toString).sorted.toSeq
-    assert(branch("node") == KgPipeline.nodes(g).toDF().collect().map(_.toString).sorted.toSeq)
-    assert(branch("edge") == KgPipeline.edges(g).toDF().collect().map(_.toString).sorted.toSeq)
-    assert(branch("js") == KgPipeline.justificationSets(g).toDF().collect().map(_.toString).sorted.toSeq)
-    assert(branch("chain") == KgPipeline.chains(g).toDF().collect().map(_.toString).sorted.toSeq)
-    assert(branch("member") == KgPipeline.clusterMembers(g).toDF().collect().map(_.toString).sorted.toSeq)
-    assert(branch("requirement") == KgPipeline.requirements(g).toDF().collect().map(_.toString).sorted.toSeq)
-    assert(branch("summary") == KgPipeline.summaries(g).toDF().collect().map(_.toString).sorted.toSeq)
-    g.unpersist()
+  test("graphsOf(allTablesDirect) equals the extractor's graphs, warnings included") {
+    // the MatRow union is the one full-extraction representation: it must
+    // encode every ConvGraph field, in order, so re-assembly is lossless
+    import spark.implicits._
+    val turns = TranscriptGen.turns(25, 12)
+    val got = KgPipeline.graphsOf(KgPipeline.allTablesDirect(spark, turns.toDF()).toDF())
+      .collect().map(g => g.summary.convId -> g).toMap
+    val want = turns.groupBy(_.conv_id).map { case (c, ts) =>
+      c -> DocExtractor.extract(c, ts.map(t => (t.turn_idx, t.text)).sortBy(identity),
+        Ontology.default, "in")
+    }
+    assert(want.values.exists(_.summary.nWarnings > 0), "fixture has no warnings")
+    assert(got.keySet == want.keySet)
+    for ((c, g) <- want) assert(got(c) == g, c)
+  }
+
+  test("graphsOf rejects a union whose runs are not whole conversations") {
+    val union = KgPipeline.allTablesDirect(spark, transcriptsDF(4)).toDF()
+    val noSummaries = union.filter(col("summary").isNull)
+    assert(intercept[org.apache.spark.SparkException](
+      KgPipeline.graphsOf(noSummaries).collect()).getMessage.contains("no summary row"))
+  }
+
+  test("the Direct paths extract with the jurisdiction's ontology") {
+    import spark.implicits._
+    for ((jur, ontology, turns) <- Seq(
+        ("echr", Ontology.echr, JurisdictionSpec.echrTurns),
+        ("tr", Ontology.turkish, JurisdictionSpec.trTurns))) {
+      val convId = s"${jur}_fix"
+      val df = turns.map { case (i, t) => (convId, i, t) }.toDF("conv_id", "turn_idx", "text")
+      val want = DocExtractor.extract(convId, turns, ontology, jur)
+      assert(want.nodes.exists(_.nodeType == "concept"), jur)
+      assert(KgPipeline.nodesDirect(spark, df, jur).collect().toSeq == want.nodes, jur)
+      assert(KgPipeline.triplesDirect(spark, df, jur).collect().toSeq ==
+        want.edges.map(e => Triple(convId, e.source, e.relation, e.target)), jur)
+    }
+  }
+
+  test("the kg memo persists one union per session and dir") {
+    // the kg_* input is sized by the documents table alone (20 conversations)
+    val dir = Files.createTempDirectory("graft_memo").toString
+    spark.range(10).toDF("doc_id").write.parquet(s"$dir/documents.parquet")
+    val s = spark.newSession()
+    val before = s.sparkContext.getPersistentRDDs.size
+    val kg = SparkEntry.queries.filter(_._1.startsWith("kg_"))
+    assert(kg.size == 12)
+    kg.values.foreach(q => q(s, dir).collect())
+    assert(s.sparkContext.getPersistentRDDs.size - before == 1)
+    def views(session: org.apache.spark.sql.SparkSession) =
+      session.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_kg_")).toSeq
+    assert(views(s).size == 1)
+    assert(SparkEntry.queries("kg_triples")(s, dir).queryExecution.executedPlan
+      .toString.contains("InMemoryTableScan"))
+    assert(views(spark.newSession()).isEmpty)
   }
 
   test("materialized triples equal the direct-path triples") {

@@ -73,7 +73,8 @@ class StructuredCasesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("graph -> structured view -> json -> reader round-trips") {
     import spark.implicits._
-    val graphs = KgPipeline.graphs(spark, TranscriptGen.turns(12, 12).toDF()).collect()
+    val graphs = KgPipeline.graphsOf(
+      KgPipeline.allTablesDirect(spark, TranscriptGen.turns(12, 12).toDF()).toDF()).collect()
     assert(graphs.nonEmpty)
     for (g <- graphs.take(5)) {
       val sc = StructuredCases.fromGraph(g)
