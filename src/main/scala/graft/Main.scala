@@ -21,7 +21,9 @@ import org.apache.spark.sql.types._
   *   --input <transcripts parquet/iceberg path> --output <table root> \
   *   [--buckets 512] [--jurisdiction in]
   * spark-submit --class graft.Main <jar> canonical-triples \
-  *   --input <transcripts path> --output <parquet out>
+  *   --input <transcripts path> --output <parquet out> [--jurisdiction in]
+  * spark-submit --class graft.Main <jar> entity-stats \
+  *   --input <transcripts path> --output <parquet out> [--jurisdiction in]
   * spark-submit --class graft.Main <jar> stream \
   *   --input <transcripts dir> --output <parquet sink> --checkpoint <dir> \
   *   [--gap-minutes 30] [--jurisdiction in] [--once true]

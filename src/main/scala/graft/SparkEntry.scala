@@ -86,6 +86,24 @@ object SparkEntry {
   private def kgEdges(s: SparkSession, dir: String): DataFrame =
     kgBranch(s, dir, "edge")
 
+  /** State partitions of the q92/q93 streams. They are a per-micro-batch
+    * FIXED cost (every partition opens and commits a state store even when
+    * empty), so they are sized to the streams' key cardinality, not to the
+    * batch session's shuffle-partition count; any value computes identical
+    * results. */
+  private val StreamStatePartitions = 8
+
+  /** Start a streaming query with [[StreamStatePartitions]] shuffle
+    * partitions (the stream's cloned session keeps that snapshot), restore
+    * the session's own value, and wait for the query to terminate. */
+  private def runStream(s: SparkSession)(
+      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
+    val q = try start finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()
+  }
+
   /** Flagship query on sf=0.001: full extract → triples. */
   def entry(spark: SparkSession): DataFrame = {
     val g = kgGraphs(spark, "/root/testdata/sf0.001")
@@ -2246,20 +2264,10 @@ object SparkEntry {
         .withColumn("ts", col("ts").cast("timestamp")) // NTZ -> session-UTC
       val rolled = graft.kg.streaming.TranscriptStream.eventRollup(src)
       val qname = "q92_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // state partitions are a per-micro-batch FIXED cost (every partition
-      // opens/commits a state store even when empty), so they are sized to
-      // the stream's key cardinality (parameterized), not to the batch
-      // session's shuffle-partition count; any value computes identical
-      // results. Conf is restored after the stream finishes.
-      val spPrev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        s.conf.getOption("spark.graft.stream.statePartitions").getOrElse("8"))
-      val q = try rolled.writeStream.format("memory").queryName(qname)
+      runStream(s)(rolled.writeStream.format("memory").queryName(qname)
         .outputMode("complete")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", spPrev)
-      q.awaitTermination()
+        .start())
       s.table(qname)
         // NOTE the cross-engine equality here leans on the 2dp PLANT:
         // eventRollup round(sum, 4) happens BEFORE this floor-round while
@@ -2294,18 +2302,10 @@ object SparkEntry {
       val dd = graft.kg.streaming.TranscriptStream.dedupStream(
         src, watermarkDelay = "48 hours")
       val qname = "q93_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // state partitions sized to key throughput, not batch core count —
-      // see q92; identical results at any value, conf restored after start
-      // (the stream's cloned session keeps its snapshot).
-      val spPrev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        s.conf.getOption("spark.graft.stream.statePartitions").getOrElse("8"))
-      val q = try dd.writeStream.format("memory").queryName(qname)
+      runStream(s)(dd.writeStream.format("memory").queryName(qname)
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", spPrev)
-      q.awaitTermination()
+        .start())
       s.table(qname).select(col("text_hash")).orderBy(col("text_hash"))
     }),
 

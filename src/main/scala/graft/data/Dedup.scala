@@ -9,13 +9,13 @@ import org.apache.spark.sql.functions._
   *
   *  - exact:       content-hash groupBy, canonical = min id.
   *  - minhash LSH: shingle → k-permutation minhash signature → banded LSH
-  *    buckets → candidate pairs → signature-similarity verify → connected
+  *    buckets → candidate pairs → exact n-gram Jaccard verify → connected
   *    components → canonical mapping. The signature is computed WITHOUT UDFs:
-  *    explode(shingles) then k `min(xxhash64(shingle, seed_i))` aggregates —
+  *    explode(hashed shingles) then k `min(xxhash64(h, i))` aggregates —
   *    whole-stage-codegen'd map-side-combining aggregation, shuffling only
   *    (doc, k longs).
   *  - n-gram Jaccard: exact verify on candidate pairs via array_intersect /
-  *    array_union (used standalone for small candidate sets).
+  *    array_union over hashed shingle sets.
   *  - simhash: 64-bit sign-vote fingerprint; near-dups = equal simhash
   *    (or banded 16-bit quarters for hamming≤k candidates).
   *
@@ -54,15 +54,13 @@ object Dedup {
         .otherwise(array(concat_ws(" ", toks)))
     }
 
-  /** doc → (id, sig array<long> of length k) minhash signature as ONE
-    * row-level expression chain — no explode, no aggregation, no shuffle
-    * (the previous form re-hashed every shingle STRING k times through a
-    * 64-column min-aggregate and paid the groupBy exchange; guide §2.4).
+  /** doc → (id, sig array<long> of length k) minhash signature.
     * Each distinct shingle is hashed ONCE to a 64-bit key; the k permutation
     * hashes are k fixed-width `xxhash64(key, i)` remixes of that key. This
     * is a different (equally uniform) hash family than hashing the string k
     * times: band-level candidate recall obeys the same (1 − J^r)^bands
-    * bound, and both q17 paths verify candidates exactly downstream. */
+    * bound, and [[minhashDedupVerified]] verifies candidates exactly
+    * downstream. */
   def minhashSignatures(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 64, shingleN: Int = 3): DataFrame = {
@@ -148,22 +146,12 @@ object Dedup {
         coalesce(col("canonical_id"), col("id").cast("long")).as("canonical_id"))
   }
 
-  /** Full minhash-LSH dedup: every id → canonical id (connected components
-    * over verified near-dup pairs; numeric-min canonical). */
-  def minhashDedup(
-      spark: SparkSession, df: DataFrame, idCol: String, textCol: String,
-      k: Int = 64, bands: Int = 16, threshold: Double = 0.7): DataFrame = {
-    val sigs = minhashSignatures(df, idCol, textCol, k)
-    val pairs = minhashPairs(sigs, idCol, k, bands, threshold)
-    numericCanonical(spark, df.select(col(idCol).as("id")), pairs)
-      .withColumnRenamed("id", idCol)
-  }
-
   /** Minhash-LSH dedup with EXACT shingle-Jaccard verification: recall-tuned
     * banding (r = k/bands small ⇒ candidate prob J^r high near the
     * threshold) generates candidates, exact n-gram Jaccard decides. Unlike
-    * the estimate-verified variant, the output is a pure function of the
-    * texts — reproducible by a brute-force all-pairs oracle — while the scan
+    * a decision on the signature estimate alone, the output is a pure
+    * function of the texts — reproducible by a brute-force all-pairs
+    * oracle — while the scan
     * stays LSH-bounded (miss prob at J = 0.5 with r = 2, 32 bands:
     * (1 - 0.25)^32 ≈ 1e-4). */
   def minhashDedupVerified(
@@ -197,24 +185,10 @@ object Dedup {
   }
 
   /** Exact n-gram Jaccard for given candidate pairs (a, b) against the
-    * original texts. */
-  def exactJaccard(
-      pairs: DataFrame, df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3): DataFrame = {
-    val sh = df.select(col(idCol), shingles(col(textCol), shingleN).as("sh"))
-    pairs
-      .join(sh.select(col(idCol).as("a"), col("sh").as("sh_a")), "a")
-      .join(sh.select(col(idCol).as("b"), col("sh").as("sh_b")), "b")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .drop("sh_a", "sh_b")
-  }
-
-  /** Exact n-gram Jaccard on 64-bit-HASHED shingle sets: identical joins to
-    * [[exactJaccard]] but each distinct shingle rides as one long instead of
-    * a string — same Jaccard value w.h.p. (hash collisions within a doc's
-    * shingle set are ~n²/2⁶⁴), far cheaper to shuffle and intersect.
+    * original texts, on 64-bit-HASHED shingle sets: each distinct shingle
+    * rides as one long instead of a string — the string sets' Jaccard value
+    * w.h.p. (hash collisions within a doc's shingle set are ~n²/2⁶⁴), far
+    * cheaper to shuffle and intersect.
     *
     * Shingle arrays are computed ONLY for ids that appear in a candidate
     * pair (broadcast semi-join before the shingling projection): the

@@ -174,20 +174,25 @@ object Similarity {
     centroids
   }
 
+  /** Cosine of `emb` against centroid `cen` over their common prefix;
+    * −2.0 (below every cosine) when either side is all-zero. */
+  private def centroidCosine(cen: Array[Double], emb: Array[Double]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < cen.length && i < emb.length) {
+      dot += emb(i) * cen(i); na += emb(i) * emb(i); nb += cen(i) * cen(i)
+      i += 1
+    }
+    if (na > 0 && nb > 0) dot / (math.sqrt(na) * math.sqrt(nb)) else -2.0
+  }
+
   /** Nearest-centroid index by cosine; ties to the lowest cell index. */
   private def nearestCell(centroids: Array[Array[Double]], emb: Array[Double]): Int = {
     var best = 0
     var bestSim = Double.NegativeInfinity
     var c = 0
     while (c < centroids.length) {
-      val cen = centroids(c)
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < cen.length && i < emb.length) {
-        dot += emb(i) * cen(i); na += emb(i) * emb(i); nb += cen(i) * cen(i)
-        i += 1
-      }
-      val sim = if (na > 0 && nb > 0) dot / (math.sqrt(na) * math.sqrt(nb)) else -2.0
+      val sim = centroidCosine(centroids(c), emb)
       if (sim > bestSim) { bestSim = sim; best = c }
       c += 1
     }
@@ -235,25 +240,8 @@ object Similarity {
     * centroid; ties to the lowest cell index. */
   private def assignUdf(centroids: Array[Array[Double]])
       : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((embSeq: Seq[Double]) => {
-      val emb = embSeq.toArray // Seq may deserialize as List — O(1) access needed
-      var best = 0
-      var bestSim = Double.NegativeInfinity
-      var c = 0
-      while (c < centroids.length) {
-        val cen = centroids(c)
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var i = 0
-        while (i < cen.length && i < emb.length) {
-          dot += emb(i) * cen(i); na += emb(i) * emb(i); nb += cen(i) * cen(i)
-          i += 1
-        }
-        val sim = if (na > 0 && nb > 0) dot / (math.sqrt(na) * math.sqrt(nb)) else -2.0
-        if (sim > bestSim) { bestSim = sim; best = c }
-        c += 1
-      }
-      best
-    })
+    // Seq may deserialize as List — O(1) access needed
+    udf((embSeq: Seq[Double]) => nearestCell(centroids, embSeq.toArray))
 
   /** Public assignment for diagnostics/partitioning: adds a `cell` column
     * from a learned centroid matrix. */
@@ -265,16 +253,7 @@ object Similarity {
       : org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((embSeq: Seq[Double]) => {
       val emb = embSeq.toArray
-      val sims = centroids.indices.map { c =>
-        val cen = centroids(c)
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var i = 0
-        while (i < cen.length && i < emb.length) {
-          dot += emb(i) * cen(i); na += emb(i) * emb(i); nb += cen(i) * cen(i)
-          i += 1
-        }
-        (if (na > 0 && nb > 0) dot / (math.sqrt(na) * math.sqrt(nb)) else -2.0, c)
-      }
+      val sims = centroids.indices.map(c => (centroidCosine(centroids(c), emb), c))
       sims.sortBy(s => (-s._1, s._2)).take(nProbe).map(_._2)
     })
 

@@ -10,10 +10,12 @@ import org.apache.spark.sql.functions._
 /** Spark wiring for the KG-construction pipeline.
   *
   * Scale design: one shuffle total for extraction — transcripts are hash
-  * partitioned by `conv_id` (`groupByKey`), and the entire per-conversation
-  * pipeline (segment → mention-detect → node induction → cluster → edge →
-  * JS/chain/tier) runs inside `mapGroups` as pure Scala over one
-  * conversation's turns (the reference's per-case unit, run_iltur.py:805-1183,
+  * repartitioned on `conv_id` and sorted within partitions (no shuffle at
+  * all for the conversation-contiguous layout), and the entire
+  * per-conversation pipeline (segment → mention-detect → node induction →
+  * cluster → edge → JS/chain/tier) runs inside `mapPartitions` over each
+  * consecutive run of one conversation's turns ([[KgPipeline.runs]]) as pure
+  * Scala (the reference's per-case unit, run_iltur.py:805-1183,
   * where the asyncio semaphore fan-out becomes task parallelism). The compiled
   * ontology is a broadcast-size value captured in the task closure. All
   * cross-conversation work (canonicalization, stats, retrieval) is relational
@@ -21,7 +23,8 @@ import org.apache.spark.sql.functions._
   *
   * Conversations are bounded (a transcript has bounded turns), so per-group
   * memory is O(doc length) and 10^12 turns parallelize as ~10^9 independent
-  * conversations across executors; AQE coalesces the post-shuffle partitions.
+  * conversations across executors; the explicit cores × 4 repartition is
+  * exempt from AQE coalescing, so every core stays busy.
   */
 /** Minimal projected input — only the columns extraction needs, so Parquet
   * column pruning drops role/tool/ts at the scan. (Top-level + public: Spark's
@@ -94,27 +97,33 @@ object KgPipeline {
       .as[SlimTurn]
   }
 
-  /** Iterate consecutive same-conv_id runs (rows are co-partitioned and
-    * sorted), invoking the extractor once per conversation. */
+  /** The consecutive runs of equal `key` in a partition whose rows are
+    * co-partitioned and sorted by that key: one (key, rows) pair per run,
+    * in partition order. The one per-conversation grouping of the engine —
+    * extraction and [[graft.kg.query.GraphOps.reachable]] both iterate
+    * conversations through it. */
+  private[kg] def runs[R, K](it: Iterator[R])(key: R => K): Iterator[(K, Vector[R])] = {
+    val rows = it.buffered
+    new Iterator[(K, Vector[R])] {
+      def hasNext: Boolean = rows.hasNext
+      def next(): (K, Vector[R]) = {
+        val k = key(rows.head)
+        val run = Vector.newBuilder[R]
+        while (rows.hasNext && key(rows.head) == k) run += rows.next()
+        (k, run.result())
+      }
+    }
+  }
+
+  /** Invoke the extractor once per conversation run. */
   private def perConversation[T](
       it: Iterator[SlimTurn],
       ontology: OntologyData,
-      jurisdiction: String)(f: ConvGraph => IterableOnce[T]): Iterator[T] = {
-    val rows = it.buffered
-    new Iterator[Iterator[T]] {
-      def hasNext: Boolean = rows.hasNext
-      def next(): Iterator[T] = {
-        val convId = rows.head.conv_id
-        val turns = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
-        while (rows.hasNext && rows.head.conv_id == convId) {
-          val t = rows.next()
-          turns += ((t.turn_idx, t.text))
-        }
-        // already sorted by turn_idx via sortWithinPartitions
-        f(DocExtractor.extract(convId, turns.toSeq, ontology, jurisdiction)).iterator
-      }
-    }.flatten
-  }
+      jurisdiction: String)(f: ConvGraph => IterableOnce[T]): Iterator[T] =
+    runs(it)(_.conv_id).flatMap { case (convId, turns) =>
+      // already sorted by turn_idx via sortWithinPartitions
+      f(DocExtractor.extract(convId, turns.map(t => (t.turn_idx, t.text)), ontology, jurisdiction))
+    }
 
   /** Write transcripts in the conversation-contiguous production layout:
     * hash-partitioned by conv_id into `nFiles` files, rows sorted by
@@ -283,7 +292,9 @@ object KgPipeline {
 
   /** One table of the union: the rows of struct branch `name` (`node`,
     * `edge`, `js`, `chain`, `member`, `requirement` or `summary`),
-    * flattened to that table's columns, in emission order. */
+    * flattened to that table's columns, in emission order. The eighth
+    * branch, `warning`, is a plain string column, not a struct: read it
+    * with `filter(col("warning").isNotNull)`. */
   def branch(union: DataFrame, name: String): DataFrame =
     union.filter(col(name).isNotNull).select(col(name + ".*"))
 

@@ -1,13 +1,15 @@
 package graft.kg.query
 
+import graft.kg.pipeline.KgPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph query operators over the materialized node/edge/JS tables —
   * Dataset re-expressions of the reference's per-graph methods
-  * (schema_v2_1.py:778-910, extractor.py:4372-4460). All are relational:
-  * joins + conditional buckets + boolean aggregates; no per-row graph
-  * objects.
+  * (schema_v2_1.py:778-910, extractor.py:4372-4460). All but [[reachable]]
+  * are relational: joins + conditional buckets + boolean aggregates; no
+  * per-row graph objects. [[reachable]] walks each conversation's edges in
+  * memory, on the same per-conversation runs extraction uses.
   */
 object GraphOps {
 
@@ -192,9 +194,9 @@ object GraphOps {
   /** BFS shortest path start→end (trace_reasoning_path,
     * schema_v2_1.py:890-910, matched EXACTLY): adjacency in edge-list order,
     * first path found wins, empty when unreachable. Pure per-conversation
-    * function — a conversation graph is small; the corpus-scale variant is
-    * the reachability join below. Fixture-validated against paths computed
-    * from the published graphs (QuerySpec). */
+    * function — a conversation graph is small; [[reachable]] below is the
+    * corpus-scale, depth-capped set form of the walk. Fixture-validated
+    * against paths computed from the published graphs (QuerySpec). */
   def tracePath(edges: Seq[graft.kg.model.EdgeRow],
                 startId: String, endId: String): Seq[String] = {
     val adj = scala.collection.mutable.LinkedHashMap.empty[String, scala.collection.mutable.ArrayBuffer[String]]
@@ -214,37 +216,40 @@ object GraphOps {
     Seq.empty
   }
 
-  /** Forward BFS reachability (trace_reasoning_path analog at corpus scale,
-    * schema_v2_1.py:890-910), bounded iterative frontier⨝edges joins —
-    * per-conversation graphs are small, depth ≤ maxDepth. */
+  /** Depth-capped forward reachability from `startNodeId` in every
+    * conversation (trace_reasoning_path's walk, schema_v2_1.py:890-910, as
+    * a set): `(conv_id, id)` once for every node first reached at depth
+    * 1..`maxDepth`, including the start node itself when a cycle leads back
+    * to it. One pass, no driver loop: the edges are hash-partitioned on `convId`
+    * and sorted, and each conversation's consecutive run
+    * ([[graft.kg.pipeline.KgPipeline.runs]], the grouping extraction uses)
+    * is walked breadth-first in memory. Edges with a null `convId`,
+    * `source` or `target` are dropped before the walk: a null names no
+    * conversation and no node. The three columns must be strings. */
   def reachable(
       spark: SparkSession, edges: DataFrame,
       startNodeId: String, maxDepth: Int = 10): DataFrame = {
-    // pin the edge plan once: the iterative frontier joins re-reference it
-    // every round, and expression-derived caller plans can otherwise trip
-    // attribute re-resolution against the checkpointed frontiers.
-    // LAZY checkpoints throughout: materialization rides the count job of
-    // the same round, halving the per-round job count (fixed job latency
-    // dominates these small iterative graphs).
-    val e0 = edges.select(col("convId"), col("source"), col("target"))
-      .localCheckpoint(false)
-    var frontier = e0.filter(col("source") === startNodeId)
-      .select(col("convId"), col("target").as("id")).distinct()
-    var acc = frontier
-    var i = 1
-    var newCount = frontier.count()
-    while (newCount > 0 && i < maxDepth) {
-      frontier = frontier.alias("f")
-        .join(e0.alias("e"),
-          col("f.convId") === col("e.convId") && col("f.id") === col("e.source"))
-        .select(col("e.convId").as("convId"), col("e.target").as("id"))
-        .distinct()
-        .join(acc, Seq("convId", "id"), "left_anti")
-        .localCheckpoint(false)
-      newCount = frontier.count()
-      acc = acc.union(frontier)
-      i += 1
-    }
-    acc.select(col("convId").as("conv_id"), col("id"))
+    require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
+    import spark.implicits._
+    edges.select(col("convId"), col("source"), col("target")).na.drop()
+      .repartition(col("convId"))
+      // target as last key: a total order, so the walk never depends on
+      // shuffle arrival order
+      .sortWithinPartitions(col("convId"), col("source"), col("target"))
+      .as[(String, String, String)]
+      .mapPartitions(it => KgPipeline.runs(it)(_._1).flatMap { case (conv, run) =>
+        val next = run.groupMap(_._2)(_._3)
+        val seen = scala.collection.mutable.HashSet.empty[String]
+        var frontier = Vector(startNodeId)
+        var depth = 0
+        val reached = Vector.newBuilder[(String, String)]
+        while (frontier.nonEmpty && depth < maxDepth) {
+          frontier = frontier.flatMap(next.getOrElse(_, Vector.empty)).filter(seen.add)
+          reached ++= frontier.map(conv -> _)
+          depth += 1
+        }
+        reached.result()
+      })
+      .toDF("conv_id", "id")
   }
 }

@@ -75,8 +75,6 @@ object TranscriptStream {
       }
   }
 
-  /** Watermarked sliding-window event rollup (the events-table analog of the
-    * batch q11): counts + sums per (window, event_type), append mode. */
   /** Streaming exact dedup: emit only the FIRST document per content hash,
     * with state bounded by the watermark (dropDuplicatesWithinWatermark —
     * duplicates arriving within the lateness window are suppressed; state
@@ -95,6 +93,9 @@ object TranscriptStream {
       .dropDuplicatesWithinWatermark(Seq("text_hash"))
       .select(idCol, textCol, tsCol, "text_hash")
 
+  /** Watermarked sliding-window event rollup (the events-table analog of the
+    * batch q11): counts + sums per (window, event_type); the caller picks
+    * the output mode. */
   def eventRollup(
       events: DataFrame,
       window_ : String = "1 hour",

@@ -41,7 +41,7 @@ class DataOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val near = base.replace("lazy", "sleepy") // 1-token change
     val far = "completely different content about spark query engines and distributed joins at large scale"
     val df = Seq((1L, base), (2L, near), (3L, far), (4L, base)).toDF("doc_id", "text")
-    val m = Dedup.minhashDedup(spark, df, "doc_id", "text", k = 64, bands = 16, threshold = 0.5)
+    val m = Dedup.minhashDedupVerified(spark, df, "doc_id", "text", k = 64, bands = 16, threshold = 0.5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m(1L) == m(2L), m.toString) // near-dup merged
     assert(m(1L) == m(4L), m.toString) // exact dup merged
@@ -49,7 +49,7 @@ class DataOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("minhash signature equals an independent explode+groupBy recompute") {
-    // pins the row-level signature form (one string hash per shingle, k
+    // pins the signature form (one string hash per shingle, k
     // fixed-width remixes, codegen min-aggregates) against a structurally
     // different Spark plan computing the same definition:
     //   sig_i = min over shingles s of xxhash64(xxhash64(s), i)
@@ -75,7 +75,7 @@ class DataOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("exact jaccard on candidate pairs") {
     val df = Seq((1L, "a b c d e"), (2L, "a b c d x")).toDF("doc_id", "text")
     val pairs = Seq((1L, 2L)).toDF("a", "b")
-    val j = Dedup.exactJaccard(pairs, df, "doc_id", "text").collect().head
+    val j = Dedup.exactJaccardHashed(pairs, df, "doc_id", "text").collect().head
       .getAs[Double]("jaccard")
     // shingles: {a b c, b c d, c d e} vs {a b c, b c d, c d x} → 2/4
     assert(math.abs(j - 0.5) < 1e-9)

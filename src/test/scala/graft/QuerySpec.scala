@@ -273,4 +273,66 @@ class QuerySpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(x => x.getString(1)).toSet
     assert(r == Set("a1", "h1", "i1"))
   }
+
+  /** Nodes at the end of a walk of length 1..maxDepth from `start` inside
+    * one conversation's edge list: a closure over walk lengths, not a BFS. */
+  private def walkClosure(edges: Seq[(String, String)], start: String, maxDepth: Int): Set[String] =
+    (1 to maxDepth).scanLeft(Set(start)) { (ends, _) =>
+      edges.collect { case (s, t) if ends(s) => t }.toSet
+    }.tail.flatten.toSet
+
+  private def bruteReach(rows: Seq[(String, String, String)], start: String, maxDepth: Int) =
+    rows.groupBy(_._1).toSeq.flatMap { case (conv, es) =>
+      walkClosure(es.map(e => (e._2, e._3)), start, maxDepth).map(conv -> _)
+    }.toSet
+
+  test("reachable equals the closure of walk lengths 1..maxDepth per conversation") {
+    val fixed = Seq(
+      // cycle back to the start: s is reached again at depth 3
+      ("cyc", "s", "x"), ("cyc", "x", "y"), ("cyc", "y", "s"), ("cyc", "y", "z"),
+      // a path longer than maxDepth = 3
+      ("long", "s", "p1"), ("long", "p1", "p2"), ("long", "p2", "p3"),
+      ("long", "p3", "p4"), ("long", "p4", "p5"),
+      // self-loops and duplicate edges
+      ("self", "s", "s"), ("self", "s", "q"), ("self", "s", "q"), ("self", "q", "q"),
+      ("self", "q", "r"), ("self", "q", "r"),
+      // no edge leaves the start
+      ("cold", "a", "b"), ("cold", "b", "s"),
+      // short and long routes to the same node
+      ("diamond", "s", "m"), ("diamond", "m", "t"), ("diamond", "s", "u"),
+      ("diamond", "u", "v"), ("diamond", "v", "w"), ("diamond", "w", "t"))
+    val rnd = new scala.util.Random(7)
+    val random = (0 until 12).flatMap { c =>
+      def node() = if (rnd.nextInt(4) == 0) "s" else s"n${rnd.nextInt(5)}"
+      Seq.fill(rnd.nextInt(10))((s"r$c", node(), node()))
+    }
+    val rows = fixed ++ random
+    // one row per input partition: every conversation spans several
+    val df = spark.sparkContext.parallelize(rows, rows.size).toDF("convId", "source", "target")
+    val longParts = df.rdd.mapPartitionsWithIndex((i, it) =>
+      it.filter(_.getString(0) == "long").map(_ => i)).distinct().count()
+    assert(longParts >= 2, s"conversation 'long' spans $longParts input partitions")
+    for (d <- Seq(1, 2, 3, 5)) {
+      val got = GraphOps.reachable(spark, df, "s", d).collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq
+      assert(got.distinct.size == got.size, s"duplicate rows at maxDepth $d")
+      assert(got.toSet == bruteReach(rows, "s", d), s"maxDepth $d")
+    }
+    val at3 = GraphOps.reachable(spark, df, "s", 3).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    assert(at3.filter(_._1 == "cyc") == Set("x", "y", "s", "z").map("cyc" -> _))
+    assert(at3.filter(_._1 == "long") == Set("p1", "p2", "p3").map("long" -> _))
+    assert(at3.filter(_._1 == "self") == Set("s", "q", "r").map("self" -> _))
+    assert(!at3.exists(_._1 == "cold"))
+    intercept[IllegalArgumentException](GraphOps.reachable(spark, df, "s", 0))
+  }
+
+  test("reachable drops edges with a null convId, source or target") {
+    val rows = Seq[(String, String, String)](
+      ("c", "s", "x"), ("c", "x", null), ("c", null, "y"), ("c", "s", null),
+      (null, "s", "x"), (null, "x", "y"))
+    val got = GraphOps.reachable(spark, rows.toDF("convId", "source", "target"), "s")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(got == Set(("c", "x")))
+  }
 }

@@ -1,10 +1,20 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Contract checks on the driver-facing SparkEntry surface that need no
-  * SparkSession. */
-class SparkEntrySpec extends AnyFunSuite {
+/** Contract checks on the driver-facing SparkEntry surface. */
+class SparkEntrySpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[2]")
+    .appName("graft-sparkentry-test")
+    .config("spark.sql.shuffle.partitions", "5")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
 
   test("every oracleSql entry has exactly one oracleGrade line and vice versa") {
     assert(SparkEntry.oracleGrade.keySet == SparkEntry.oracleSql.keySet,
@@ -22,5 +32,15 @@ class SparkEntrySpec extends AnyFunSuite {
 
   test("every oracle key is a registered query") {
     assert((SparkEntry.oracleSql.keySet diff SparkEntry.queries.keySet).isEmpty)
+  }
+
+  test("q92/q93 streams leave the session's shuffle-partition count as they found it") {
+    val sfDir = "/root/testdata/sf0.001"
+    assume(new java.io.File(s"$sfDir/events.parquet").exists())
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    for (q <- Seq("q92_stream_rollup", "q93_stream_dedup")) {
+      assert(SparkEntry.queries(q)(spark, sfDir).count() > 0, q)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == before, q)
+    }
   }
 }
