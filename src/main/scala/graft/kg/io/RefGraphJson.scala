@@ -29,8 +29,6 @@ object RefGraphJson {
       validationWarnings: Vector[String]) {
     /** Edges as extracted, before the post-hoc orphan-repair script ran. */
     def baseEdges: Vector[EdgeRow] = edges.filterNot(_.id.startsWith("e_repair_"))
-    /** Edges added by the reference's repair_orphans script. */
-    def repairEdges: Vector[EdgeRow] = edges.filter(_.id.startsWith("e_repair_"))
   }
 
   private val mapper = new ObjectMapper()

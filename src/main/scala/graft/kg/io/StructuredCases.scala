@@ -172,15 +172,6 @@ object StructuredCases {
       (coalesce(col("disposition"), lit("")).isin("accepted", "partially_accepted") ===
         coalesce(col("label") === 1, lit(false))).as("outcome_correct"))
 
-  /** Corpus roll-up of the reference's checkpoint stats
-    * (structure_cases.py:462-467 / 498-501). */
-  def corpusStats(cases: Dataset[StructuredCase]): DataFrame =
-    caseStats(cases).agg(
-      count(lit(1)).as("success"),
-      sum(when(col("outcome_correct"), 1).otherwise(0)).as("outcome_correct"),
-      round(avg(col("n_facts")), 4).as("avg_facts"),
-      round(avg(col("n_holdings")), 4).as("avg_holdings"))
-
   /** Structured-case VIEW of a rule-extracted graph: the graph's typed nodes
     * re-grouped into the reference's sections, edges dropped (the format's
     * contract). Arguments split by actor; court-actor arguments become

@@ -4,7 +4,7 @@ import graft.kg.canonical.Canonicalizer
 import graft.kg.extract.DocExtractor
 import graft.kg.model._
 import graft.kg.ontology.{Ontology, OntologyData}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Spark wiring for the KG-construction pipeline.
@@ -100,8 +100,8 @@ object KgPipeline {
   /** The consecutive runs of equal `key` in a partition whose rows are
     * co-partitioned and sorted by that key: one (key, rows) pair per run,
     * in partition order. The one per-conversation grouping of the engine —
-    * extraction and [[graft.kg.query.GraphOps.reachable]] both iterate
-    * conversations through it. */
+    * extraction and [[byConversation]] both iterate conversations through
+    * it. */
   private[kg] def runs[R, K](it: Iterator[R])(key: R => K): Iterator[(K, Vector[R])] = {
     val rows = it.buffered
     new Iterator[(K, Vector[R])] {
@@ -113,6 +113,32 @@ object KgPipeline {
         (k, run.result())
       }
     }
+  }
+
+  /** Per-conversation graph operators over relational inputs: `f` is
+    * called once per conversation with that conversation's rows of each
+    * frame, one sequence per frame, in argument order. Each frame's
+    * columns other than `convId` are packed into a struct column of their
+    * own (read them by name: the frames' schemas differ), the frames are
+    * unioned, rows with a null `convId` are dropped, and the union is
+    * hash-repartitioned on `convId` once and sorted within partitions, so
+    * each conversation is one [[runs]] run. Row order inside a
+    * conversation is the shuffle's arrival order. `convId` must be a
+    * string column in every frame. Callers select only the columns `f`
+    * reads, so the one Exchange carries nothing else. */
+  private[kg] def byConversation[T: Encoder](frames: DataFrame*)(
+      f: (String, IndexedSeq[Vector[Row]]) => IterableOnce[T]): Dataset[T] = {
+    val union = frames.zipWithIndex.map { case (df, i) =>
+      df.select(col("convId"),
+        struct(df.columns.toSeq.filter(_ != "convId").map(c => col(s"`$c`")): _*).as(s"_$i"))
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    val slots = frames.indices.map(i => union.schema.fieldIndex(s"_$i"))
+    union.filter(col("convId").isNotNull)
+      .repartition(col("convId"))
+      .sortWithinPartitions(col("convId"))
+      .mapPartitions(it => runs(it)(_.getString(0)).flatMap { case (conv, run) =>
+        f(conv, slots.map(s => run.filterNot(_.isNullAt(s)).map(_.getStruct(s))))
+      })
   }
 
   /** Invoke the extractor once per conversation run. */
@@ -348,17 +374,18 @@ object KgPipeline {
       col("relation").as("pred"),
       col("target").as("obj"))
 
-  /** Orphan detection: node ids that appear in no edge (evaluate_graphs.py:
-    * 142-184 / repair_orphans.py:293-322) — left-anti join against the union
-    * of edge endpoints. */
+  /** Orphan detection: node rows whose id is no endpoint of an edge in
+    * their conversation (evaluate_graphs.py:142-184 /
+    * repair_orphans.py:293-322), one output row per node row. A node with a
+    * null id is always an orphan. */
   def orphans(nodes: Dataset[_], edges: Dataset[_]): DataFrame = {
-    val n = nodes.toDF()
-    val e = edges.toDF()
-    val connected = e.select(col("convId"), col("source").as("id"))
-      .union(e.select(col("convId"), col("target").as("id")))
-      .distinct()
-    n.select(col("convId"), col("id"), col("nodeType"))
-      .join(connected, Seq("convId", "id"), "left_anti")
+    implicit val enc = org.apache.spark.sql.Encoders.product[(String, String, String)]
+    byConversation(nodes.toDF().select("convId", "id", "nodeType"),
+      edges.toDF().select("convId", "source", "target")) { case (conv, Seq(ns, es)) =>
+      val connected = es.flatMap(e => Seq(e.getAs[String]("source"), e.getAs[String]("target"))).toSet
+      ns.map(n => (conv, n.getAs[String]("id"), n.getAs[String]("nodeType")))
+        .filter { case (_, id, _) => id == null || !connected(id) }
+    }.toDF("convId", "id", "nodeType")
   }
 
   /** Quality-tier histogram (checkpoint stats analog, run_iltur.py:625-668). */

@@ -1,8 +1,7 @@
 package graft.kg.query
 
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** Case-to-case retrieval + leave-one-out outcome prediction — the
@@ -495,33 +494,5 @@ object CaseRetrieval {
       val per = rows.map(_._2.find(_._1 == m).get)
       m -> LooResult(m, per.map(_._2), per.map(_._3), per.map(_._4))
     }.toMap
-  }
-
-  /** Corpus profile extraction over a published-graph directory
-    * (file-parallel, like GraphEval.evalCorpus); labels joined by case id. */
-  def profilesFromCorpus(spark: SparkSession, dir: String,
-                         labels: Map[String, Int]): Seq[Profile] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    implicit val tupEnc = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.BINARY)
-    implicit val kryo = org.apache.spark.sql.Encoders.kryo[Profile]
-    val bc = spark.sparkContext.broadcast(labels)
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.json")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .filter(r => !r._1.endsWith("checkpoint.json"))
-      .mapPartitions { it =>
-        val m = new com.fasterxml.jackson.databind.ObjectMapper()
-        it.flatMap { case (path, bytes) =>
-          val base = path.substring(path.lastIndexOf('/') + 1).stripSuffix(".json")
-          try {
-            val root = m.readTree(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-            Some(extractProfile(root, bc.value.get(base)))
-          } catch { case _: Exception => None }
-        }
-      }
-      .collect().toSeq.sortBy(_.caseId)
   }
 }

@@ -284,12 +284,6 @@ object GraphEval {
       round(avg(col("qualityScore")), 4).as("quality_score"))
   }
 
-  /** quality_score_distribution: int(score) histogram. */
-  def qualityDistribution(results: Dataset[EvalResult]): DataFrame =
-    results.toDF()
-      .groupBy(floor(col("qualityScore")).cast("int").as("quality_int"))
-      .count().orderBy(col("quality_int"))
-
   /** most_common_invalid_edge_patterns (top-10 by count): aggregated from
     * the first five invalid patterns per case, like the reference. */
   def commonInvalidPatterns(results: Dataset[EvalResult]): DataFrame =

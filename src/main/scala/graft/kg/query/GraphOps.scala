@@ -1,48 +1,63 @@
 package graft.kg.query
 
 import graft.kg.pipeline.KgPipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph query operators over the materialized node/edge/JS tables —
   * Dataset re-expressions of the reference's per-graph methods
-  * (schema_v2_1.py:778-910, extractor.py:4372-4460). All but [[reachable]]
-  * are relational: joins + conditional buckets + boolean aggregates; no
-  * per-row graph objects. [[reachable]] walks each conversation's edges in
-  * memory, on the same per-conversation runs extraction uses.
+  * (schema_v2_1.py:778-910, extractor.py:4372-4460). The per-graph ones
+  * ([[toulmin]], [[holdingSupport]], [[counterfactual]], [[reachable]]) run
+  * as small Scala functions over each conversation's rows, on one
+  * `convId` exchange ([[graft.kg.pipeline.KgPipeline.byConversation]]);
+  * inputs are read by column name, so any frame carrying the named columns
+  * works. The published-schema concept counterfactual and its outcome
+  * flags stay relational: joins and boolean aggregates.
   */
 object GraphOps {
+
+  private[query] def str(r: Row, c: String): String = r.getAs[String](c)
+
+  /** The source rows of a conversation's edges into nodes of type
+    * `targetType`: one (target, source, source type, relation) per edge,
+    * source node row and target node row — duplicate node rows repeat the
+    * edge, as a join would. Nodes with a null id match nothing. */
+  private def typedInEdges(ns: Vector[Row], es: Vector[Row], targetType: String) = {
+    val typesOf = ns.filter(str(_, "id") != null).groupMap(str(_, "id"))(str(_, "nodeType"))
+    for {
+      e <- es
+      nTargets = typesOf.getOrElse(str(e, "target"), Vector.empty).count(_ == targetType)
+      if nTargets > 0
+      srcType <- typesOf.getOrElse(str(e, "source"), Vector.empty)
+      _ <- 1 to nTargets
+    } yield (str(e, "target"), str(e, "source"), srcType, str(e, "relation"))
+  }
+
+  /** The sorted sources of the in-edges whose (source type, relation)
+    * satisfies `p`. */
+  private def sourcesWhere(in: Seq[(String, String, String, String)])(
+      p: (String, String) => Boolean): Seq[String] =
+    in.collect { case (_, src, srcType, rel) if p(srcType, rel) => src }.sorted
 
   /** Toulmin structure of each argument (get_toulmin_structure,
     * schema_v2_1.py:781-806, matched EXACTLY): only SUPPORTS in-edges bucket
     * into grounds/warrants/backing by source type; rebuttals are
     * attacks/rebuts/undercuts of any source type; other relations (e.g. a
     * fact that GROUNDS an argument) contribute nothing — the reference
-    * ignores them. Validated against fixtures computed from the published
-    * graphs (ReferenceParitySpec). */
+    * ignores them. One row per argument with an in-edge from a node of its
+    * conversation. Fixtures computed from the published graphs check it
+    * in QuerySpec's reference-corpus test, which needs the reference
+    * corpus. */
   def toulmin(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val typed = edges.alias("e")
-      .join(nodes.select(col("convId"), col("id"), col("nodeType")).alias("s"),
-        col("e.convId") === col("s.convId") && col("e.source") === col("s.id"))
-      .join(nodes.filter(col("nodeType") === "argument")
-        .select(col("convId"), col("id")).alias("a"),
-        col("e.convId") === col("a.convId") && col("e.target") === col("a.id"))
-      .select(col("e.convId").as("conv_id"), col("a.id").as("argument_id"),
-        col("e.source").as("source"), col("s.nodeType").as("src_type"),
-        col("e.relation").as("relation"))
-    typed
-      .withColumn("bucket",
-        when(col("relation").isin("attacks", "rebuts", "undercuts"), "rebuttals")
-          .when(col("relation") === "supports" && col("src_type") === "fact", "grounds")
-          .when(col("relation") === "supports" && col("src_type") === "concept", "warrants")
-          .when(col("relation") === "supports" && col("src_type") === "precedent", "backing")
-          .otherwise("other"))
-      .groupBy(col("conv_id"), col("argument_id"))
-      .agg(
-        sort_array(collect_list(when(col("bucket") === "grounds", col("source")))).as("grounds"),
-        sort_array(collect_list(when(col("bucket") === "warrants", col("source")))).as("warrants"),
-        sort_array(collect_list(when(col("bucket") === "backing", col("source")))).as("backing"),
-        sort_array(collect_list(when(col("bucket") === "rebuttals", col("source")))).as("rebuttals"))
+    implicit val enc = Encoders.product[(String, String, Seq[String], Seq[String], Seq[String], Seq[String])]
+    KgPipeline.byConversation(nodes.select("convId", "id", "nodeType"),
+      edges.select("convId", "source", "target", "relation")) { case (conv, Seq(ns, es)) =>
+      typedInEdges(ns, es, "argument").groupBy(_._1).toSeq.map { case (arg, in) =>
+        def supportsFrom(t: String) = sourcesWhere(in)((srcType, rel) => rel == "supports" && srcType == t)
+        (conv, arg, supportsFrom("fact"), supportsFrom("concept"), supportsFrom("precedent"),
+          sourcesWhere(in)((_, rel) => rel == "attacks" || rel == "rebuts" || rel == "undercuts"))
+      }
+    }.toDF("conv_id", "argument_id", "grounds", "warrants", "backing", "rebuttals")
   }
 
   /** Support structure per holding (get_holding_support,
@@ -50,29 +65,22 @@ object GraphOps {
     * sources of ALL grounds in-edges (the reference collects them without a
     * source-type filter), `supporting_facts` the fact-typed sources of
     * supports in-edges, plus the ids of every justification set targeting
-    * the holding. Validated against fixtures computed from the published
-    * graphs (ReferenceParitySpec). */
+    * the holding (null when none does). One row per holding with an in-edge
+    * from a node of its conversation. Fixtures computed from the published
+    * graphs check it in QuerySpec's reference-corpus test, which needs the
+    * reference corpus. */
   def holdingSupport(nodes: DataFrame, edges: DataFrame, js: DataFrame): DataFrame = {
-    val in = edges.alias("e")
-      .join(nodes.filter(col("nodeType") === "holding")
-        .select(col("convId"), col("id")).alias("h"),
-        col("e.convId") === col("h.convId") && col("e.target") === col("h.id"))
-      .join(nodes.select(col("convId"), col("id"), col("nodeType")).alias("s"),
-        col("e.convId") === col("s.convId") && col("e.source") === col("s.id"))
-      .select(col("e.convId").as("conv_id"), col("h.id").as("holding_id"),
-        col("e.source").as("source"), col("s.nodeType").as("src_type"),
-        col("e.relation").as("relation"))
-    val support = in.groupBy(col("conv_id"), col("holding_id"))
-      .agg(
-        sort_array(collect_list(when(
-          col("relation") === "grounds",
-          col("source")))).as("grounding_concepts"),
-        sort_array(collect_list(when(
-          col("src_type") === "fact" && col("relation") === "supports",
-          col("source")))).as("supporting_facts"))
-    val jsAgg = js.groupBy(col("convId").as("conv_id"), col("targetId").as("holding_id"))
-      .agg(sort_array(collect_list(col("id"))).as("justification_sets"))
-    support.join(jsAgg, Seq("conv_id", "holding_id"), "left")
+    implicit val enc = Encoders.product[(String, String, Seq[String], Seq[String], Seq[String])]
+    KgPipeline.byConversation(nodes.select("convId", "id", "nodeType"),
+      edges.select("convId", "source", "target", "relation"),
+      js.select("convId", "id", "targetId")) { case (conv, Seq(ns, es, jss)) =>
+      val jsOf = jss.filter(str(_, "targetId") != null).groupMap(str(_, "targetId"))(str(_, "id"))
+      typedInEdges(ns, es, "holding").groupBy(_._1).toSeq.map { case (h, in) =>
+        (conv, h, sourcesWhere(in)((_, rel) => rel == "grounds"),
+          sourcesWhere(in)((srcType, rel) => srcType == "fact" && rel == "supports"),
+          jsOf.get(h).map(ids => ids.filter(_ != null).sorted: Seq[String]).orNull)
+      }
+    }.toDF("conv_id", "holding_id", "grounding_concepts", "supporting_facts", "justification_sets")
   }
 
   /** Edges belonging to a justification set (get_justification_members,
@@ -84,27 +92,25 @@ object GraphOps {
   /** Counterfactual node removal: which holdings lose ALL their primary-JS
     * support if `removed` disappears (counterfactual_remove_node_v4,
     * extractor.py:4372-4460 — AND logic: any member removed breaks the set;
-    * OR logic: broken only when every member is removed). */
+    * OR logic: broken only when every member is removed). A set's members
+    * are the sources of the edges listing it in `supportGroupIds`; a set
+    * without members, or not primary, plays no part. */
   def counterfactual(
       nodes: DataFrame, edges: DataFrame, js: DataFrame,
       removedNodeId: String): DataFrame = {
-    val members = justificationMembers(edges)
-    val withLogic = members.join(
-      js.select(col("convId").as("conv_id"), col("id").as("js_id"),
-        col("targetId").as("holding_id"), col("logic"), col("isPrimary")),
-      Seq("conv_id", "js_id"))
-      .filter(col("isPrimary"))
-    withLogic.groupBy(col("conv_id"), col("holding_id"), col("js_id"), col("logic"))
-      .agg(
-        count(lit(1)).as("n_members"),
-        count_if(col("source") === removedNodeId).as("n_removed"))
-      .withColumn("js_broken",
-        when(col("logic") === "and", col("n_removed") > 0)
-          .otherwise(col("n_removed") === col("n_members")))
-      .groupBy(col("conv_id"), col("holding_id"))
-      .agg(bool_and(col("js_broken")).as("holding_unsupported"))
-      .filter(col("holding_unsupported"))
-      .select(col("conv_id"), col("holding_id"))
+    implicit val enc = Encoders.product[(String, String)]
+    KgPipeline.byConversation(edges.select("convId", "source", "supportGroupIds"),
+      js.select("convId", "id", "targetId", "logic", "isPrimary")) { case (conv, Seq(es, jss)) =>
+      val members = es.flatMap(e => Option(e.getAs[Seq[String]]("supportGroupIds")).toSeq.flatten
+        .filter(_ != null).map(_ -> str(e, "source"))).groupMap(_._1)(_._2)
+      val removed = (s: String) => s != null && s == removedNodeId
+      jss.filter(_.getAs[Any]("isPrimary") == true)
+        .map(j => (str(j, "targetId"), str(j, "id"), str(j, "logic"))).distinct
+        .flatMap { case (h, id, logic) => members.get(id).map(ms =>
+          h -> (if (logic == "and") ms.exists(removed) else ms.forall(removed))) }
+        .groupMap(_._1)(_._2).toSeq
+        .collect { case (h, broken) if broken.forall(identity) => (conv, h) }
+    }.toDF("conv_id", "holding_id")
   }
 
   /** Published-schema concept counterfactual (counterfactual_remove_concept,
@@ -220,25 +226,19 @@ object GraphOps {
     * conversation (trace_reasoning_path's walk, schema_v2_1.py:890-910, as
     * a set): `(conv_id, id)` once for every node first reached at depth
     * 1..`maxDepth`, including the start node itself when a cycle leads back
-    * to it. One pass, no driver loop: the edges are hash-partitioned on `convId`
-    * and sorted, and each conversation's consecutive run
-    * ([[graft.kg.pipeline.KgPipeline.runs]], the grouping extraction uses)
-    * is walked breadth-first in memory. Edges with a null `convId`,
-    * `source` or `target` are dropped before the walk: a null names no
-    * conversation and no node. The three columns must be strings. */
+    * to it. One pass, no driver loop: each conversation's edges are walked
+    * breadth-first in memory ([[graft.kg.pipeline.KgPipeline.byConversation]]).
+    * Edges with a null `convId`, `source` or `target` are dropped before the
+    * walk: a null names no conversation and no node. The three columns must
+    * be strings. */
   def reachable(
       spark: SparkSession, edges: DataFrame,
       startNodeId: String, maxDepth: Int = 10): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
-    import spark.implicits._
-    edges.select(col("convId"), col("source"), col("target")).na.drop()
-      .repartition(col("convId"))
-      // target as last key: a total order, so the walk never depends on
-      // shuffle arrival order
-      .sortWithinPartitions(col("convId"), col("source"), col("target"))
-      .as[(String, String, String)]
-      .mapPartitions(it => KgPipeline.runs(it)(_._1).flatMap { case (conv, run) =>
-        val next = run.groupMap(_._2)(_._3)
+    implicit val enc = Encoders.product[(String, String)]
+    KgPipeline.byConversation(edges.select("convId", "source", "target").na.drop()) {
+      case (conv, Seq(es)) =>
+        val next = es.groupMap(str(_, "source"))(str(_, "target"))
         val seen = scala.collection.mutable.HashSet.empty[String]
         var frontier = Vector(startNodeId)
         var depth = 0
@@ -249,7 +249,6 @@ object GraphOps {
           depth += 1
         }
         reached.result()
-      })
-      .toDF("conv_id", "id")
+    }.toDF("conv_id", "id")
   }
 }

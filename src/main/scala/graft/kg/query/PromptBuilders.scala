@@ -358,14 +358,6 @@ object PromptBuilders {
       "legal framework, and party arguments alone.\n\n" +
       blindedGraphSummary(g, noScrub) + "\n\n" + PredictTail
 
-  /** build_raw_prompt (:476-491). */
-  def rawPrompt(text: String): String =
-    "Predict the outcome of this Indian Supreme Court case.\n" +
-      "Below is an excerpt from the judgment covering the facts, background, and " +
-      "party arguments. The court's decision and reasoning have been removed.\n" +
-      "Predict from the facts and arguments alone.\n\n" +
-      "--- JUDGMENT EXCERPT ---\n" + text + "\n--- END EXCERPT ---\n\n" + PredictTail
-
   /** eval_graph_vs_structured.py:263-269. */
   private val OutcomeLeakRe = re(
     "(?:appeal|petition|writ|application)\\s+" +

@@ -354,12 +354,4 @@ object Citations {
     }
     out.toList
   }
-
-  /** Stable canonical id for cross-conversation precedent canonicalization:
-    * normalized case name when present, else whitespace-collapsed lowercase
-    * citation string prefixed by type. */
-  def normalizedId(h: CitationHit): String = {
-    val base = h.caseName.getOrElse(h.citation)
-    h.citationType + ":" + base.toLowerCase.replaceAll("\\s+", " ").trim
-  }
 }

@@ -1,6 +1,5 @@
 package graft.kg.text
 
-import java.text.Normalizer
 import java.util.Locale
 import scala.collection.mutable
 
@@ -51,12 +50,6 @@ object Normalize {
       i += 1
     }
     sb.toString.toLowerCase(Locale.ROOT)
-  }
-
-  /** NFC normalize + Turkish lower + collapse whitespace (extractor.py:784-789). */
-  def turkishNormalize(s: String): String = {
-    val nfc = Normalizer.normalize(s, Normalizer.Form.NFC)
-    turkishLower(nfc).replaceAll("\\s+", " ").trim
   }
 
   /** True iff every char is < 0x80 — the fast-path guard that lets the

@@ -27,8 +27,6 @@ final case class SegmentedDoc(
   def segmentAt(start: Int, end: Int): Option[TextSegment] =
     sentences.find(s => s.startChar <= start && s.endChar >= end)
       .orElse(paragraphs.find(p => p.startChar <= start && p.endChar >= end))
-
-  def textAt(start: Int, end: Int): String = fullText.substring(start, end)
 }
 
 /** Paragraph + sentence segmentation with stable char offsets.

@@ -8,6 +8,16 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+/** Row shapes of the graph-operator tests (top level: Spark encoders cannot
+  * build inner classes). */
+final case class KAnchor(startChar: Int, endChar: Int)
+final case class KNode(convId: String, id: String, nodeType: String,
+                       resolvesIssue: String = null, anchor: KAnchor = null)
+final case class KEdge(convId: String, source: String, target: String, relation: String,
+                       supportGroupIds: Seq[String] = Nil)
+final case class KJs(convId: String, id: String, targetId: String, logic: String,
+                     isPrimary: Option[Boolean])
+
 class QuerySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -334,5 +344,193 @@ class QuerySpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = GraphOps.reachable(spark, rows.toDF("convId", "source", "target"), "s")
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(got == Set(("c", "x")))
+  }
+
+  test("quality score: empty denominators score 0.0 instead of dividing by zero") {
+    // c1 has no issue node; c2's only node is an outcome and it has no edges
+    val n = Seq(
+      KNode("c1", "f1", "fact", anchor = KAnchor(0, 5)),
+      KNode("c1", "h1", "holding", anchor = KAnchor(3, 3)),
+      KNode("c2", "outcome", "outcome", anchor = KAnchor(0, 9))).toDF()
+    val e = Seq(KEdge("c1", "f1", "h1", "supports")).toDF()
+    val got = graft.kg.query.GraphQuality.score(n, e).collect()
+      .map(r => r.getString(0) -> (1 to 5).map(r.getDouble)).toMap
+    // edge validity, connectivity, issue resolution, anchor quality, score
+    assert(got == Map(
+      "c1" -> Seq(1.0, 1.0, 0.0, 0.5, 7.5),
+      "c2" -> Seq(0.0, 0.0, 0.0, 1.0, 2.0)))
+  }
+
+  // --- the per-conversation graph operators against a brute-force
+  //     recomputation: every relation is a nested loop over the
+  //     conversation's rows, so duplicate node rows repeat matches exactly
+  //     as a join does; rows with a null convId belong to no conversation ---
+
+  private def kernelInputs: (Seq[KNode], Seq[KEdge], Seq[KJs]) = {
+    val nodes = Seq(
+      // duplicate node rows (f2 twice, a1 twice), null and degenerate anchors
+      KNode("d", "f1", "fact", anchor = KAnchor(0, 4)), KNode("d", "f2", "fact"),
+      KNode("d", "f2", "fact", anchor = KAnchor(7, 7)), KNode("d", "c1", "concept"),
+      KNode("d", "p1", "precedent", anchor = KAnchor(9, 2)), KNode("d", "a1", "argument"),
+      KNode("d", "a1", "argument"), KNode("d", "a2", "argument"),
+      KNode("d", "h1", "holding", "i1"), KNode("d", "h2", "holding", "i9"),
+      KNode("d", "h3", "holding"), KNode("d", "i1", "issue"), KNode("d", "i1", "issue"),
+      KNode("d", "i2", "issue"), KNode("d", "outcome", "outcome"),
+      KNode("d", null, "fact"), KNode(null, "f1", "fact"))
+    val edges = Seq(
+      KEdge("d", "f1", "a1", "supports"), KEdge("d", "c1", "a1", "supports"),
+      KEdge("d", "p1", "a1", "supports"), KEdge("d", "f1", "a2", "attacks"),
+      KEdge("d", "c1", "a2", "grounds"), KEdge("d", "zz9", "a2", "rebuts"),
+      KEdge("d", "f1", "h1", "supports", Seq("js1")), KEdge("d", "c1", "h1", "grounds", Seq("js1")),
+      KEdge("d", "f1", "h2", "supports", Seq("js2", "js3")), KEdge("d", "nope", "h2", "grounds"),
+      KEdge("d", "h1", "i1", "resolves"), KEdge("d", "h1", "outcome", "determines"),
+      KEdge("d", "f1", "h1", null), KEdge(null, "f2", "h1", "supports", Seq("js1")),
+      // a conversation with edges but no nodes
+      KEdge("bare", "f1", "h1", "supports", Seq("jsb")))
+    val js = Seq(
+      // removing f1 breaks js1 (and) and js2 (or, sole member): h1 and h2 break
+      KJs("d", "js1", "h1", "and", Some(true)), KJs("d", "js2", "h2", "or", Some(true)),
+      KJs("d", "js3", "h2", null, Some(false)),
+      // a holding with justification sets but no in-edges
+      KJs("d", "js4", "h3", "and", Some(true)), KJs("d", "js5", "h1", "or", None),
+      KJs("bare", "jsb", "h1", "and", Some(true)))
+    val rnd = new scala.util.Random(11)
+    val types = Seq("fact", "concept", "precedent", "argument", "holding", "issue")
+    val rels = Seq("supports", "grounds", "attacks", "rebuts", "undercuts", "addresses",
+      "resolves", "determines", null)
+    def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+    def id() = if (rnd.nextInt(9) == 0) "outcome" else s"${"fchai p".charAt(rnd.nextInt(7))}${rnd.nextInt(3)}"
+    val random = (0 until 10).map { i =>
+      val c = s"r$i"
+      val ns = Seq.fill(rnd.nextInt(9)) {
+        val t = pick(types :+ "outcome")
+        KNode(c, if (rnd.nextInt(12) == 0) null else s"${t.head}${rnd.nextInt(3)}", t,
+          pick(Seq(null, "i0", "i1")),
+          pick(Seq(null, KAnchor(0, 0), KAnchor(1, 6), KAnchor(4, 2))))
+      }
+      val es = Seq.fill(rnd.nextInt(10))(KEdge(c, id(), id(), pick(rels),
+        Seq.fill(rnd.nextInt(3))(s"js${rnd.nextInt(3)}")))
+      val jss = Seq.fill(rnd.nextInt(4))(KJs(c, s"js${rnd.nextInt(3)}", s"h${rnd.nextInt(3)}",
+        pick(Seq("and", "or", null)), pick(Seq(Some(true), Some(false), None))))
+      (ns, es, jss)
+    }
+    (nodes ++ random.flatMap(_._1), edges ++ random.flatMap(_._2), js ++ random.flatMap(_._3))
+  }
+
+  /** One row per input partition: every conversation spans several. */
+  private def spread[A <: Product : org.apache.spark.sql.Encoder : scala.reflect.ClassTag](
+      rows: Seq[A]): org.apache.spark.sql.DataFrame =
+    spark.createDataset(spark.sparkContext.parallelize(rows, rows.size)).toDF()
+
+  private def byConv[A](rows: Seq[A])(conv: A => String): Map[String, Seq[A]] =
+    rows.filter(conv(_) != null).groupBy(conv)
+
+  /** (conv, target, source, source type, relation) per matching
+    * (edge, source node row, target node row) of type `targetType`. */
+  private def bruteInEdges(ns: Seq[KNode], es: Seq[KEdge], targetType: String) = for {
+    (c, ces) <- byConv(es)(_.convId).toSeq
+    cns = ns.filter(_.convId == c)
+    e <- ces
+    src <- cns if src.id != null && src.id == e.source
+    tgt <- cns if tgt.nodeType == targetType && tgt.id != null && tgt.id == e.target
+  } yield (c, e.target, e.source, src.nodeType, e.relation)
+
+  private def sourcesOf(in: Seq[(String, String, String, String, String)])(
+      keep: (String, String) => Boolean): Seq[String] =
+    in.filter(x => keep(x._4, x._5)).map(_._3).sorted
+
+  test("graph operators equal a brute-force per-conversation recomputation") {
+    val (nodes, edges, js) = kernelInputs
+    val (n, e, j) = (spread(nodes), spread(edges), spread(js))
+    val dParts = e.rdd.mapPartitionsWithIndex((i, it) =>
+      it.filter(_.getAs[String]("convId") == "d").map(_ => i)).distinct().count()
+    assert(dParts >= 2, s"conversation 'd' spans $dParts input partitions")
+    // null ids sort first; arrays compare element by element
+    implicit val strOrd: Ordering[String] = Ordering.fromLessThan[String]((a, b) =>
+      a == null && b != null || a != null && b != null && a < b)
+    implicit val seqOrd: Ordering[Seq[String]] = Ordering.Implicits.seqOrdering[Seq, String]
+    def sortedRows[A: Ordering](xs: Seq[A]) = xs.sorted
+
+    // toulmin
+    val expT = bruteInEdges(nodes, edges, "argument").groupBy(x => (x._1, x._2)).toSeq.map {
+      case ((c, a), in) =>
+        def from(t: String) = sourcesOf(in)((st, r) => r == "supports" && st == t)
+        (c, a, from("fact"), from("concept"), from("precedent"),
+          sourcesOf(in)((_, r) => Set("attacks", "rebuts", "undercuts")(r)))
+    }
+    val gotT = GraphOps.toulmin(n, e).collect().toSeq.map(r => (r.getString(0), r.getString(1),
+      r.getSeq[String](2), r.getSeq[String](3), r.getSeq[String](4), r.getSeq[String](5)))
+    assert(sortedRows(gotT) == sortedRows(expT))
+    assert(expT.count(_._1 == "d") == 2)
+
+    // holding support: a holding without in-edges gets no row
+    val expH = bruteInEdges(nodes, edges, "holding").groupBy(x => (x._1, x._2)).toSeq.map {
+      case ((c, h), in) =>
+        val sets = js.filter(x => x.convId == c && x.targetId == h)
+        (c, h, sourcesOf(in)((_, r) => r == "grounds"),
+          sourcesOf(in)((st, r) => st == "fact" && r == "supports"),
+          if (sets.isEmpty) None else Some(sets.map(_.id).filter(_ != null).sorted))
+    }
+    val gotH = GraphOps.holdingSupport(n, e, j).collect().toSeq.map(r => (r.getString(0),
+      r.getString(1), r.getSeq[String](2), r.getSeq[String](3), Option(r.getSeq[String](4))))
+    assert(sortedRows(gotH) == sortedRows(expH))
+    assert(!gotH.exists(_._2 == "h3") && gotH.count(_._1 == "d") == 2)
+
+    // counterfactual: a holding breaks when every primary set with members breaks
+    for (removed <- Seq("f1", "c1", "f0", "zz9")) {
+      val expC = for {
+        (c, sets) <- byConv(js)(_.convId).toSeq
+        (h, hs) <- sets.filter(_.isPrimary.contains(true)).groupBy(_.targetId).toSeq
+        broken = hs.flatMap { s =>
+          val members = edges.filter(x => x.convId == c && x.supportGroupIds != null &&
+            x.supportGroupIds.contains(s.id)).map(_.source)
+          if (s.id == null || members.isEmpty) None
+          else Some(if (s.logic == "and") members.contains(removed) else members.forall(_ == removed))
+        }
+        if broken.nonEmpty && broken.forall(identity)
+      } yield (c, h)
+      val gotC = GraphOps.counterfactual(n, e, j, removed).collect().toSeq
+        .map(r => (r.getString(0), r.getString(1)))
+      assert(sortedRows(gotC) == sortedRows(expC), s"removing $removed")
+      if (removed == "f1") assert(gotC.filter(_._1 == "d").map(_._2).sorted == Seq("h1", "h2"))
+    }
+
+    // quality score: node rows count, duplicates included; issues are distinct ids
+    val valid = graft.kg.rules.Relations.Matrix.toSeq
+      .flatMap { case ((s, t), rs) => rs.map((s, t, _)) }.toSet
+    def rate(k: Int, of: Int) = if (of == 0) 0.0 else k.toDouble / of
+    def round(x: Double, scale: Double) = math.floor(x * scale + 0.5) / scale
+    val typeOf = graft.kg.rules.Relations.nodeTypeFromId _
+    val convs = (nodes.map(_.convId) ++ edges.map(_.convId)).filter(_ != null).distinct
+    val expQ = convs.map { c =>
+      val cn = nodes.filter(_.convId == c)
+      val ce = edges.filter(_.convId == c)
+      val v = rate(ce.count(x => valid((typeOf(x.source), typeOf(x.target), x.relation))), ce.size)
+      val endpoints = ce.flatMap(x => Seq(x.source, x.target)).filter(_ != null).toSet
+      val nonOutcome = cn.filter(x => x.nodeType != null && x.nodeType != "outcome")
+      val k = rate(nonOutcome.count(x => endpoints.contains(x.id)), nonOutcome.size)
+      val issues = cn.filter(_.nodeType == "issue").map(_.id).filter(_ != null).distinct
+      val resolves = cn.filter(_.nodeType == "holding").map(_.resolvesIssue).toSet
+      val r = rate(issues.count(resolves), issues.size)
+      val a = rate(cn.count(x => x.anchor != null && x.anchor.endChar > x.anchor.startChar), cn.size)
+      (c, round(v, 1e4), round(k, 1e4), round(r, 1e4), round(a, 1e4),
+        round(1.0 + v * 3.0 + k * 3.0 + r * 2.0 + a * 1.0, 100.0))
+    }
+    val gotQ = graft.kg.query.GraphQuality.score(n, e).collect().toSeq.map(r =>
+      (r.getString(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5)))
+    assert(sortedRows(gotQ) == sortedRows(expQ))
+    // 15 non-outcome node rows in d; f2 (twice), h3, i2 and the null id are unconnected
+    assert(gotQ.find(_._1 == "d").map(_._3).contains(round(10.0 / 15, 1e4)))
+
+    // orphans: one row per unconnected node row
+    val expO = for {
+      (c, cn) <- byConv(nodes)(_.convId).toSeq
+      endpoints = edges.filter(_.convId == c).flatMap(x => Seq(x.source, x.target)).toSet
+      x <- cn if x.id == null || !endpoints(x.id)
+    } yield (c, x.id, x.nodeType)
+    val gotO = KgPipeline.orphans(n, e).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(sortedRows(gotO) == sortedRows(expO))
+    assert(gotO.count(_._1 == "d") >= 2)
   }
 }
