@@ -4,7 +4,7 @@ import graft.kg.canonical.Canonicalizer
 import graft.kg.gen.TranscriptGen
 import graft.kg.pipeline.KgPipeline
 import graft.kg.streaming.TranscriptStream
-import graft.kg.table.Materializer
+import graft.kg.table.{Materializer, SnapshotStore}
 import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
@@ -34,8 +34,10 @@ import org.apache.spark.sql.types._
   * Under spark-submit the master and memory come from spark-submit; run
   * anywhere else, the session is `local[SPARK_GRAFT_CPUS]` (default 8).
   * `materialize` is resumable: re-running after a failure recomputes only
-  * buckets missing from the snapshot log. `stream` resumes exactly-once
-  * from its checkpoint; `--once true` stops when it has caught up.
+  * buckets missing from the snapshot log, with the bucket count the root
+  * recorded when it was created (`--buckets` sizes a new root only).
+  * `stream` resumes exactly-once from its checkpoint; `--once true` stops
+  * when it has caught up.
   */
 object Main {
 
@@ -91,8 +93,11 @@ object Main {
     val jurisdiction = opts.getOrElse("jurisdiction", "in")
     cmd match {
       case "materialize" =>
-        val report = Materializer.run(spark, spark.read.parquet(need("input")), need("output"),
-          opts.getOrElse("buckets", "512").toInt, jurisdiction)
+        val output = need("output")
+        val buckets = new SnapshotStore(output).bucketCount
+          .getOrElse(opts.getOrElse("buckets", "512").toInt)
+        val report = Materializer.run(spark, spark.read.parquet(need("input")), output,
+          buckets, jurisdiction)
         println(s"snapshot=${report.snapshotId} committed=${report.bucketsCommitted.size} " +
           s"skipped=${report.bucketsSkipped.size} rows=${report.rows.toList.sortBy(_._1)}")
       case "canonical-triples" =>

@@ -312,10 +312,7 @@ object SparkEntry {
         .orderBy(col("doc_id"))
     }),
     // static hash-derived anchors (integer-exact arithmetic) so a DuckDB
-    // oracle can mirror cell assignment + probing exactly; the k-means
-    // production path (ivfTopKKmeans over buildIvfIndex) trains on floats —
-    // not SQL-mirrorable — and is verified by the recall@10 ≥ 0.9 and
-    // determinism assertions in DataOpsSpec instead
+    // oracle can mirror cell assignment + probing exactly
     "q22_ivf_topk" -> ((s, dir) => {
       val base = pq(s, dir, "embeddings")
         .select(col("vec_id"),

@@ -1,5 +1,6 @@
 package graft.data
 
+import graft.data.TextAnalysis.bound
 import graft.kg.canonical.ConnectedComponents
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,13 +36,6 @@ object Dedup {
       .join(canon, "text_hash")
       .select(col(idCol), col("canonical_id"))
   }
-
-  /** Expression-level let binding: evaluate `x` ONCE per row and expose it
-    * to `f` as a lambda variable — lambda bodies re-evaluate captured
-    * expression subtrees per element (quadratic for split() inputs), while
-    * a lambda variable is a cheap slot read. */
-  private def bound(x: Column)(f: Column => Column): Column =
-    element_at(transform(array(x), v => f(v)), 1)
 
   /** Word n-gram shingles as an array column (lowercased tokens). */
   def shingles(textCol: Column, n: Int = 3): Column =

@@ -131,144 +131,6 @@ object Similarity {
       .select(col("query_id"), col("vec_id"), round(col("cosine"), 6).as("cosine"), col("rank"))
   }
 
-  /** Deterministic seeded k-means (Lloyd) over a BOUNDED training sample —
-    * data-derived IVF centroids as an index-BUILD step, not a query step.
-    *
-    * The sample is the first `sampleN` vectors in hashed-id order
-    * (reproducible, data-dependent, one bounded collect — the standard IVF
-    * practice at corpus scale: centroids are trained on a sample, only the
-    * ASSIGNMENT pass stays distributed). Lloyd then runs driver-side in a
-    * fixed iteration order, so the centroids are bit-deterministic — the
-    * previous distributed-mean formulation paid 2 full-corpus jobs per
-    * iteration (16 jobs of fixed latency) for means whose float summation
-    * order wasn't even reproducible. Init = first k sample vectors; empty
-    * cells keep their previous centroid. Returns k×dim centroids. */
-  def kmeansCentroids(
-      base: DataFrame, dim: Int, k: Int = 16, iters: Int = 8,
-      seed: Long = 42L, sampleN: Int = 65536): Array[Array[Double]] = {
-    val sample: Array[Array[Double]] = base
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(xxhash64(col("vec_id"), lit(seed)), col("vec_id"))
-      .limit(sampleN).collect()
-      .map(_.getSeq[Double](1).toArray)
-    require(sample.nonEmpty, "kmeansCentroids: empty base table")
-    var centroids = sample.take(k).map(_.clone())
-    var it = 0
-    while (it < iters) {
-      val sums = Array.fill(centroids.length)(new Array[Double](dim))
-      val counts = new Array[Long](centroids.length)
-      var s = 0
-      while (s < sample.length) {
-        val v = sample(s)
-        val c = nearestCell(centroids, v)
-        counts(c) += 1
-        var i = 0
-        while (i < dim && i < v.length) { sums(c)(i) += v(i); i += 1 }
-        s += 1
-      }
-      centroids = centroids.zipWithIndex.map { case (old, c) =>
-        if (counts(c) > 0) sums(c).map(_ / counts(c)) else old
-      }
-      it += 1
-    }
-    centroids
-  }
-
-  /** Cosine of `emb` against centroid `cen` over their common prefix;
-    * −2.0 (below every cosine) when either side is all-zero. */
-  private def centroidCosine(cen: Array[Double], emb: Array[Double]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < cen.length && i < emb.length) {
-      dot += emb(i) * cen(i); na += emb(i) * emb(i); nb += cen(i) * cen(i)
-      i += 1
-    }
-    if (na > 0 && nb > 0) dot / (math.sqrt(na) * math.sqrt(nb)) else -2.0
-  }
-
-  /** Nearest-centroid index by cosine; ties to the lowest cell index. */
-  private def nearestCell(centroids: Array[Array[Double]], emb: Array[Double]): Int = {
-    var best = 0
-    var bestSim = Double.NegativeInfinity
-    var c = 0
-    while (c < centroids.length) {
-      val sim = centroidCosine(centroids(c), emb)
-      if (sim > bestSim) { bestSim = sim; best = c }
-      c += 1
-    }
-    best
-  }
-
-  /** A built IVF index: trained centroids + the cell-assigned base table.
-    * `assigned` is pinned (localCheckpoint) so query batches join against a
-    * materialized table instead of re-deriving the assignment; a deployment
-    * writes it cell-partitioned (`partitionBy("cell")`) so a probe list
-    * prunes partitions at the scan. */
-  final case class IvfIndex(centroids: Array[Array[Double]], assigned: DataFrame)
-
-  /** Build the IVF index ONCE (train on a bounded sample, assign the corpus,
-    * pin the result) — the offline half of IVF ANN. */
-  def buildIvfIndex(
-      base: DataFrame, dim: Int, cells: Int = 16, iters: Int = 8,
-      seed: Long = 42L, sampleN: Int = 65536): IvfIndex = {
-    val centroids = kmeansCentroids(base, dim, cells, iters, seed, sampleN)
-    IvfIndex(centroids, assignCells(base, centroids).localCheckpoint())
-  }
-
-  /** Query half of IVF ANN: probe the `nProbe` best cells per query against
-    * a pre-built index. No training, no assignment — just the probe join. */
-  def ivfTopKIndexed(
-      queries: DataFrame, index: IvfIndex,
-      nProbe: Int = 4, k: Int = 10): DataFrame = {
-    val probes = probeUdf(index.centroids, nProbe)
-    val qCells = queries
-      .select(col("query_id"), col("embedding").as("q_emb"),
-        explode(probes(col("embedding"))).as("cell"))
-    val scored = index.assigned.join(broadcast(qCells), "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", cosine(col("q_emb"), col("embedding")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("cosine"), 6).as("cosine"), col("rank"))
-  }
-
-  /** Nearest-centroid assignment as a deterministic UDF over a broadcast
-    * centroid matrix (a k×dim literal expression tree would exceed codegen
-    * limits; the argmax loop is the pragmatic seam). Cosine against each
-    * centroid; ties to the lowest cell index. */
-  private def assignUdf(centroids: Array[Array[Double]])
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    // Seq may deserialize as List — O(1) access needed
-    udf((embSeq: Seq[Double]) => nearestCell(centroids, embSeq.toArray))
-
-  /** Public assignment for diagnostics/partitioning: adds a `cell` column
-    * from a learned centroid matrix. */
-  def assignCells(base: DataFrame, centroids: Array[Array[Double]]): DataFrame =
-    base.withColumn("cell", assignUdf(centroids)(col("embedding")))
-
-  /** Ranked probe list (all cells, best first) for a query vector. */
-  private def probeUdf(centroids: Array[Array[Double]], nProbe: Int)
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((embSeq: Seq[Double]) => {
-      val emb = embSeq.toArray
-      val sims = centroids.indices.map(c => (centroidCosine(centroids(c), emb), c))
-      sims.sortBy(s => (-s._1, s._2)).take(nProbe).map(_._2)
-    })
-
-  /** IVF top-k with DATA-DERIVED centroids (seeded k-means): the production
-    * path, now as build-then-query over [[buildIvfIndex]]. A deployment
-    * builds the index once and serves query batches via [[ivfTopKIndexed]];
-    * this convenience wrapper does both for one-shot calls. On a
-    * cell-partitioned table the probe list becomes partition pruning;
-    * recall@10 ≥ 0.9 vs brute force is asserted in DataOpsSpec. */
-  def ivfTopKKmeans(
-      queries: DataFrame, base: DataFrame, dim: Int,
-      cells: Int = 16, nProbe: Int = 4, k: Int = 10,
-      iters: Int = 8, seed: Long = 42L): DataFrame =
-    ivfTopKIndexed(queries, buildIvfIndex(base, dim, cells, iters, seed), nProbe, k)
-
   /** Random-hyperplane LSH bucket (H-bit signature) for cosine near-dup
     * candidate generation. */
   def hyperplaneBucket(emb: Column, dim: Int, bits: Int = 16): Column = {

@@ -18,10 +18,12 @@ object TextAnalysis {
     "es" -> Seq("el", "la", "los", "las", "que", "por", "con", "una"),
     "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "mit", "ein"))
 
-  /** Expression-level let binding: evaluate `x` once per row and expose it
-    * to `f` as a lambda variable (captured subtrees inside lambdas are
-    * otherwise re-evaluated per element/reference). */
-  private def bound(x: Column)(f: Column => Column): Column =
+  /** Expression-level let binding: evaluate `x` ONCE per row and expose it
+    * to `f` as a lambda variable. Higher-order-function lambdas re-evaluate
+    * any captured expression SUBTREE once per element (a lambda body
+    * holding `element_at(split(...), i)` re-splits the string for every i —
+    * quadratic); a lambda VARIABLE is a cheap slot read. */
+  private[graft] def bound(x: Column)(f: Column => Column): Column =
     element_at(transform(array(x), v => f(v)), 1)
 
   private def profileScore(toks: Column, words: Seq[String]): Column =

@@ -2,7 +2,6 @@ package graft.kg.eval
 
 import org.apache.commons.math3.distribution.{NormalDistribution, TDistribution}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Cross-domain density validation — the reference's
@@ -15,9 +14,9 @@ import org.apache.spark.sql.functions._
   * point-biserial correlations (:133-141), density-quartile accuracy with a
   * Q1-vs-Q4 two-proportion z-test (:144-185), and correct-vs-incorrect
   * Student t-tests with Cohen's d (:188-219). The SpaCy model is not in
-  * this container, so [[densityProxy]] is a DETERMINISTIC stand-in with the
-  * same shape ((entityish + relationish + clauseish) / tokens); the
-  * statistics — the operator's actual substance — are ported exactly
+  * this container, so the density in [[perDoc]] is a DETERMINISTIC
+  * stand-in with the same shape ((entityish + relationish + clauseish) /
+  * tokens); the statistics — the operator's actual substance — are ported exactly
   * (commons-math3 t/normal distributions, on the Spark classpath).
   *
   * Scale: correlations and group moments are distributed aggregates; only
@@ -38,13 +37,6 @@ object DensityValidation {
     when(t > 0, (e + t + c) / t).otherwise(lit(0.0))
   }
 
-  def densityProxy(text: Column): Column = {
-    // bind the token extraction once per row (lambda-variable let): the two
-    // size() references are slot reads, not two regex passes
-    val toksE = regexp_extract_all(lower(text), lit("[a-z0-9]+"), lit(0))
-    element_at(transform(array(toksE), toks => densityFromToks(toks, text)), 1)
-  }
-
   /** Per-doc table (id, density, tokens, accuracy): accuracy is the binary
     * agreement between the language-ID operator's prediction and the table
     * label — the engine's own prediction-vs-gold bit, standing in for the
@@ -59,23 +51,6 @@ object DensityValidation {
         size(col("_toks_")).as("tokens"),
         (graft.data.TextAnalysis.langId(col("_text_")) === col("_lang_"))
           .cast("int").as("accuracy"))
-
-  /** LEGACY/test shape: ntile(4) over a global (density, id) ORDER BY
-    * window — a deterministic total order both engines reproduce exactly,
-    * but the window has no partition key, so every row funnels through one
-    * task ("No Partition Defined" warning). Kept for tests/comparison only;
-    * the benched + oracle-checked path is [[quantileBinTable]]. */
-  def quartileTable(df: DataFrame, idCol: String, textCol: String, langCol: String): DataFrame = {
-    val d = perDoc(df, idCol, textCol, langCol)
-    val w = Window.orderBy(col("density"), col(idCol))
-    d.withColumn("quartile", ntile(4).over(w))
-      .groupBy(col("quartile"))
-      .agg(count(lit(1)).as("n"),
-        round(avg(col("accuracy")), 4).as("accuracy"),
-        round(avg(col("density")), 6).as("mean_density"),
-        round(avg(col("tokens")), 4).as("mean_tokens"))
-      .orderBy(col("quartile"))
-  }
 
   /** Quantile edges via `percentile_approx` — ONE distributed aggregate (GK
     * sketch, relative rank error 1/accuracy), no sort, no window, no
@@ -101,7 +76,7 @@ object DensityValidation {
     * stateless digitize assignment, then one hash aggregation. The plan is
     * scan → partial agg (sketch) → scan → hash agg: no global window, no
     * driver-side value vector — the shape that survives a 100× scale-up.
-    * `quartile` is 1-based like the legacy ntile table. */
+    * `quartile` is 1-based (1 = lowest density). */
   def quantileBinTable(
       df: DataFrame, idCol: String, textCol: String, langCol: String,
       accuracy: Int = 1000000): DataFrame = {

@@ -1,5 +1,6 @@
 package graft.kg.query
 
+import graft.data.TextAnalysis.bound
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,14 +41,6 @@ object Retrieval {
 
   private def tokens(c: Column): Column =
     filter(split(lower(c), "\\W+"), t => length(t) > 0)
-
-  /** Expression-level let binding: evaluate `x` ONCE per row and expose it
-    * to `f` as a lambda variable. Higher-order-function lambdas re-evaluate
-    * any captured expression SUBTREE once per element (a lambda body
-    * holding `element_at(split(...), i)` re-splits the string for every i —
-    * quadratic); a lambda VARIABLE is a cheap slot read. */
-  private def bound(x: Column)(f: Column => Column): Column =
-    element_at(transform(array(x), v => f(v)), 1)
 
   /** Unigrams + adjacent bigrams (the reference TfidfVectorizer uses
     * ngram_range=(1,2), eval_retrieval_v2.py:653). */

@@ -1,5 +1,6 @@
 package graft.kg.table
 
+import graft.kg.pipeline.KgPipeline
 import graft.kg.query.GraphOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,8 +12,13 @@ import org.apache.spark.sql.functions._
   * Every per-conversation read filters on BOTH `bucket` (the partition
   * column, derived from conv_id) and `convId`, so the scan prunes to one
   * partition directory — O(1) in the number of buckets regardless of corpus
-  * size. */
-final class GraphStore(spark: SparkSession, root: String, nBuckets: Int = 32) {
+  * size. The bucket count is the one the root recorded when it was
+  * created. */
+final class GraphStore(spark: SparkSession, root: String) {
+
+  private val nBuckets: Int = new SnapshotStore(root).bucketCount.getOrElse(
+    throw new IllegalArgumentException(
+      s"$root records no bucket count: not a materialized table root"))
 
   private def table(name: String): DataFrame = Materializer.read(spark, root, name)
 
@@ -38,6 +44,5 @@ final class GraphStore(spark: SparkSession, root: String, nBuckets: Int = 32) {
       justificationSets(convId), removedNodeId)
 
   /** Corpus-wide tier histogram (checkpoint stats analog). */
-  def tierHistogram(): DataFrame =
-    table("summaries").groupBy(col("qualityTier")).count().orderBy(col("qualityTier"))
+  def tierHistogram(): DataFrame = KgPipeline.tierHistogram(table("summaries"))
 }

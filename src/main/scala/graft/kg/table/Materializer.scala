@@ -13,7 +13,10 @@ import org.apache.spark.sql.functions._
   * BEFORE the extraction shuffle (the reference's completed-cases skip,
   * run_iltur.py:581-623, lifted from case granularity to bucket granularity).
   * Because the bucket is a deterministic function of conv_id, re-running after
-  * a partial failure recomputes only missing buckets and is idempotent.
+  * a partial failure recomputes only missing buckets and is idempotent. The
+  * first run records `nBuckets` at the table root ([[SnapshotStore]]); a
+  * later run with another count is refused, since it would map committed
+  * conversations to uncommitted buckets and write them a second time.
   */
 object Materializer {
 
@@ -48,6 +51,10 @@ object Materializer {
       prePartitioned: Boolean = false): Report = {
 
     val store = new SnapshotStore(root)
+    val recorded = store.recordBucketCount(nBuckets)
+    require(recorded == nBuckets,
+      s"table root $root was created with $recorded buckets; resuming it with " +
+        s"nBuckets = $nBuckets would write committed conversations again")
     val done = store.completedBuckets
     val withBucket = transcripts.withColumn("bucket", bucketOf(col("conv_id"), nBuckets))
     val pending = resumeFilter(withBucket, done)

@@ -1,7 +1,7 @@
 package graft.kg.table
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
@@ -32,19 +32,55 @@ final case class Snapshot(
   * Layout:
   * {{{
   *   <root>/<table>/bucket=<n>/part-....parquet  -- data, partition-pruned reads
-  *   <root>/_graft_log/snapshot-<id>.json     -- atomic tmp+rename manifests
+  *   <root>/_graft_log/snapshot-<id>.json     -- create-if-absent manifests
+  *   <root>/_graft_layout.json                -- the root's bucket count
   * }}}
   *
   * Guarantees re-expressed from the reference's checkpoint protocol
-  * (run_iltur.py:581-740): atomic manifest writes (tmp + rename), corrupt
-  * manifests skipped on load (self-healing recovery), resume = the set
-  * difference of all buckets minus committed buckets. A real Iceberg catalog
-  * can replace this class behind the same method surface.
+  * (run_iltur.py:581-740): atomic manifest writes (tmp + hard link, which
+  * never replaces an existing manifest, so concurrent writers each land
+  * under their own id), corrupt manifests skipped on load (self-healing
+  * recovery), resume = the set difference of all buckets minus committed
+  * buckets. A real Iceberg catalog can replace this class behind the same
+  * method surface.
   */
 final class SnapshotStore(root: String) {
 
   private val mapper = new ObjectMapper()
   private def logDir: Path = Paths.get(root, "_graft_log")
+  // beside the log, not in it: losing the log loses lineage, not the layout
+  private def layoutFile: Path = Paths.get(root, "_graft_layout.json")
+
+  /** Write `bytes` to a uniquely named temp file beside `dst`, then publish
+    * it as `dst` with a hard link: `dst` appears complete or not at all, and
+    * an existing `dst` is never replaced. False when `dst` already exists. */
+  private def publish(dst: Path, bytes: Array[Byte]): Boolean = {
+    val tmp = dst.resolveSibling(s".${dst.getFileName}.${java.util.UUID.randomUUID}.tmp")
+    try {
+      Files.write(tmp, bytes)
+      Files.createLink(dst, tmp)
+      true
+    } catch {
+      case _: FileAlreadyExistsException => false
+    } finally Files.deleteIfExists(tmp)
+  }
+
+  /** The bucket count recorded for this root, if a run has created it. */
+  def bucketCount: Option[Int] =
+    if (!Files.exists(layoutFile)) None
+    else {
+      val n = mapper.readTree(new String(Files.readAllBytes(layoutFile), "UTF-8"))
+      require(n.has("buckets"), s"malformed layout record $layoutFile")
+      Some(n.get("buckets").asInt())
+    }
+
+  /** Record `n` as this root's bucket count unless one is recorded already;
+    * returns the recorded count (the first writer wins). */
+  def recordBucketCount(n: Int): Int = {
+    Files.createDirectories(Paths.get(root))
+    publish(layoutFile, s"""{"buckets":$n}""".getBytes("UTF-8"))
+    bucketCount.get
+  }
 
   def snapshots: Seq[Snapshot] = {
     if (!Files.isDirectory(logDir)) return Nil
@@ -73,20 +109,20 @@ final class SnapshotStore(root: String) {
     if (ids.isEmpty) 0L else ids.max + 1
   }
 
-  /** Atomically commit a snapshot covering `lineage.map(_.bucket)`. */
+  /** Atomically commit a snapshot covering `lineage.map(_.bucket)`. A writer
+    * that loses the race for an id retries under the next id and parent. */
+  @scala.annotation.tailrec
   def commit(lineage: Seq[BucketLineage]): Snapshot = {
     Files.createDirectories(logDir)
+    val id = nextId
     val snap = Snapshot(
-      id = nextId,
-      parentId = snapshots.lastOption.map(_.id).getOrElse(-1L),
+      id = id,
+      parentId = snapshots.filter(_.id < id).lastOption.map(_.id).getOrElse(-1L),
       buckets = lineage.map(_.bucket),
       lineage = lineage,
       committedAt = java.time.Instant.now().toString)
-    val tmp = logDir.resolve(s".snapshot-${snap.id}.json.tmp")
-    val dst = logDir.resolve(s"snapshot-${snap.id}.json")
-    Files.write(tmp, renderSnapshot(snap).getBytes("UTF-8"))
-    Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-    snap
+    if (publish(logDir.resolve(s"snapshot-$id.json"), renderSnapshot(snap).getBytes("UTF-8"))) snap
+    else commit(lineage)
   }
 
   // --- JSON (hand-rolled via Jackson trees: no scala module needed) ---------

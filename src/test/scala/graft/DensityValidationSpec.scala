@@ -128,18 +128,6 @@ class DensityValidationSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("density proxy and quartile table are deterministic and total") {
-    val s = spark
-    import s.implicits._
-    val docs = (0 until 40)
-      .map(i => (i.toLong, s"alpha beta gamma${i % 7} delta. epsilon zeta " * (1 + i % 3), "en"))
-      .toDF("doc_id", "text", "lang")
-    val t1 = DensityValidation.quartileTable(docs, "doc_id", "text", "lang").collect()
-    val t2 = DensityValidation.quartileTable(docs.repartition(7), "doc_id", "text", "lang").collect()
-    assert(t1.map(_.toString).toSeq == t2.map(_.toString).toSeq)
-    assert(t1.map(_.getLong(1)).sum == 40)
-  }
-
   test("quantileBinTable: approx-quantile edges + stateless digitize, no global window") {
     val s = spark
     import s.implicits._
@@ -161,8 +149,8 @@ class DensityValidationSpec extends AnyFunSuite with BeforeAndAfterAll {
       .quantileBinTable(docs.repartition(7), "doc_id", "text", "lang").collect()
     assert(rows.map(_.toString).toSeq == rows2.map(_.toString).toSeq)
 
-    // the benched plan must be window-free (the legacy ntile table funnels
-    // every row through one task; this one must not)
+    // the benched plan must be window-free (an ntile window over a global
+    // order funnels every row through one task; this one must not)
     val plan = t.queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), plan)
 

@@ -5,7 +5,7 @@ import graft.kg.gen.TranscriptGen
 import graft.kg.model.Triple
 import graft.kg.ontology.Ontology
 import graft.kg.pipeline.KgPipeline
-import graft.kg.table.{BucketLineage, Materializer, SnapshotStore}
+import graft.kg.table.{BucketLineage, GraphStore, Materializer, Snapshot, SnapshotStore}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -152,6 +152,55 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // next commit continues past the corrupt id
     val snap = reread.commit(Seq(BucketLineage(1, "extract", 1, Map.empty, Map.empty, "h")))
     assert(snap.id == 2)
+  }
+
+  test("concurrent snapshot commits each land on disk under their own id") {
+    val writers = 8
+    for (round <- 0 until 10) {
+      val root = Files.createTempDirectory("graft_race").toString
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(writers)
+      val returned: Seq[(Int, Snapshot)] =
+        try {
+          val futures = (0 until writers).map { w =>
+            pool.submit(new java.util.concurrent.Callable[Snapshot] {
+              def call(): Snapshot = {
+                start.await()
+                new SnapshotStore(root).commit(
+                  Seq(BucketLineage(w, "extract", w.toLong, Map.empty, Map.empty, s"w$w")))
+              }
+            })
+          }
+          start.countDown()
+          (0 until writers).map(w => w -> futures(w).get())
+        } finally pool.shutdown()
+      val ids = returned.map(_._2.id)
+      assert(ids.distinct.size == writers, s"round $round: ids $ids")
+      val onDisk = new SnapshotStore(root).snapshots.map(s => s.id -> s).toMap
+      assert(onDisk.size == writers, s"round $round: ${onDisk.keys.toList.sorted} on disk")
+      for ((w, snap) <- returned) {
+        assert(onDisk(snap.id).buckets == Seq(w), s"round $round: snapshot ${snap.id}")
+        assert(onDisk(snap.id).lineage == snap.lineage, s"round $round: snapshot ${snap.id}")
+        assert(snap.parentId < snap.id)
+      }
+    }
+  }
+
+  test("resuming a table root with a different bucket count is refused") {
+    val root = Files.createTempDirectory("graft_rebucket").toString
+    val df = transcriptsDF(40)
+    Materializer.run(spark, df, root, nBuckets = 4)
+    def rows(t: String) = Materializer.read(spark, root, t).count()
+    val (summaries, triples) = (rows("summaries"), rows("triples"))
+    assert(summaries == 40)
+    val ex = intercept[IllegalArgumentException] {
+      Materializer.run(spark, df, root, nBuckets = 8)
+    }
+    assert(ex.getMessage.contains("created with 4 buckets"), ex.getMessage)
+    // nothing was written again, and the same count still resumes
+    assert(rows("summaries") == summaries && rows("triples") == triples)
+    assert(new SnapshotStore(root).completedBuckets == (0 until 4).toSet)
+    assert(Materializer.run(spark, df, root, nBuckets = 4).bucketsCommitted.isEmpty)
   }
 
   test("connected components: min-label over a small graph") {
@@ -411,7 +460,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("GraphStore point lookups prune to one bucket partition") {
     val root = Files.createTempDirectory("graft_store").toString
     Materializer.run(spark, transcriptsDF(40), root, nBuckets = 8)
-    val store = new graft.kg.table.GraphStore(spark, root, nBuckets = 8)
+    val store = new graft.kg.table.GraphStore(spark, root)
     val convId = "conv_000005"
     val n = store.nodes(convId)
     assert(n.count() > 0)
@@ -427,6 +476,21 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // removing the holding itself breaks nothing upstream (it IS the target)
     assert(store.counterfactual(convId, "f1").columns.toSeq ==
       Seq("conv_id", "holding_id"))
+  }
+
+  test("GraphStore finds every conversation with the bucket count the root recorded") {
+    val root = Files.createTempDirectory("graft_store_layout").toString
+    Materializer.run(spark, transcriptsDF(40), root, nBuckets = 4)
+    val store = new GraphStore(spark, root)
+    val convIds = Materializer.read(spark, root, "summaries")
+      .select("convId").collect().map(_.getString(0)).sorted
+    assert(convIds.length == 40)
+    val missed = convIds.filter(c => store.summary(c).count() != 1)
+    assert(missed.isEmpty, s"${missed.length} of 40 conversations not found")
+    // a directory that no run created has no bucket count to read
+    val empty = Files.createTempDirectory("graft_store_none").toString
+    assert(intercept[IllegalArgumentException](new GraphStore(spark, empty))
+      .getMessage.contains("no bucket count"))
   }
 
   test("graphsOf(allTablesDirect) equals the extractor's graphs, warnings included") {
