@@ -51,13 +51,27 @@ object Main {
       |  demo               [--convs 50] [--turns 14]
       |  plans              --output <dir> --suffix <s> --names a,b,... [--sf <dir>]""".stripMargin
 
-  private val commands = Set(
-    "materialize", "canonical-triples", "entity-stats", "stream", "demo", "plans")
+  /** Each command and the options it reads. */
+  private val commands: Map[String, Set[String]] = Map(
+    "materialize" -> Set("input", "output", "buckets", "jurisdiction"),
+    "canonical-triples" -> Set("input", "output", "jurisdiction"),
+    "entity-stats" -> Set("input", "output", "jurisdiction"),
+    "stream" -> Set("input", "output", "checkpoint", "gap-minutes", "jurisdiction", "once"),
+    "demo" -> Set("convs", "turns"),
+    "plans" -> Set("output", "suffix", "names", "sf"))
 
-  private def parseArgs(args: Array[String]): (String, Map[String, String]) = {
-    require(args.nonEmpty && commands(args.head), usage)
-    val opts = args.tail.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
+  /** The command and its `--key value` options. A dangling key, a key
+    * without `--` or one the command does not read fails with the usage:
+    * dropping it would run on a default the caller did not ask for. */
+  private[graft] def parseArgs(args: Array[String]): (String, Map[String, String]) = {
+    require(args.nonEmpty && commands.contains(args.head), usage)
+    val keys = commands(args.head)
+    val pairs = args.tail.grouped(2).toSeq
+    require(pairs.forall(_.length == 2), s"${args.head}: an option lacks its value\n$usage")
+    val opts = pairs.map { case Array(k, v) =>
+      require(k.startsWith("--") && keys(k.drop(2)),
+        s"${args.head}: unknown option $k\n$usage")
+      k.drop(2) -> v
     }.toMap
     (args.head, opts)
   }

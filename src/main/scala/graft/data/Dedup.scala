@@ -6,9 +6,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Large-scale deduplication operators over a documents table
-  * (id column + text column). Four families:
+  * (id column + text column). Three families (exact dedup is q03's own
+  * content-hash groupBy):
   *
-  *  - exact:       content-hash groupBy, canonical = min id.
   *  - minhash LSH: shingle → k-permutation minhash signature → banded LSH
   *    buckets → candidate pairs → exact n-gram Jaccard verify → connected
   *    components → canonical mapping. The signature is computed WITHOUT UDFs:
@@ -25,17 +25,6 @@ import org.apache.spark.sql.functions._
   * corpus-scale inputs; hot buckets (boilerplate shingles) are capped.
   */
 object Dedup {
-
-  /** Exact dedup: (id, canonical_id) for every row; canonical = min id of the
-    * identical-text group. */
-  def exact(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val h = md5(col(textCol))
-    val canon = df.groupBy(h.as("text_hash"))
-      .agg(min(col(idCol)).as("canonical_id"))
-    df.select(col(idCol), h.as("text_hash"))
-      .join(canon, "text_hash")
-      .select(col(idCol), col("canonical_id"))
-  }
 
   /** Word n-gram shingles as an array column (lowercased tokens). */
   def shingles(textCol: Column, n: Int = 3): Column =

@@ -302,9 +302,9 @@ object DocExtractor {
     var ok = startChar.isDefined && endChar.isDefined && 0 <= s && s < e && e <= docLen
     val repairQuote = quoteForAlignment.orElse(surfaceText)
     if (!ok) repairQuote.foreach { q =>
-      val rep = Normalize.alignQuote(doc.fullText, q)
-        .orElse(if (turkish) Normalize.alignQuoteTurkish(doc.fullText, q) else None)
-      rep.foreach { case (rs, re) => s = rs; e = re; ok = true }
+      Normalize.alignQuote(doc.fullText, q, turkish).foreach { case (rs, re) =>
+        s = rs; e = re; ok = true
+      }
     }
     if (!ok) return None
     var actual = doc.fullText.substring(s, e)

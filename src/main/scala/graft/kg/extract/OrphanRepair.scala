@@ -102,15 +102,6 @@ object OrphanRepair {
   def repairKeywords(text: String): Set[String] =
     Normalize.asciiKeywordSet(text, 4, RepairStops)
 
-  /** |a ∩ b| without building the intersection set — the candidate loop is
-    * O(orphans × candidates) pairs and this was a profiled hot spot. */
-  private def overlapCount(a: Set[String], b: Set[String]): Int = {
-    val (small, large) = if (a.size <= b.size) (a, b) else (b, a)
-    var n = 0
-    small.foreach(t => if (large.contains(t)) n += 1)
-    n
-  }
-
   /** Field-level legitimate-orphan predicate (is_legitimate_orphan,
     * repair_orphans.py:242-262) — public so the oracle harness can drive it
     * on planted field combinations. */
@@ -191,7 +182,7 @@ object OrphanRepair {
       forward: Boolean, rel: String): Option[(Double, String, String, String)] = {
     val src = if (forward) orphan.id else cand.id
     val tgt = if (forward) cand.id else orphan.id
-    val overlap = overlapCount(orphanKw, candKw)
+    val overlap = Normalize.overlap(orphanKw, candKw)
     if (overlap == 0) None
     else {
       var score = overlap.toDouble
@@ -202,7 +193,7 @@ object OrphanRepair {
         else if (d < 2000) score += 0.5
       }
       if (orphan.nodeType == "argument" && cand.nodeType == "issue" &&
-        overlapCount(claimKw(), candKw) >= 3) score += 1.5
+        Normalize.overlap(claimKw(), candKw) >= 3) score += 1.5
       if (orphan.nodeType == "fact" && cand.nodeType == "holding" &&
         orphan.courtFinding == "accepted") score += 1.0
       if (orphan.nodeType == "precedent" &&

@@ -79,7 +79,7 @@ object TranscriptStream {
     * with state bounded by the watermark (dropDuplicatesWithinWatermark —
     * duplicates arriving within the lateness window are suppressed; state
     * for old hashes is evicted, so a 100-TB/day stream does not accumulate
-    * unbounded hash state). The streaming face of Dedup.exact. */
+    * unbounded hash state). The streaming face of q03's exact dedup. */
   def dedupStream(
       docs: org.apache.spark.sql.DataFrame,
       idCol: String = "doc_id",

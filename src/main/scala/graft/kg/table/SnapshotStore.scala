@@ -43,13 +43,27 @@ final case class Snapshot(
   * recovery), resume = the set difference of all buckets minus committed
   * buckets. A real Iceberg catalog can replace this class behind the same
   * method surface.
+  *
+  * `root` is a plain local path or a `file:` URI, the two forms whose
+  * tables Spark writes to the same local directory. Any other scheme is
+  * refused at construction, before anything is written: the log goes
+  * through `java.nio`, which would put it on the driver's local disk apart
+  * from the tables (ROADMAP direction 6 moves it to the Hadoop FileSystem).
   */
 final class SnapshotStore(root: String) {
 
   private val mapper = new ObjectMapper()
-  private def logDir: Path = Paths.get(root, "_graft_log")
+  private val rootDir: Path =
+    Try(new java.net.URI(root)).toOption.flatMap(u => Option(u.getScheme).map(u -> _)) match {
+      case None => Paths.get(root).toAbsolutePath
+      case Some((u, "file")) => Paths.get(u)
+      case Some((_, scheme)) => throw new IllegalArgumentException(
+        s"table root $root: the snapshot log takes a local path or a file: URI, " +
+          s"not a $scheme: root (ROADMAP direction 6)")
+    }
+  private def logDir: Path = rootDir.resolve("_graft_log")
   // beside the log, not in it: losing the log loses lineage, not the layout
-  private def layoutFile: Path = Paths.get(root, "_graft_layout.json")
+  private def layoutFile: Path = rootDir.resolve("_graft_layout.json")
 
   /** Write `bytes` to a uniquely named temp file beside `dst`, then publish
     * it as `dst` with a hard link: `dst` appears complete or not at all, and
@@ -77,7 +91,7 @@ final class SnapshotStore(root: String) {
   /** Record `n` as this root's bucket count unless one is recorded already;
     * returns the recorded count (the first writer wins). */
   def recordBucketCount(n: Int): Int = {
-    Files.createDirectories(Paths.get(root))
+    Files.createDirectories(rootDir)
     publish(layoutFile, s"""{"buckets":$n}""".getBytes("UTF-8"))
     bucketCount.get
   }

@@ -53,7 +53,7 @@ object Normalize {
   }
 
   /** True iff every char is < 0x80 — the fast-path guard that lets the
-    * scanners below skip the full-string `toLowerCase` copy (ASCII lowering
+    * scanner below skip the full-string `toLowerCase` copy (ASCII lowering
     * is context-free, so per-char lowering is bit-identical; non-ASCII text
     * keeps the locale-correct full-string path). */
   private def isAscii(text: String): Boolean = {
@@ -79,7 +79,7 @@ object Normalize {
   }
 
   /** Per-thread token intern. Tokens are drawn from a small recurring
-    * vocabulary, so the scanners return ONE canonical String per distinct
+    * vocabulary, so the scanner returns ONE canonical String per distinct
     * token instead of a fresh substring per occurrence — token Strings were
     * the extractor's top allocation site, and the canonical copies carry a
     * cached hashCode for all the keyword-set operations downstream.
@@ -137,7 +137,7 @@ object Normalize {
     }
 
     /** Canonical lowered String for text[start, end). `preLowered` = the
-      * region is already lowercase (legacy non-ASCII path). */
+      * region is already lowercase (the non-ASCII path). */
     def get(text: String, start: Int, end: Int, preLowered: Boolean): String = {
       val h = hash(text, start, end, preLowered)
       var slot = h & mask
@@ -164,44 +164,6 @@ object Normalize {
   }
 
   private val Interned = ThreadLocal.withInitial[TokenIntern](() => new TokenIntern)
-
-  /** Unicode-aware word tokenization over case-folded text
-    * (extractor.py:1110-1116). Hand-rolled scanner equivalent to
-    * `(?U)\\w+` on the lowered text — tokenization is the engine's hottest
-    * scalar (scoring, clustering, repair, autofill all build keyword sets),
-    * and the regex version allocated a Match per token. ASCII input (the
-    * overwhelming case) skips the full-string lowercase copy. */
-  def tokenize(text: String): List[String] = {
-    if (text == null || text.isEmpty) return Nil
-    val tin = Interned.get()
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    if (isAscii(text)) {
-      var i = 0
-      val n = text.length
-      while (i < n) {
-        if (asciiWordChar(text.charAt(i))) {
-          val start = i
-          while (i < n && asciiWordChar(text.charAt(i))) i += 1
-          out += tin.get(text, start, i, preLowered = false)
-        } else i += 1
-      }
-    } else {
-      val low = text.toLowerCase(Locale.ROOT)
-      var i = 0
-      val n = low.length
-      while (i < n) {
-        val c = low.charAt(i)
-        if (Character.isLetterOrDigit(c) || c == '_') {
-          val start = i
-          while (i < n && {
-            val ch = low.charAt(i); Character.isLetterOrDigit(ch) || ch == '_'
-          }) i += 1
-          out += tin.get(low, start, i, preLowered = true)
-        } else i += 1
-      }
-    }
-    out.toList
-  }
 
   /** |a ∩ b| without allocating the intersection, counting at most `cap`
     * hits — the clustering/autofill/repair scorers only ever compare or cap
@@ -230,112 +192,52 @@ object Normalize {
     "que", "qui", "sont", "été", "pas", "ont", "cette", "ces", "mais", "aussi"
   )
 
-  /** Tokens of length ≥ 4 minus stopwords (extractor.py:1119-1121).
-    * Single-pass direct set build: no intermediate token list, no cons
-    * cells, and sub-minimum tokens are skipped BEFORE the substring copy
-    * (this is the engine's hottest set constructor). */
-  def keywordSet(text: String): Set[String] = tokenSet(text, 4, Stopwords)
-
-  /** Tokens of length ≥ `minLen` minus `stops`, built in one pass. */
-  def tokenSet(text: String, minLen: Int, stops: Set[String] = Set.empty): Set[String] = {
+  /** The one token scanner: the distinct word tokens of the lowered text
+    * with length ≥ `minLen` and not in `stops`, built in one pass. Words are
+    * `(?U)\\w+` runs when `unicodeWords` (extractor.py:1110-1116), else
+    * `[a-z0-9_]+` runs (the repair engine's tokenizer,
+    * repair_orphans.py:152-154). ASCII input, the overwhelming case, is
+    * scanned in place and lowered per char by the intern; any other input
+    * is lowered once with `Locale.ROOT` first. A ROOT-lowered string holds
+    * no `A`-`Z`, so `asciiWordChar` is exactly `[a-z0-9_]` on it, and chars
+    * that lower to ASCII word chars (the Kelvin sign) count. Sub-minimum
+    * tokens are skipped before any copy. */
+  private def scan(text: String, unicodeWords: Boolean, minLen: Int, stops: Set[String]): Set[String] = {
     if (text == null || text.isEmpty) return Set.empty
+    val ascii = isAscii(text)
+    val s = if (ascii) text else text.toLowerCase(Locale.ROOT)
+    val unicode = unicodeWords && !ascii
     val tin = Interned.get()
     val out = Set.newBuilder[String]
-    if (isAscii(text)) {
-      var i = 0
-      val n = text.length
-      while (i < n) {
-        if (asciiWordChar(text.charAt(i))) {
-          val start = i
-          while (i < n && asciiWordChar(text.charAt(i))) i += 1
-          if (i - start >= minLen) {
-            val t = tin.get(text, start, i, preLowered = false)
-            if (!stops.contains(t)) out += t
-          }
-        } else i += 1
-      }
-    } else {
-      val low = text.toLowerCase(Locale.ROOT)
-      var i = 0
-      val n = low.length
-      while (i < n) {
-        val c = low.charAt(i)
-        if (Character.isLetterOrDigit(c) || c == '_') {
-          val start = i
-          while (i < n && {
-            val ch = low.charAt(i); Character.isLetterOrDigit(ch) || ch == '_'
-          }) i += 1
-          if (i - start >= minLen) {
-            val t = tin.get(low, start, i, preLowered = true)
-            if (!stops.contains(t)) out += t
-          }
-        } else i += 1
+    val n = s.length
+    var i = 0
+    while (i < n) {
+      val start = i
+      while (i < n && {
+        val c = s.charAt(i)
+        if (unicode) Character.isLetterOrDigit(c) || c == '_' else asciiWordChar(c)
+      }) i += 1
+      if (i == start) i += 1
+      else if (i - start >= minLen) {
+        val t = tin.get(s, start, i, preLowered = !ascii)
+        if (!stops.contains(t)) out += t
       }
     }
     out.result()
   }
 
-  /** ASCII word tokens `[a-zA-Z0-9_]+` on the lowered text — the repair
-    * engine's tokenizer (repair_orphans.py:152-154), which is narrower than
-    * the extractor's unicode `\w+`. Note the lowered-text semantics: chars
-    * that LOWER to ASCII word chars (e.g. 'İ' in some mappings) count, so
-    * the fast path requires an all-ASCII input. */
-  def asciiTokenize(text: String): List[String] = {
-    if (text == null || text.isEmpty) return Nil
-    val tin = Interned.get()
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    if (isAscii(text)) {
-      var i = 0
-      val n = text.length
-      while (i < n) {
-        if (asciiWordChar(text.charAt(i))) {
-          val start = i
-          while (i < n && asciiWordChar(text.charAt(i))) i += 1
-          out += tin.get(text, start, i, preLowered = false)
-        } else i += 1
-      }
-    } else {
-      val low = text.toLowerCase(Locale.ROOT)
-      var i = 0
-      val n = low.length
-      def wordCh(c: Char): Boolean =
-        (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_'
-      while (i < n) {
-        if (wordCh(low.charAt(i))) {
-          val start = i
-          while (i < n && wordCh(low.charAt(i))) i += 1
-          out += tin.get(low, start, i, preLowered = true)
-        } else i += 1
-      }
-    }
-    out.toList
-  }
+  /** Tokens of length ≥ 4 minus stopwords (extractor.py:1119-1121); the
+    * engine's hottest set constructor. */
+  def keywordSet(text: String): Set[String] = scan(text, unicodeWords = true, 4, Stopwords)
 
-  /** ASCII tokens ≥ `minLen` minus `stops`, single-pass set build (the
-    * repair engine's keyword_set shape, repair_orphans.py:157-160). */
-  def asciiKeywordSet(text: String, minLen: Int, stops: Set[String]): Set[String] = {
-    if (text == null || text.isEmpty) return Set.empty
-    val tin = Interned.get()
-    val out = Set.newBuilder[String]
-    if (isAscii(text)) {
-      var i = 0
-      val n = text.length
-      while (i < n) {
-        if (asciiWordChar(text.charAt(i))) {
-          val start = i
-          while (i < n && asciiWordChar(text.charAt(i))) i += 1
-          if (i - start >= minLen) {
-            val t = tin.get(text, start, i, preLowered = false)
-            if (!stops.contains(t)) out += t
-          }
-        } else i += 1
-      }
-      out.result()
-    } else {
-      asciiTokenize(text).iterator
-        .filter(t => t.length >= minLen && !stops.contains(t)).toSet
-    }
-  }
+  /** Unicode word tokens of length ≥ `minLen` minus `stops`. */
+  def tokenSet(text: String, minLen: Int, stops: Set[String] = Set.empty): Set[String] =
+    scan(text, unicodeWords = true, minLen, stops)
+
+  /** ASCII word tokens ≥ `minLen` minus `stops` (the repair engine's
+    * keyword_set shape, repair_orphans.py:157-160). */
+  def asciiKeywordSet(text: String, minLen: Int, stops: Set[String]): Set[String] =
+    scan(text, unicodeWords = false, minLen, stops)
 
   /** Case-insensitive (optionally Turkish-folded) substring test (extractor.py:1124-1129). */
   def containsPhrase(haystack: String, phrase: String, turkish: Boolean = false): Boolean = {
@@ -352,56 +254,33 @@ object Normalize {
     NegativeCues.exists(t.contains)
   }
 
+  /** Case fold that keeps every char at its index: ROOT lowering, except
+    * that U+0130 (İ), the one char whose ROOT lowercase is two chars, folds
+    * to `i`. Positions found in the folded text are positions in `s`. */
+  private def caseFold(s: String): String = s.replace('\u0130', 'i').toLowerCase(Locale.ROOT)
+
   /** Find (start, end) offsets of a quoted snippet inside a document after
-    * whitespace normalization; exact then case-insensitive
-    * (extractor.py:792-846 `align_quote_to_span`).
+    * whitespace normalization (extractor.py:792-846 `align_quote_to_span`).
+    * Tries an exact match, then a case-insensitive one, then, when
+    * `turkish`, the Turkish fold; every fold keeps the normalized indices,
+    * so one offset map serves all three.
     */
-  def alignQuote(docText: String, quote: String): Option[(Int, Int)] = {
+  def alignQuote(docText: String, quote: String, turkish: Boolean = false): Option[(Int, Int)] = {
     if (quote == null) return None
     val q = quote.trim
     if (q.isEmpty) return None
     val (normDoc, docMap) = normalizeWithMapping(docText)
-    val (normQ, _) = normalizeWithMapping(q)
+    val normQ = normalizeWithMapping(q)._1
     var pos = normDoc.indexOf(normQ)
-    if (pos == -1)
-      pos = normDoc.toLowerCase(Locale.ROOT).indexOf(normQ.toLowerCase(Locale.ROOT))
+    if (pos == -1) pos = caseFold(normDoc).indexOf(caseFold(normQ))
+    if (pos == -1 && turkish) pos = turkishLower(normDoc).indexOf(turkishLower(normQ))
     if (pos == -1) return None
     val start = docMap(pos)
     val end = docMap(pos + normQ.length - 1) + 1
     if (start < 0 || end <= start || end > docText.length) None else Some((start, end))
   }
 
-  /** Turkish fallback for quote alignment (extractor.py:792-817). */
-  def alignQuoteTurkish(docText: String, quote: String): Option[(Int, Int)] = {
-    if (quote == null) return None
-    val q = quote.trim
-    if (q.isEmpty) return None
-    alignQuote(docText, q).orElse {
-      val (normDoc, docMap) = normalizeWithMapping(docText)
-      val (normQ, _) = normalizeWithMapping(q)
-      val pos = turkishLower(normDoc).indexOf(turkishLower(normQ))
-      if (pos == -1) None
-      else {
-        val start = docMap(pos)
-        val end = docMap(pos + normQ.length - 1) + 1
-        if (start < 0 || end <= start || end > docText.length) None else Some((start, end))
-      }
-    }
-  }
-
   private val HexChars = "0123456789abcdef".toCharArray
-
-  private def toHex(bytes: Array[Byte]): String = {
-    val out = new Array[Char](bytes.length * 2)
-    var i = 0
-    while (i < bytes.length) {
-      val b = bytes(i) & 0xff
-      out(i * 2) = HexChars(b >>> 4)
-      out(i * 2 + 1) = HexChars(b & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
 
   // one digest instance + output buffer per thread: getInstance allocates
   // provider wiring on every call, digests run once per node/edge/anchor

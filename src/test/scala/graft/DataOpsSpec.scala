@@ -22,13 +22,6 @@ class DataOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   import spark.implicits._
 
-  test("exact dedup maps duplicates to min id") {
-    val df = Seq((1L, "same text"), (2L, "same text"), (3L, "other")).toDF("doc_id", "text")
-    val m = Dedup.exact(df, "doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(m == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
-  }
-
   test("shingles produce sliding n-grams") {
     val out = Seq(Tuple1("a b c d")).toDF("text")
       .select(Dedup.shingles(col("text"), 3).as("sh"))

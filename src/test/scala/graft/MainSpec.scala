@@ -53,6 +53,21 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(text.contains(s"triples parquet written: $triples rows"), text)
   }
 
+  test("parseArgs rejects a dangling option, a key without --, and an option the command does not read") {
+    assert(Main.parseArgs(Array("materialize", "--input", "i", "--output", "o", "--buckets", "8")) ==
+      ("materialize", Map("input" -> "i", "output" -> "o", "buckets" -> "8")))
+    assert(Main.parseArgs(Array("demo")) == ("demo", Map.empty[String, String]))
+    for (bad <- Seq(
+        Seq("materialize", "--input", "i", "--output", "o", "--buckets"),
+        Seq("materialize", "--input", "i", "output", "o"),
+        Seq("materialize", "--input", "i", "--output", "o", "--bucket", "64"),
+        Seq("demo", "--jurisdiction", "tr"),
+        Seq("unknown-command"))) {
+      val ex = intercept[IllegalArgumentException](Main.parseArgs(bad.toArray))
+      assert(ex.getMessage.contains("usage: graft.Main"), bad.mkString(" "))
+    }
+  }
+
   test("graft.Main, Bench, Verify and GoldenGen are the only mains in src/main/scala") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root: $root missing")

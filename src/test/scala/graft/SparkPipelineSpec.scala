@@ -493,6 +493,24 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getMessage.contains("no bucket count"))
   }
 
+  test("a file: URI table root keeps its snapshot log beside its tables") {
+    val tmp = Files.createTempDirectory("graft_uri_root")
+    Materializer.run(spark, transcriptsDF(20), "file://" + tmp, nBuckets = 4)
+    assert(Files.isDirectory(tmp.resolve("_graft_log")))
+    assert(Files.isRegularFile(tmp.resolve("_graft_layout.json")))
+    val store = new GraphStore(spark, tmp.toString)
+    val convIds = Materializer.read(spark, tmp.toString, "summaries")
+      .select("convId").collect().map(_.getString(0))
+    assert(convIds.length == 20)
+    assert(convIds.forall(c => store.summary(c).count() == 1))
+    // a scheme the log cannot reach is refused before anything is written
+    val ex = intercept[IllegalArgumentException] {
+      Materializer.run(spark, transcriptsDF(20), "s3a://b/x", nBuckets = 4)
+    }
+    assert(ex.getMessage.contains("direction 6"), ex.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get("s3a:")))
+  }
+
   test("graphsOf(allTablesDirect) equals the extractor's graphs, warnings included") {
     // the MatRow union is the one full-extraction representation: it must
     // encode every ConvGraph field, in order, so re-assembly is lossless

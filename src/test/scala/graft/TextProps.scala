@@ -52,14 +52,14 @@ object TextProps extends Properties("graft.text") {
   property("tokenize equals the regex spec (?U)\\w+ on lowered text") = {
     val re = "(?U)\\w+".r
     Prop.forAll(docGen) { doc =>
-      Normalize.tokenize(doc) ==
-        re.findAllIn(doc.toLowerCase(java.util.Locale.ROOT)).toList
+      Normalize.tokenSet(doc, 1) ==
+        re.findAllIn(doc.toLowerCase(java.util.Locale.ROOT)).toSet
     }
   }
 
   property("keywordSet is a subset of tokens, all length >= 4, no stopwords") =
     Prop.forAll(docGen) { doc =>
-      val toks = Normalize.tokenize(doc).toSet
+      val toks = Normalize.tokenSet(doc, 1)
       val kw = Normalize.keywordSet(doc)
       kw.subsetOf(toks) && kw.forall(t => t.length >= 4 && !Normalize.Stopwords(t))
     }
@@ -170,8 +170,13 @@ object TextProps extends Properties("graft.text") {
     out.toList
   }
 
+  private val stopsGen = Gen.oneOf(Set.empty[String], Normalize.Stopwords)
+
   property("tokenize matches the full-lowercase reference scan") =
-    Prop.forAll(mixedGen)(s => Normalize.tokenize(s) == legacyTokenize(s))
+    Prop.forAll(mixedGen, Gen.chooseNum(1, 5), stopsGen) { (s, k, stops) =>
+      Normalize.tokenSet(s, k, stops) ==
+        legacyTokenize(s).filter(t => t.length >= k && !stops.contains(t)).toSet
+    }
 
   property("keywordSet/tokenSet match the tokenize-filter formulas") =
     Prop.forAll(mixedGen) { s =>
@@ -180,12 +185,24 @@ object TextProps extends Properties("graft.text") {
       Normalize.tokenSet(s, 3) == legacyTokenize(s).filter(_.length >= 3).toSet
     }
 
-  property("asciiTokenize/asciiKeywordSet match the ascii reference scan") =
-    Prop.forAll(mixedGen) { s =>
-      Normalize.asciiTokenize(s) == legacyAsciiTokenize(s) &&
-      Normalize.asciiKeywordSet(s, 4, Normalize.Stopwords) ==
-        legacyAsciiTokenize(s).iterator
-          .filter(t => t.length >= 4 && !Normalize.Stopwords.contains(t)).toSet
+  property("asciiKeywordSet matches the ascii reference scan") =
+    Prop.forAll(mixedGen, Gen.chooseNum(1, 5), stopsGen) { (s, k, stops) =>
+      Normalize.asciiKeywordSet(s, k, stops) ==
+        legacyAsciiTokenize(s).filter(t => t.length >= k && !stops.contains(t)).toSet
+    }
+
+  property("alignQuote recovers an upper-cased interior substring of mixed text") =
+    Prop.forAll(mixedGen, Gen.chooseNum(0, 30), Gen.chooseNum(1, 20)) { (doc, off, len) =>
+      val a = math.min(off, math.max(0, doc.length - 2))
+      val b = math.min(a + len, doc.length)
+      // per-char upper-casing keeps the length ('ß' stays 'ß')
+      val q = doc.substring(a, b).map(Character.toUpperCase)
+      q.trim.isEmpty || {
+        Normalize.alignQuote(doc, q).exists { case (s, e) =>
+          Normalize.normalizeWithMapping(doc.substring(s, e))._1
+            .equalsIgnoreCase(Normalize.normalizeWithMapping(q.trim)._1)
+        }
+      }
     }
 
   property("overlap equals intersect size, with and without cap") =

@@ -23,6 +23,18 @@ class TextSpec extends AnyFunSuite {
     assert(doc.substring(s, e) == "Natural Justice")
   }
 
+  // ROOT-lowering U+0130 (İ) yields two chars; the case fold must not shift
+  // the indices it finds
+  test("alignQuote's case-insensitive fallback does not overrun after İ") {
+    assert(Normalize.alignQuote("İİİ abc", "ABC") == Some((4, 7)))
+  }
+
+  test("alignQuote's case-insensitive fallback keeps offsets after İ") {
+    val doc = "İstanbul mahkemesi karar verdi"
+    assert(Normalize.alignQuote(doc, "KARAR") == Some((19, 24)))
+    assert(doc.substring(19, 24) == "karar")
+  }
+
   test("alignQuote property: recovers any substring modulo whitespace") {
     // deterministic property sweep (hash-derived docs, no RNG state)
     val base = "The disciplinary  authority passed\tan order terminating services without a hearing.\nThe petitioner filed a writ."
