@@ -2,6 +2,7 @@ package graft
 
 import graft.kg.canonical.Canonicalizer
 import graft.kg.gen.TranscriptGen
+import graft.kg.ontology.Jurisdiction
 import graft.kg.pipeline.KgPipeline
 import graft.kg.streaming.TranscriptStream
 import graft.kg.table.{Materializer, SnapshotStore}
@@ -19,14 +20,14 @@ import org.apache.spark.sql.types._
   * {{{
   * spark-submit --class graft.Main <jar> materialize \
   *   --input <transcripts parquet/iceberg path> --output <table root> \
-  *   [--buckets 512] [--jurisdiction in]
+  *   [--buckets 512] [--jurisdiction in|echr|tr]
   * spark-submit --class graft.Main <jar> canonical-triples \
-  *   --input <transcripts path> --output <parquet out> [--jurisdiction in]
+  *   --input <transcripts path> --output <parquet out> [--jurisdiction in|echr|tr]
   * spark-submit --class graft.Main <jar> entity-stats \
-  *   --input <transcripts path> --output <parquet out> [--jurisdiction in]
+  *   --input <transcripts path> --output <parquet out> [--jurisdiction in|echr|tr]
   * spark-submit --class graft.Main <jar> stream \
   *   --input <transcripts dir> --output <parquet sink> --checkpoint <dir> \
-  *   [--gap-minutes 30] [--jurisdiction in] [--once true]
+  *   [--gap-minutes 30] [--jurisdiction in|echr|tr] [--once true|false]
   * sbt "runMain graft.Main demo --convs 50 --turns 14"
   * sbt "runMain graft.Main plans --output <dir> --suffix <s> --names a,b [--sf <dir>]"
   * }}}
@@ -37,7 +38,9 @@ import org.apache.spark.sql.types._
   * buckets missing from the snapshot log, with the bucket count the root
   * recorded when it was created (`--buckets` sizes a new root only).
   * `stream` resumes exactly-once from its checkpoint; `--once true` stops
-  * when it has caught up.
+  * when it has caught up. `--jurisdiction` defaults to `in` and also takes
+  * the spellings `india`, `eu` and `turkey`, in any case (see
+  * [[graft.kg.ontology.Jurisdiction.parse]]).
   */
 object Main {
 
@@ -47,7 +50,7 @@ object Main {
       |  canonical-triples  --input <path> --output <path> [--jurisdiction in|echr|tr]
       |  entity-stats       --input <path> --output <path> [--jurisdiction in|echr|tr]
       |  stream             --input <dir> --output <dir> --checkpoint <dir>
-      |                     [--gap-minutes 30] [--jurisdiction in] [--once true]
+      |                     [--gap-minutes 30] [--jurisdiction in|echr|tr] [--once true|false]
       |  demo               [--convs 50] [--turns 14]
       |  plans              --output <dir> --suffix <s> --names a,b,... [--sf <dir>]""".stripMargin
 
@@ -60,9 +63,12 @@ object Main {
     "demo" -> Set("convs", "turns"),
     "plans" -> Set("output", "suffix", "names", "sf"))
 
-  /** The command and its `--key value` options. A dangling key, a key
-    * without `--` or one the command does not read fails with the usage:
-    * dropping it would run on a default the caller did not ask for. */
+  /** The command and its `--key value` options, with `--jurisdiction` as
+    * its canonical code. A dangling key, a key without `--`, one the command
+    * does not read, a jurisdiction [[Jurisdiction.parse]] does not accept
+    * and an `--once` other than `true`/`false` fail with the usage, before
+    * any session starts: dropping or misreading the value would run on a
+    * default the caller did not ask for. */
   private[graft] def parseArgs(args: Array[String]): (String, Map[String, String]) = {
     require(args.nonEmpty && commands.contains(args.head), usage)
     val keys = commands(args.head)
@@ -73,7 +79,14 @@ object Main {
         s"${args.head}: unknown option $k\n$usage")
       k.drop(2) -> v
     }.toMap
-    (args.head, opts)
+    opts.get("once").foreach(v =>
+      require(v == "true" || v == "false", s"${args.head}: --once takes true or false, not $v\n$usage"))
+    val jurisdiction = opts.get("jurisdiction").map { j =>
+      try Jurisdiction.parse(j).code
+      catch { case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"${args.head}: ${e.getMessage}\n$usage") }
+    }
+    (args.head, opts ++ jurisdiction.map("jurisdiction" -> _))
   }
 
   def main(args: Array[String]): Unit = {
@@ -100,7 +113,8 @@ object Main {
     spark
   }
 
-  /** Run one command on `spark`; each command checks its own options. */
+  /** Run one command on `spark` with the options `parseArgs` returned;
+    * each command checks its own options. */
   def run(spark: SparkSession, cmd: String, opts: Map[String, String]): Unit = {
     def need(key: String): String =
       opts.getOrElse(key, sys.error(s"$cmd: missing --$key\n$usage"))

@@ -1,7 +1,7 @@
 package graft.kg.extract
 
 import graft.kg.model._
-import graft.kg.ontology.{ConceptDef, Ontology, OntologyData, SignalPattern}
+import graft.kg.ontology.{ConceptDef, Jurisdiction, Ontology, OntologyData, SignalPattern}
 import graft.kg.rules.{CitationHit, Citations, Relations}
 import graft.kg.text.{Normalize, SegmentedDoc, Segmenter, TextSegment}
 
@@ -342,7 +342,7 @@ object DocExtractor {
       jurisdiction: String = "in",
       repairOrphans: Boolean = true): ConvGraph = {
 
-    val turkish = jurisdiction == "tr" || jurisdiction == "turkey"
+    val turkish = Jurisdiction.parse(jurisdiction) == Jurisdiction.Turkey
     val fullText = assemble(turns)
     val docId = Normalize.docId(fullText)
     val doc = Segmenter.segment(fullText, docId)

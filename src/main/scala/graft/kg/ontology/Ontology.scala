@@ -309,11 +309,12 @@ object Ontology {
   /** Turkish ontology (turkish_legal_ontology_cleaned.json shape). */
   lazy val turkish: OntologyData = loadResource("/graft/ontology_tr.json")
 
-  /** Jurisdiction → its compiled ontology (extractor.py jurisdiction knob). */
-  def forJurisdiction(j: String): OntologyData = j.toLowerCase.trim match {
-    case "echr" | "eu"   => echr
-    case "tr" | "turkey" => turkish
-    case _               => default
+  /** Jurisdiction → its compiled ontology (extractor.py jurisdiction knob);
+    * throws on a spelling [[Jurisdiction.parse]] does not accept. */
+  def forJurisdiction(j: String): OntologyData = Jurisdiction.parse(j) match {
+    case Jurisdiction.India  => default
+    case Jurisdiction.Echr   => echr
+    case Jurisdiction.Turkey => turkish
   }
 
   /** Weighted relevance score between node text and a concept definition

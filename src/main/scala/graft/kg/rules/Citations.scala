@@ -1,5 +1,6 @@
 package graft.kg.rules
 
+import graft.kg.ontology.Jurisdiction
 import java.util.regex.Pattern
 import scala.collection.mutable.ArrayBuffer
 
@@ -67,12 +68,13 @@ object Citations {
     TrDanistay -> "tr_danistay", TrBasvuru -> "tr_basvuru", TrRg -> "tr_resmi_gazete",
     TrKanun -> "tr_kanun", TrEsas -> "tr_esas", TrKarar -> "tr_karar")
 
+  /** The jurisdiction's citation grammar; throws on a spelling
+    * [[Jurisdiction.parse]] does not accept. */
   def patternsFor(jurisdiction: String): List[(Pattern, String)] =
-    jurisdiction.toLowerCase.trim match {
-      case "in" | "india"  => IndianPatterns
-      case "echr"          => EchrPatterns
-      case "tr" | "turkey" => TurkishPatterns
-      case _               => Nil
+    Jurisdiction.parse(jurisdiction) match {
+      case Jurisdiction.India  => IndianPatterns
+      case Jurisdiction.Echr   => EchrPatterns
+      case Jurisdiction.Turkey => TurkishPatterns
     }
 
   private val YearRe = Pattern.compile("""\b((?:19|20)\d{2})\b""")
@@ -255,36 +257,34 @@ object Citations {
   }
 
   /** Scan text for citation hits with offsets, then dedupe overlapping spans
-    * keeping the longest (sort by (start, -len), greedy sweep). */
+    * keeping the longest (sort by (start, -len), greedy sweep). Throws on a
+    * jurisdiction spelling [[Jurisdiction.parse]] does not accept, whatever
+    * the text. */
   def extract(text: String, jurisdiction: String): List[CitationHit] = {
-    val pats = patternsFor(jurisdiction)
-    if (text == null || text.isEmpty || pats.isEmpty) return Nil
-    // ECHR has digit-free patterns (Name v. Name) → full scan; IN patterns
-    // all contain a literal anchor → anchor-window region scan; TR scans
-    // digit windows PLUS court-stem windows (Yargıtay/Danıştay mentions are
-    // digit-free — digit windows alone miss them, see turkishCourtWindows)
-    val j = jurisdiction.toLowerCase.trim
-    if (j == "echr") extractFull(text, pats)
-    else if (j == "in" || j == "india") {
-      val raw = ArrayBuffer.empty[CitationHit]
-      for ((ws, we, mask) <- indianAnchorWindows(text))
-        extractRegion(text, ws, we, pats, mask, raw)
-      dedupeOverlapping(raw.toList)
-    } else {
-      val raw = ArrayBuffer.empty[CitationHit]
-      val seen = scala.collection.mutable.Set.empty[(Int, Int, String)]
-      // TR adds court-stem windows: Yargıtay/Danıştay mentions are the only
-      // TR patterns that can match with NO digit in the text
-      val windows =
-        if (j == "tr" || j == "turkey")
-          mergeSpans(digitWindows(text) ++ turkishCourtWindows(text))
-        else digitWindows(text)
-      for ((ws, we) <- windows; hit <- extractFull(text.substring(ws, we), pats)) {
-        val shifted = hit.copy(startChar = hit.startChar + ws, endChar = hit.endChar + ws)
-        val key = (shifted.startChar, shifted.endChar, shifted.citationType)
-        if (!seen.contains(key)) { seen += key; raw += shifted }
-      }
-      dedupeOverlapping(raw.toList)
+    val j = Jurisdiction.parse(jurisdiction)
+    if (text == null || text.isEmpty) return Nil
+    j match {
+      // ECHR has digit-free patterns (Name v. Name) → full scan
+      case Jurisdiction.Echr => extractFull(text, EchrPatterns)
+      // every IN pattern contains a literal anchor → anchor-window region scan
+      case Jurisdiction.India =>
+        val raw = ArrayBuffer.empty[CitationHit]
+        for ((ws, we, mask) <- indianAnchorWindows(text))
+          extractRegion(text, ws, we, IndianPatterns, mask, raw)
+        dedupeOverlapping(raw.toList)
+      // TR scans digit windows PLUS court-stem windows: Yargıtay/Danıştay
+      // mentions are the only TR patterns that can match with NO digit in
+      // the text (see turkishCourtWindows)
+      case Jurisdiction.Turkey =>
+        val raw = ArrayBuffer.empty[CitationHit]
+        val seen = scala.collection.mutable.Set.empty[(Int, Int, String)]
+        val windows = mergeSpans(digitWindows(text) ++ turkishCourtWindows(text))
+        for ((ws, we) <- windows; hit <- extractFull(text.substring(ws, we), TurkishPatterns)) {
+          val shifted = hit.copy(startChar = hit.startChar + ws, endChar = hit.endChar + ws)
+          val key = (shifted.startChar, shifted.endChar, shifted.citationType)
+          if (!seen.contains(key)) { seen += key; raw += shifted }
+        }
+        dedupeOverlapping(raw.toList)
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.kg.text
 
+import graft.kg.ontology.Jurisdiction
 import java.util.regex.Pattern
 
 /** Document-window selection (P5): head truncation for most passes, and the
@@ -47,7 +48,7 @@ object DocWindow {
     * tail; everything else head-truncates (extractor.py:224-234). */
   def selectWindow(fullText: String, maxChars: Int,
                    jurisdiction: String, passName: String): String = {
-    val tr = jurisdiction == "tr" || jurisdiction == "turkey"
+    val tr = Jurisdiction.parse(jurisdiction) == Jurisdiction.Turkey
     if (tr && (passName == "outcome" || passName == "holdings"))
       aymOperativeWindow(fullText, maxChars)
     else fullText.take(maxChars)

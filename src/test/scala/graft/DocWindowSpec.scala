@@ -39,6 +39,7 @@ class DocWindowSpec extends AnyFunSuite {
     val text = "A" * 100 + "HÜKÜM son"
     assert(DocWindow.selectWindow(text, 50, "in", "outcome") == "A" * 50)
     assert(DocWindow.selectWindow(text, 50, "tr", "facts") == "A" * 50)
-    assert(DocWindow.selectWindow(text, 50, "tr", "outcome").startsWith("HÜKÜM"))
+    for (j <- Seq("tr", "TR"))
+      assert(DocWindow.selectWindow(text, 50, j, "outcome").startsWith("HÜKÜM"), j)
   }
 }

@@ -1,8 +1,11 @@
 package graft
 
 import graft.kg.extract.DocExtractor
-import graft.kg.ontology.Ontology
+import graft.kg.gen.TranscriptGen
+import graft.kg.ontology.{Jurisdiction, Ontology}
+import graft.kg.rules.Citations
 import org.scalatest.funsuite.AnyFunSuite
+import java.util.Locale
 
 /** The ECHR and Turkish fixture conversations (turn index → text), shared
   * with the Spark-path jurisdiction test in SparkPipelineSpec. */
@@ -52,6 +55,45 @@ class JurisdictionSpec extends AnyFunSuite {
     assert(Ontology.forJurisdiction("echr").concepts.size == 55)
     assert(Ontology.forJurisdiction("turkey").concepts.size == 77)
     assert(Ontology.forJurisdiction("in").concepts.size == 54)
+  }
+
+  test("every spelling of a jurisdiction runs the same rules") {
+    def graph(turns: Seq[(Int, String)], j: String) =
+      DocExtractor.extract("c", turns, Ontology.forJurisdiction(j), j)
+    // an upper-case key phrase that only the Turkish fold matches
+    val trFold = JurisdictionSpec.trTurns :+
+      (5 -> "Mahkeme KAMULAŞTIRMA konusunu değerlendirmiştir.")
+    val inTurns = TranscriptGen.conversation("conv_000001", 14).map(t => (t.turn_idx, t.text))
+    val differing = for {
+      (turns, spellings) <- Seq(
+        trFold -> Seq("tr", "TR", "Turkey", " tr "),
+        JurisdictionSpec.echrTurns -> Seq("echr", "eu", "ECHR"),
+        inTurns -> Seq("in", "IN", "India"))
+      expected = graph(turns, spellings.head)
+      j <- spellings.tail if graph(turns, j) != expected
+    } yield s"'$j'"
+    // a Turkish default locale lowers "IN" to "ın"; the spelling is read
+    // under Locale.ROOT
+    val saved = Locale.getDefault
+    val inUnderTr =
+      try {
+        Locale.setDefault(Locale.forLanguageTag("tr"))
+        graph(inTurns, "IN") == graph(inTurns, "in")
+      } finally Locale.setDefault(saved)
+    assert(differing.isEmpty && inUnderTr,
+      s"differ from the canonical spelling: ${differing.mkString(", ")}; " +
+        s"'IN' under a Turkish default locale equals 'in': $inUnderTr")
+    assert(graph(trFold, "tr").nodes.exists(_.conceptId == "DOCTRINE_EXPROPRIATION"))
+  }
+
+  test("a jurisdiction outside in|india, echr|eu, tr|turkey is refused") {
+    for (bad <- Seq("xx", "", null)) {
+      intercept[IllegalArgumentException](Jurisdiction.parse(bad))
+      intercept[IllegalArgumentException](Ontology.forJurisdiction(bad))
+      intercept[IllegalArgumentException](Citations.extract("AIR 1978 SC 597", bad))
+    }
+    assert(Seq("in", "India", "EU", " Turkey ").map(Jurisdiction.parse(_).code) ==
+      Seq("in", "in", "echr", "tr"))
   }
 
   test("turkish fold applies in concept phrase matching") {

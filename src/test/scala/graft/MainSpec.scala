@@ -57,11 +57,18 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Main.parseArgs(Array("materialize", "--input", "i", "--output", "o", "--buckets", "8")) ==
       ("materialize", Map("input" -> "i", "output" -> "o", "buckets" -> "8")))
     assert(Main.parseArgs(Array("demo")) == ("demo", Map.empty[String, String]))
+    // the jurisdiction comes back as its canonical code
+    assert(Main.parseArgs(Array("entity-stats", "--input", "i", "--output", "o",
+      "--jurisdiction", "Turkey"))._2("jurisdiction") == "tr")
+    val stream = Seq("stream", "--input", "i", "--output", "o", "--checkpoint", "c")
     for (bad <- Seq(
         Seq("materialize", "--input", "i", "--output", "o", "--buckets"),
         Seq("materialize", "--input", "i", "output", "o"),
         Seq("materialize", "--input", "i", "--output", "o", "--bucket", "64"),
         Seq("demo", "--jurisdiction", "tr"),
+        stream ++ Seq("--once", "yes"),
+        stream ++ Seq("--once", "1"),
+        Seq("materialize", "--input", "i", "--output", "o", "--jurisdiction", "xx"),
         Seq("unknown-command"))) {
       val ex = intercept[IllegalArgumentException](Main.parseArgs(bad.toArray))
       assert(ex.getMessage.contains("usage: graft.Main"), bad.mkString(" "))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -201,6 +201,42 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows("summaries") == summaries && rows("triples") == triples)
     assert(new SnapshotStore(root).completedBuckets == (0 until 4).toSet)
     assert(Materializer.run(spark, df, root, nBuckets = 4).bucketsCommitted.isEmpty)
+  }
+
+  test("a materialize that crashed between its table writes and its commit resumes to the clean result") {
+    import scala.jdk.CollectionConverters._
+    val df = transcriptsDF(60)
+    val clean = Files.createTempDirectory("graft_clean").toString
+    val crashed = Files.createTempDirectory("graft_crashed").toString
+    Materializer.run(spark, df, clean, nBuckets = 8)
+    Materializer.run(spark, df, crashed, nBuckets = 8)
+    // the crash, after 3 of the 8 table writes: no snapshot was committed,
+    // five tables were never written, one bucket of a written table is lost
+    // and one part file was written twice. The bucket count stays recorded:
+    // it is written before any table.
+    def rm(p: java.nio.file.Path): Unit =
+      Files.walk(p).sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+    rm(Paths.get(crashed, "_graft_log"))
+    for (t <- Seq("justification_sets", "chains", "cluster_members", "requirements", "summaries"))
+      rm(Paths.get(crashed, t))
+    rm(Paths.get(crashed, "nodes", "bucket=2"))
+    val edges5 = Paths.get(crashed, "edges", "bucket=5")
+    val part = Files.list(edges5).iterator().asScala
+      .find(_.getFileName.toString.startsWith("part-")).get
+    val replayed = edges5.resolve("part-99999-replayed.snappy.parquet")
+    Files.copy(part, replayed)
+    assert(Files.exists(Paths.get(crashed, "_graft_layout.json")))
+    def rows(root: String, t: String): Seq[String] =
+      Materializer.read(spark, root, t).collect().map(_.toString).sorted.toSeq
+    assert(rows(crashed, "edges").size > rows(clean, "edges").size)
+
+    val report = Materializer.run(spark, df, crashed, nBuckets = 8)
+    assert(report.bucketsCommitted == (0 until 8).toList)
+    def lineage(root: String) = new SnapshotStore(root).snapshots.flatMap(_.lineage).sortBy(_.bucket)
+    assert(lineage(crashed) == lineage(clean))
+    for (t <- Materializer.Tables) assert(rows(crashed, t) == rows(clean, t), t)
+    // dynamic partition overwrite replaced the bucket directory
+    assert(!Files.exists(replayed))
   }
 
   test("connected components: min-label over a small graph") {

@@ -59,6 +59,50 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(emitted.map(t => (t.subj, t.pred, t.obj)).toSet == batch)
   }
 
+  test("streamed triples equal batch triples when turns arrive out of order") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(String, Int, String, Timestamp)]
+    val df = input.toDF().toDF("conv_id", "turn_idx", "text", "ts")
+    // turns run 1 minute apart, so a conversation spans 11 minutes of event
+    // time: the 1-hour delay keeps every reordered turn above the watermark
+    // (a turn below it would be dropped, not reordered)
+    val out = TranscriptStream.triples(spark, df,
+      gapMinutes = 10, watermarkDelay = "1 hour")
+    val q = out.writeStream.format("memory").queryName("triples_shuffled")
+      .outputMode("append").start()
+
+    val base = 1700000000000L
+    val convs = Seq("conv_000003", "conv_000004", "conv_000005")
+      .map(id => id -> TranscriptGen.conversation(id, 12))
+    val turns = new scala.util.Random(7).shuffle(convs.flatMap { case (id, ts) =>
+      ts.map(t => (id, t.turn_idx, t.text, new Timestamp(base + t.turn_idx * 60000L)))
+    })
+    val arrival = turns.groupBy(_._1).values.map(_.map(_._2))
+    assert(arrival.forall(idx => idx != idx.sorted), "every conversation arrives out of order")
+    for (batch <- turns.grouped(12)) {
+      input.addData(batch)
+      q.processAllAvailable()
+    }
+    assert(spark.table("triples_shuffled").count() == 0) // no gap has passed
+    // heartbeats from another conversation: the first moves the watermark
+    // past every conversation's last turn + gap, the second fires the timeouts
+    for (h <- 1 to 2) {
+      input.addData(Seq(("conv_zzz", h, "heartbeat", new Timestamp(base + (2 + h) * 3600_000L))))
+      q.processAllAvailable()
+    }
+    q.stop()
+
+    val emitted = spark.table("triples_shuffled").as[graft.kg.model.Triple].collect()
+      .groupBy(_.convId).map { case (c, ts) => c -> ts.map(t => (t.subj, t.pred, t.obj)).sorted.toSeq }
+    val batch = convs.map { case (id, ts) =>
+      id -> graft.kg.extract.DocExtractor.extract(id, ts.map(t => (t.turn_idx, t.text)))
+        .edges.map(e => (e.source, e.relation, e.target)).sorted
+    }.toMap
+    assert(batch.values.forall(_.nonEmpty))
+    assert(emitted == batch)
+  }
+
   test("streaming exact dedup keeps first arrival per content hash") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
