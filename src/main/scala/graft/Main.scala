@@ -131,7 +131,7 @@ object Main {
       case "canonical-triples" =>
         val (input, output) = (need("input"), need("output"))
         // one extraction pass, persisted once; its tagged edge rows take
-        // the broadcast-probe rewrite
+        // the map-side rewrite
         val combined = KgPipeline.canonicalInputsDirect(spark, spark.read.parquet(input),
           jurisdiction).toDF().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         Canonicalizer.canonicalTriples(spark,

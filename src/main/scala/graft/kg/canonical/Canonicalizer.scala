@@ -1,6 +1,6 @@
 package graft.kg.canonical
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Cross-conversation entity canonicalization.
@@ -91,13 +91,17 @@ object Canonicalizer {
           concat(lit("case:"), normName(col("caseName")))).as("name_key"),
         citKey.as("cit_key"))
 
-  /** Name↔citation components (id, component) over the DISTINCT
-    * (name_key, cit_key) pairs, by one bounded job in `runAuto`. A citation
-    * key never seen with a name is in no pair: every lookup misses it and
-    * resolves it to itself, so it needs no self-edge. */
+  /** The candidate-match edges: one (name_key, cit_key) pair per
+    * precedent mention. A citation key never seen with a name is in no pair
+    * (its null name key drops the pair): every lookup misses it and resolves
+    * it to itself, so it needs no self-edge. */
+  private[canonical] def namePairs(keys: DataFrame): DataFrame =
+    keys.select(col("name_key").as("src"), col("cit_key").as("dst"))
+
+  /** Name↔citation components (id, component) over the distinct
+    * (name_key, cit_key) pairs, by `runAuto`. */
   private def components(spark: SparkSession, keys: DataFrame): DataFrame =
-    ConnectedComponents.runAuto(spark,
-      keys.select(col("name_key").as("src"), col("cit_key").as("dst")))
+    ConnectedComponents.runAuto(spark, namePairs(keys))
 
   /** Mention → canonical_id for every precedent node. The `precedentKeys`
     * projection is cheap, so it is recomputed for the component job and
@@ -138,27 +142,70 @@ object Canonicalizer {
   }
 
   /** Rewrite the triple table onto canonical entity ids (the cross-document
-    * analog of rewire_edges_after_dedup, extractor.py:4107-4116).
+    * analog of rewire_edges_after_dedup, extractor.py:4107-4116): output
+    * `conv_id, subj, pred, obj`.
     *
-    * Shuffle shape: edges from [[graft.kg.pipeline.KgPipeline.canonicalInputsDirect]]
+    * Job shape: edges from [[graft.kg.pipeline.KgPipeline.canonicalInputsDirect]]
     * arrive TAGGED — the extractor wrote each endpoint's pre-component key
-    * ([[mentionKey]]) into `subjKey`/`objKey` when it emitted the edge. The
-    * rewrite is then a map-side probe of the small key → component table
-    * (distinct name↔citation keys, not mentions; a driver-built
-    * LocalRelation when `runAuto` takes its union-find branch, so Spark
-    * broadcasts it): two broadcast hash joins and ZERO Exchanges on the
-    * edge stream. The component job itself reads only the mention rows.
-    * Untagged edges (planted frames, the columnar kg_* memo, the
-    * `nodesDirect`/`edgesDirect` paths) are selected by schema and go
-    * through `tagEndpoints` first, which adds its convId-keyed exchanges;
-    * the probe after it is the same. An endpoint whose key misses the
-    * component table resolves to the key itself, and one without a key to
-    * "convId/id". */
+    * ([[mentionKey]]) into `subjKey`/`objKey` when it emitted the edge.
+    * [[ConnectedComponents.labels]] gathers the distinct name↔citation
+    * pairs in one job with no exchange (on a persisted, not yet cached
+    * input, the job that fills the cache) and labels them on the driver;
+    * the endpoints are then rewritten map-side from a broadcast of the
+    * labels that differ from their key ([[rewriteMapSide]]), so the returned
+    * frame has no Exchange and no join. Above the local threshold the
+    * distributed loop labels the keys and two probe joins rewrite the
+    * endpoints ([[rewriteJoined]]). Untagged edges (planted frames, the
+    * columnar kg_* memo, the `nodesDirect`/`edgesDirect` paths) are
+    * selected by schema and go through `tagEndpoints` first, which adds its
+    * convId-keyed exchanges. */
   def canonicalTriples(spark: SparkSession, nodes: DataFrame, edges: DataFrame): DataFrame = {
     val tagged =
       if (edges.columns.contains("subjKey") && edges.columns.contains("objKey")) edges
       else tagEndpoints(nodes, edges)
-    val comps = components(spark, precedentKeys(nodes))
+    val pairs = namePairs(precedentKeys(nodes))
+    ConnectedComponents.labels(pairs, ConnectedComponents.DefaultLocalThreshold) match {
+      case Left(labels) => rewriteMapSide(tagged, labels)
+      case Right(comps) => rewriteJoined(tagged, comps)
+    }
+  }
+
+  /** The endpoint rule of the rewrite: the component label of the
+    * endpoint's key, else the key itself (a key in no pair is its own
+    * component), else the conversation-scoped id "convId/id" (an endpoint
+    * that is neither a concept nor a precedent). [[rewriteJoined]] holds
+    * its Column twin. */
+  private def endpoint(label: String, key: String, convId: String, id: String): String =
+    if (label != null) label
+    else if (key != null) key
+    else if (convId == null || id == null) null
+    else convId + "/" + id
+
+  private lazy val taggedEdgeEncoder =
+    Encoders.product[(String, String, String, String, String, String)]
+  private lazy val tripleEncoder = Encoders.product[(String, String, String, String)]
+
+  /** The local branch: each edge row is rewritten by [[endpoint]] in a
+    * typed map from the labels that differ from their key, shipped once per
+    * executor as a broadcast. */
+  private[canonical] def rewriteMapSide(tagged: DataFrame, labels: Map[String, String]): DataFrame = {
+    val moved = tagged.sparkSession.sparkContext.broadcast(labels.filter { case (k, v) => k != v })
+    tagged.select("convId", "source", "relation", "target", "subjKey", "objKey")
+      .as(taggedEdgeEncoder)
+      .mapPartitions { it =>
+        val m = moved.value
+        def label(key: String) = if (key == null) null else m.getOrElse(key, null)
+        it.map { case (conv, source, relation, target, subjKey, objKey) =>
+          (conv, endpoint(label(subjKey), subjKey, conv, source), relation,
+            endpoint(label(objKey), objKey, conv, target))
+        }
+      }(tripleEncoder).toDF("conv_id", "subj", "pred", "obj")
+  }
+
+  /** The distributed branch: each endpoint key probes the
+    * components(id, component) frame through a left join, and the
+    * endpoint rule is the Column twin of [[endpoint]]. */
+  private[canonical] def rewriteJoined(tagged: DataFrame, comps: DataFrame): DataFrame = {
     def probe(df: DataFrame, key: String, comp: String) =
       df.join(comps.select(col("id").as(key), col("component").as(comp)), Seq(key), "left")
     probe(probe(tagged, "subjKey", "subj_comp"), "objKey", "obj_comp")

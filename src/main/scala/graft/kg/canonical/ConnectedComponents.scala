@@ -1,7 +1,11 @@
 package graft.kg.canonical
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.SparkException
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, ExecutionContext, Promise}
+import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
 
 /** Distributed connected components over a string-keyed edge list via
   * iterative min-label propagation — the union-find of the north rule's
@@ -15,48 +19,112 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Diagnostics from the most recent [[runAuto]]/[[run]] in this JVM —
-    * read by scale probes/reports, never by the query path. `edges` is the
-    * distinct directed edge count observed by the strategy gate (exact on
-    * the local branch; localThreshold+1 means the bounded take overflowed
-    * and the distributed loop ran). `iterations` is 0 for the local
+  /** Diagnostics from the most recent [[labels]]/[[runAuto]]/[[run]] in
+    * this JVM — read by scale probes/reports, never by the query path.
+    * `edges` is the distinct directed edge count observed by the strategy
+    * gate (exact on the local branch; localThreshold+1 means the gathering
+    * gave up and the distributed loop ran). `iterations` is 0 for the local
     * union-find. */
   final case class RunStats(strategy: String, edges: Long, iterations: Int)
   @volatile private[graft] var lastStats: RunStats = RunStats("none", 0L, 0)
 
-  /** edges(src, dst) → components(id, component), choosing the strategy by
-    * the DISTINCT edge count: candidate-match graphs are orders of magnitude
-    * smaller than the corpus (distinct entity keys, not mention rows), so up
-    * to `localThreshold` distinct edges a driver-side union-find + broadcast
-    * beats ~10 iterative shuffle rounds of fixed driver latency; beyond it
-    * the distributed min-label loop takes over. Both produce identical
-    * smallest-reachable-id labels. */
-  def runAuto(spark: SparkSession, edges: DataFrame,
-              localThreshold: Long = 2000000L): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-    // ONE bounded job decides the strategy AND feeds the local path:
-    // take(threshold+1) caps driver memory (vs a count job + a checkpoint
-    // job + a collect job — fixed per-job latency was the dominant cost of
-    // small canonicalization graphs at high core counts). Only the rare
-    // over-threshold graph pays a recompute when the distributed loop
-    // re-evaluates the distinct (then pinned via localCheckpoint inside run).
-    val cap = math.min(localThreshold, Int.MaxValue - 8L).toInt
-    val taken = sym.take(cap + 1)
-    if (taken.length <= cap) {
-      lastStats = RunStats("local", taken.length.toLong, 0)
-      runLocal(spark, taken.map(r => (r.getString(0), r.getString(1))))
-    } else {
-      val out = run(spark, sym)
-      lastStats = lastStats.copy(edges = taken.length.toLong)
-      out
+  /** Distinct edges up to which [[labels]] labels components on the
+    * driver. */
+  private[graft] val DefaultLocalThreshold = 2000000L
+
+  private lazy val pairEncoder = Encoders.product[(String, String)]
+
+  /** Components of `edges(src, dst)`: every id of an edge → the smallest id
+    * reachable from it. Up to `localThreshold` DISTINCT non-null edges they
+    * come back as a driver map (Left) from the union-find over
+    * [[distinctPairs]]; beyond it, or when the gathering's task results
+    * outgrow `spark.driver.maxResultSize`, as the (id, component) frame of
+    * the distributed loop [[run]] (Right). Sets [[lastStats]]. */
+  private[graft] def labels(edges: DataFrame,
+                            localThreshold: Long): Either[Map[String, String], DataFrame] = {
+    val cap = math.max(0L, math.min(localThreshold, Int.MaxValue - 8L)).toInt
+    distinctPairs(edges, cap) match {
+      case Some(pairs) =>
+        lastStats = RunStats("local", pairs.size.toLong, 0)
+        Left(unionFind(pairs.asScala))
+      case None =>
+        val comps = run(edges.sparkSession, edges)
+        lastStats = lastStats.copy(edges = cap + 1L)
+        Right(comps)
     }
   }
 
-  /** Driver-side union-find over a (small, distinct) edge list. */
-  private def runLocal(spark: SparkSession, pairs: Array[(String, String)]): DataFrame = {
-    import spark.implicits._
+  /** The distinct non-null (src, dst) pairs of `edges`, or None when there
+    * are more than `cap` of them.
+    *
+    * ONE job with no exchange gathers them: each task dedupes its rows into
+    * a hash set of at most `cap + 1` pairs, and the driver merges task
+    * results as they arrive, keeping at most `cap + 1` merged pairs. The
+    * first result that takes the merge past `cap` cancels the job, so the
+    * driver holds those pairs plus the results not yet merged — about one
+    * per concurrently running task, each at most `cap + 1` pairs. Spark
+    * caps the sum of all the job's results at `spark.driver.maxResultSize`
+    * (many partitions repeating the same pairs can reach it below `cap`);
+    * that abort also yields None, so the caller takes the distributed
+    * branch instead of failing. When `edges` reads a persisted frame that
+    * is not yet cached, this job is the one that fills the cache, so
+    * gathering costs no pass of its own. (`take` is not used: on a plan
+    * with no exchange it scans one partition, then 4, then 16.) */
+  private def distinctPairs(edges: DataFrame, cap: Int): Option[java.util.Set[(String, String)]] = {
+    val rdd = edges.select(col("src"), col("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+      .as(pairEncoder).rdd
+      .mapPartitions { it =>
+        val seen = new java.util.HashSet[(String, String)]
+        while (it.hasNext && seen.size <= cap) seen.add(it.next())
+        Iterator.single(seen.toArray(new Array[(String, String)](0)))
+      }
+    // the handler runs on the scheduler's thread, one result at a time
+    val merged = new java.util.HashSet[(String, String)]
+    val overflowed = Promise[Boolean]()
+    val job = edges.sparkSession.sparkContext.submitJob(rdd,
+      (it: Iterator[Array[(String, String)]]) => it.next(), rdd.partitions.indices,
+      (_: Int, part: Array[(String, String)]) => {
+        var i = 0
+        while (i < part.length && merged.size <= cap) { merged.add(part(i)); i += 1 }
+        if (merged.size > cap) overflowed.trySuccess(true)
+      }, ())
+    job.onComplete(done => overflowed.tryComplete(done.map(_ => false)))(ExecutionContext.parasitic)
+    val over =
+      try Await.result(overflowed.future, Duration.Inf)
+      catch {
+        case e: SparkException if exceedsMaxResultSize(e) => true
+        case e: Throwable => job.cancel(); throw e
+      }
+    if (over) { job.cancel(); None } else Some(merged)
+  }
+
+  /** Whether `e` is the abort of a job whose task results outgrew
+    * `spark.driver.maxResultSize`. Spark gives that abort no type or error
+    * class of its own, only its message. */
+  private def exceedsMaxResultSize(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.getMessage != null && t.getMessage.contains("bigger than spark.driver.maxResultSize"))
+
+  /** edges(src, dst) → components(id, component), choosing the strategy by
+    * the DISTINCT edge count: candidate-match graphs are orders of magnitude
+    * smaller than the corpus (distinct entity keys, not mention rows), so up
+    * to `localThreshold` distinct edges the driver union-find of [[labels]]
+    * beats ~10 iterative shuffle rounds of fixed driver latency; beyond it
+    * the distributed min-label loop of [[run]] takes over. Both list every
+    * id of an edge with the same smallest-reachable-id label. */
+  def runAuto(spark: SparkSession, edges: DataFrame,
+              localThreshold: Long = DefaultLocalThreshold): DataFrame =
+    labels(edges, localThreshold) match {
+      case Left(local) =>
+        import spark.implicits._
+        local.toSeq.sorted.toDF("id", "component")
+      case Right(comps) => comps
+    }
+
+  /** Driver-side union-find over a (small, distinct) edge list: every id of
+    * an edge → the smallest id reachable from it. */
+  private def unionFind(pairs: Iterable[(String, String)]): Map[String, String] = {
     val parent = scala.collection.mutable.Map.empty[String, String]
     def find(x: String): String = {
       var r = x
@@ -73,8 +141,7 @@ object ConnectedComponents {
         if (ra < rb) parent(rb) = ra else parent(ra) = rb
       }
     }
-    val rows = parent.keys.toSeq.sorted.map(k => (k, find(k)))
-    rows.toDF("id", "component")
+    parent.keys.map(k => k -> find(k)).toMap
   }
 
   /** edges(src, dst) → components(id, component) where component is the
@@ -126,7 +193,7 @@ object ConnectedComponents {
     if (changed > 0)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"ConnectedComponents.run did NOT converge in $maxIter rounds — labels may be non-minimal")
-    lastStats = RunStats("distributed", -1L, iter) // edges unknown here; runAuto fills it
+    lastStats = RunStats("distributed", -1L, iter) // edges unknown here; labels fills it
     comps
   }
 }

@@ -332,7 +332,9 @@ object OrphanRepair {
               strength = if (score < 4.0) "weak" else "moderate",
               isCritical = false,
               supportGroupIds = Seq.empty,
-              explanation = f"Orphan repair: score=$score%.1f, " +
+              // Locale.ROOT: the decimal point must not follow the default locale
+              explanation = "Orphan repair: score=" +
+                "%.1f".formatLocal(java.util.Locale.ROOT, score) + ", " +
                 s"${Relations.nodeTypeFromId(src)}->${Relations.nodeTypeFromId(tgt)}",
               anchor = null,
               method = "inference",

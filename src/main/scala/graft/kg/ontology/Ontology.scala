@@ -128,8 +128,10 @@ final case class OntologyData(
     patterns: Map[String, SignalPattern],
     statuteMappings: List[StatuteMapping]
 ) {
-  /** Lazily compiled mention-scan automatons (per deserialized instance —
-    * built once per executor task at most, reused for every conversation). */
+  /** Lazily compiled mention-scan automatons, per instance. The shipped
+    * ontologies are `lazy val`s of [[Ontology]] that Spark tasks look up by
+    * jurisdiction instead of deserializing, so each JVM builds these once
+    * per ontology and reuses them for every conversation of every task. */
   @transient lazy val compiledScan: CompiledScan = CompiledScan.build(this, turkish = false)
   @transient lazy val compiledScanTurkish: CompiledScan = CompiledScan.build(this, turkish = true)
 

@@ -3,8 +3,8 @@ package graft.kg.pipeline
 import graft.kg.canonical.Canonicalizer
 import graft.kg.extract.DocExtractor
 import graft.kg.model._
-import graft.kg.ontology.{Ontology, OntologyData}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
+import graft.kg.ontology.{Jurisdiction, Ontology}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Spark wiring for the KG-construction pipeline.
@@ -16,8 +16,10 @@ import org.apache.spark.sql.functions._
   * cluster → edge → JS/chain/tier) runs inside `mapPartitions` over each
   * consecutive run of one conversation's turns ([[KgPipeline.runs]]) as pure
   * Scala (the reference's per-case unit, run_iltur.py:805-1183,
-  * where the asyncio semaphore fan-out becomes task parallelism). The compiled
-  * ontology is a broadcast-size value captured in the task closure. All
+  * where the asyncio semaphore fan-out becomes task parallelism). The task
+  * closure carries only the jurisdiction: each executor JVM resolves it to
+  * the compiled ontology ([[Ontology.forJurisdiction]]) and builds that
+  * ontology's automata once, for every task it runs. All
   * cross-conversation work (canonicalization, stats, retrieval) is relational
   * and happens downstream on the emitted node/edge tables.
   *
@@ -71,6 +73,15 @@ final case class MatRow(
 final case class CanonInputRow(m: Option[MentionKeyRow], e: Option[TripleEdgeRow])
 
 object KgPipeline {
+
+  // derived once: an encoder costs milliseconds of reflection per derivation
+  private lazy val tripleEncoder = Encoders.product[Triple]
+  private lazy val edgeEncoder = Encoders.product[EdgeRow]
+  private lazy val nodeEncoder = Encoders.product[Node]
+  private lazy val canonInputEncoder = Encoders.product[CanonInputRow]
+  private lazy val matRowEncoder = Encoders.product[MatRow]
+  private lazy val graphEncoder = Encoders.product[ConvGraph]
+  private lazy val orphanEncoder = Encoders.product[(String, String, String)]
 
   /** Partition count for the conv_id exchange: cores × 4. The extraction
     * stage is CPU-bound with tiny shuffle bytes, so AQE's size-based
@@ -141,15 +152,17 @@ object KgPipeline {
       })
   }
 
-  /** Invoke the extractor once per conversation run. */
+  /** Invoke the extractor once per conversation run, with the
+    * jurisdiction's ontology of this JVM. */
   private def perConversation[T](
       it: Iterator[SlimTurn],
-      ontology: OntologyData,
-      jurisdiction: String)(f: ConvGraph => IterableOnce[T]): Iterator[T] =
+      jurisdiction: String)(f: ConvGraph => IterableOnce[T]): Iterator[T] = {
+    val ontology = Ontology.forJurisdiction(jurisdiction)
     runs(it)(_.conv_id).flatMap { case (convId, turns) =>
       // already sorted by turn_idx via sortWithinPartitions
       f(DocExtractor.extract(convId, turns.map(t => (t.turn_idx, t.text)), ontology, jurisdiction))
     }
+  }
 
   /** Write transcripts in the conversation-contiguous production layout:
     * hash-partitioned by conv_id into `nFiles` files, rows sorted by
@@ -220,18 +233,20 @@ object KgPipeline {
     * per-conversation task, skipping the heavyweight ConvGraph encoder
     * round-trip (serialize deep nested graph → deserialize → re-serialize
     * projection): one shuffle (none when `prePartitioned`), one small-row
-    * encoder. The ontology is the jurisdiction's. */
+    * encoder. The jurisdiction is parsed on the driver (a bad spelling
+    * throws before any job); its ontology is resolved in each executor JVM:
+    * the closure carries the jurisdiction string, not the ontology. */
   def flatExtract[T: org.apache.spark.sql.Encoder](
       spark: SparkSession,
       transcripts: DataFrame,
       jurisdiction: String = "in",
       prePartitioned: Boolean = false)(
       f: ConvGraph => IterableOnce[T]): Dataset[T] = {
-    val ontology = Ontology.forJurisdiction(jurisdiction)
+    Jurisdiction.parse(jurisdiction) // a bad spelling throws before any job
     val slim =
       if (prePartitioned) slimTurnsPrePartitioned(spark, transcripts)
       else slimTurns(spark, transcripts)
-    slim.mapPartitions(it => perConversation(it, ontology, jurisdiction)(f))
+    slim.mapPartitions(it => perConversation(it, jurisdiction)(f))
   }
 
   /** Extraction → (subj, pred, obj) triples in one pass (the bench metric). */
@@ -240,7 +255,7 @@ object KgPipeline {
       transcripts: DataFrame,
       jurisdiction: String = "in",
       prePartitioned: Boolean = false): Dataset[Triple] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[Triple]
+    implicit val enc = tripleEncoder
     flatExtract(spark, transcripts, jurisdiction, prePartitioned = prePartitioned) { g =>
       g.edges.map(e => Triple(g.summary.convId, e.source, e.relation, e.target))
     }
@@ -252,7 +267,7 @@ object KgPipeline {
       transcripts: DataFrame,
       jurisdiction: String = "in",
       prePartitioned: Boolean = false): Dataset[EdgeRow] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[EdgeRow]
+    implicit val enc = edgeEncoder
     flatExtract(spark, transcripts, jurisdiction, prePartitioned = prePartitioned)(_.edges)
   }
 
@@ -262,7 +277,7 @@ object KgPipeline {
       transcripts: DataFrame,
       jurisdiction: String = "in",
       prePartitioned: Boolean = false): Dataset[Node] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[Node]
+    implicit val enc = nodeEncoder
     flatExtract(spark, transcripts, jurisdiction, prePartitioned = prePartitioned)(_.nodes)
   }
 
@@ -272,13 +287,13 @@ object KgPipeline {
     * conversation's own nodes, so tagging costs no join). Persist the
     * result and project with `filter(m.isNotNull)` / `filter(e.isNotNull)`
     * — the canonical-triple chain then caches ~10× fewer bytes than full
-    * node and edge rows, and its rewrite is a broadcast probe. */
+    * node and edge rows, and its rewrite is map-side. */
   def canonicalInputsDirect(
       spark: SparkSession,
       transcripts: DataFrame,
       jurisdiction: String = "in",
       prePartitioned: Boolean = false): Dataset[CanonInputRow] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[CanonInputRow]
+    implicit val enc = canonInputEncoder
     flatExtract(spark, transcripts, jurisdiction, prePartitioned = prePartitioned) { g =>
       val mentions = g.nodes.filter(n => n.nodeType == "concept" || n.nodeType == "precedent")
       val keyOf = mentions.iterator.map(n => n.id -> Canonicalizer.mentionKey(
@@ -312,7 +327,7 @@ object KgPipeline {
       transcripts: DataFrame,
       jurisdiction: String = "in",
       prePartitioned: Boolean = false): Dataset[MatRow] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[MatRow]
+    implicit val enc = matRowEncoder
     flatExtract(spark, transcripts, jurisdiction, prePartitioned)(matRows)
   }
 
@@ -331,8 +346,8 @@ object KgPipeline {
     * if a run does not end in a summary of the same conversation (the
     * union was re-partitioned or filtered). */
   def graphsOf(union: DataFrame): Dataset[ConvGraph] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[ConvGraph]
-    union.as[MatRow](org.apache.spark.sql.Encoders.product[MatRow]).mapPartitions { it =>
+    implicit val enc = graphEncoder
+    union.as[MatRow](matRowEncoder).mapPartitions { it =>
       new Iterator[ConvGraph] {
         def hasNext: Boolean = it.hasNext
         def next(): ConvGraph = {
@@ -379,7 +394,7 @@ object KgPipeline {
     * repair_orphans.py:293-322), one output row per node row. A node with a
     * null id is always an orphan. */
   def orphans(nodes: Dataset[_], edges: Dataset[_]): DataFrame = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[(String, String, String)]
+    implicit val enc = orphanEncoder
     byConversation(nodes.toDF().select("convId", "id", "nodeType"),
       edges.toDF().select("convId", "source", "target")) { case (conv, Seq(ns, es)) =>
       val connected = es.flatMap(e => Seq(e.getAs[String]("source"), e.getAs[String]("target"))).toSet

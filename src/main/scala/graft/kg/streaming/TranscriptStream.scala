@@ -2,7 +2,7 @@ package graft.kg.streaming
 
 import graft.kg.extract.DocExtractor
 import graft.kg.model.Triple
-import graft.kg.ontology.Ontology
+import graft.kg.ontology.{Jurisdiction, Ontology}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -37,7 +37,7 @@ object TranscriptStream {
       gapMinutes: Int = 30,
       watermarkDelay: String = "10 minutes"): Dataset[Triple] = {
     import spark.implicits._
-    val ont = Ontology.forJurisdiction(jurisdiction)
+    Jurisdiction.parse(jurisdiction) // a bad spelling throws before the query starts
     val gapMs = gapMinutes * 60L * 1000L
 
     turnsStream
@@ -54,8 +54,10 @@ object TranscriptStream {
             state.remove()
             if (turns.isEmpty) Iterator.empty
             else {
-              val g = DocExtractor.extract(
-                convId, turns.map(t => (t.turn_idx, t.text)), ont, jurisdiction)
+              // the closure carries the jurisdiction: each executor JVM
+              // builds the ontology's automata once, not once per task
+              val g = DocExtractor.extract(convId, turns.map(t => (t.turn_idx, t.text)),
+                Ontology.forJurisdiction(jurisdiction), jurisdiction)
               g.edges.iterator.map(e => Triple(convId, e.source, e.relation, e.target))
             }
           } else {

@@ -128,4 +128,32 @@ class JurisdictionSpec extends AnyFunSuite {
     val longSHits = graft.kg.rules.Citations.extract(longS, "tr")
     assert(longSHits.exists(_.citationType == "tr_danistay"), longSHits.toString)
   }
+
+  test("extraction does not depend on the default locale") {
+    // orphan-repair explanations once printed their score as "10,0" under a
+    // Turkish or German default locale; every graph field must be the same
+    // bytes under any default locale
+    val inputs =
+      TranscriptGen.turns(50, 14).groupBy(_.conv_id).toSeq.sortBy(_._1).map { case (c, ts) =>
+        (c, ts.sortBy(_.turn_idx).map(t => (t.turn_idx, t.text)), "in")
+      } ++ Seq(("echr_fix", JurisdictionSpec.echrTurns, "echr"),
+        ("tr_fix", JurisdictionSpec.trTurns, "tr"))
+    def graphs(locale: Locale) = {
+      val saved = Locale.getDefault
+      try {
+        Locale.setDefault(locale)
+        inputs.map { case (c, turns, j) =>
+          DocExtractor.extract(c, turns, Ontology.forJurisdiction(j), j)
+        }
+      } finally Locale.setDefault(saved)
+    }
+    val root = graphs(Locale.ROOT)
+    assert(root.exists(_.edges.exists(e => Option(e.explanation).exists(_.startsWith("Orphan repair: score=")))))
+    for (tag <- Seq("tr-TR", "de-DE")) {
+      val differing = graphs(Locale.forLanguageTag(tag)).zip(root)
+        .collect { case (g, r) if g != r => g.summary.convId }
+      assert(differing.isEmpty, s"under $tag: ${differing.size} graphs differ: " +
+        differing.take(5).mkString(", "))
+    }
+  }
 }
