@@ -217,6 +217,14 @@ object Main {
     println(s"triples parquet written: ${spark.read.parquet(s"$dir/triples").count()} rows")
   }
 
+  /** Delete `root` and everything under it. */
+  private def deleteTree(root: java.nio.file.Path): Unit = {
+    val paths = java.nio.file.Files.walk(root)
+    try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => java.nio.file.Files.delete(p))
+    finally paths.close()
+  }
+
   /** Dump `.explain("formatted")` for named SparkEntry queries (plus the
     * tfidf index build and the raw streaming operators) to
     * `<outDir>/<name>_<suffix>.txt`: the before/after plan evidence of a
@@ -255,18 +263,21 @@ object Main {
         dump(n, rolled.queryExecution.explainString(ExplainMode.fromString("formatted")))
       case "canonical_chain" =>
         import spark.implicits._
-        val path = java.nio.file.Files.createTempDirectory("plandump_chain").toString + "/t"
-        KgPipeline.writeConversationPartitioned(TranscriptGen.turns(200, 40).toDF(), path,
-          nFiles = spark.sparkContext.defaultParallelism * 4)
-        val combined = KgPipeline.canonicalInputsDirect(spark,
-          KgPipeline.readConversationPartitioned(spark, path),
-          prePartitioned = true).toDF().persist()
-        val ct = Canonicalizer.canonicalTriples(spark,
-          combined.filter(col("m").isNotNull).select("m.*"),
-          combined.filter(col("e").isNotNull).select("e.*"))
-        ct.collect()
-        dump(n, ct.queryExecution.explainString(ExplainMode.fromString("formatted")))
-        combined.unpersist()
+        val tmp = java.nio.file.Files.createTempDirectory("plandump_chain")
+        try {
+          val path = tmp.toString + "/t"
+          KgPipeline.writeConversationPartitioned(TranscriptGen.turns(200, 40).toDF(), path,
+            nFiles = spark.sparkContext.defaultParallelism * 4)
+          val combined = KgPipeline.canonicalInputsDirect(spark,
+            KgPipeline.readConversationPartitioned(spark, path),
+            prePartitioned = true).toDF().persist()
+          val ct = Canonicalizer.canonicalTriples(spark,
+            combined.filter(col("m").isNotNull).select("m.*"),
+            combined.filter(col("e").isNotNull).select("e.*"))
+          ct.collect()
+          dump(n, ct.queryExecution.explainString(ExplainMode.fromString("formatted")))
+          combined.unpersist()
+        } finally deleteTree(tmp)
       case _ =>
         val df = SparkEntry.queries(n)(spark, dir)
         dump(n, df.queryExecution.explainString(ExplainMode.fromString("formatted")))

@@ -1,9 +1,9 @@
 package graft.kg.extract
 
 import graft.kg.model._
-import graft.kg.ontology.{ConceptDef, Jurisdiction, Ontology, OntologyData, SignalPattern}
-import graft.kg.rules.{CitationHit, Citations, Relations}
-import graft.kg.text.{Normalize, SegmentedDoc, Segmenter, TextSegment}
+import graft.kg.ontology.{ConceptDef, Jurisdiction, MatchText, Ontology, OntologyData}
+import graft.kg.rules.{Citations, Relations}
+import graft.kg.text.{Normalize, SegmentedDoc, Segmenter, TextSegment, TokenSet}
 
 import java.util.Locale
 import java.util.regex.Pattern
@@ -57,12 +57,33 @@ import scala.collection.mutable.ArrayBuffer
 object DocExtractor {
 
   // --- v1 sentence-classifier cue regexes -----------------------------------
-  private def cre(s: String) = Pattern.compile(s, Pattern.CASE_INSENSITIVE | Pattern.UNICODE_CASE)
+
+  /** A sentence-classifier cue: its rule is the lower-case regex matched
+    * CASE_INSENSITIVE|UNICODE_CASE against the sentence. On a pure-ASCII
+    * sentence the rule's case-sensitive twin over the ASCII-lowered sentence
+    * finds the same: an ASCII char folds only to ASCII chars and to the
+    * Kelvin sign and long s, which such a sentence cannot hold, and lowering
+    * keeps every `\b` (TextProps holds twin and rule equal). */
+  private[graft] final class Cue(val regex: String) {
+    require(regex == regex.toLowerCase(Locale.ROOT), s"cue regex must be lower case: $regex")
+    private val rule = Pattern.compile(regex, Pattern.CASE_INSENSITIVE | Pattern.UNICODE_CASE)
+    private val twin = Pattern.compile(regex)
+    /** Reusable matchers, for one extract call. */
+    final class Matching {
+      private val ruleM = rule.matcher("")
+      private val twinM = twin.matcher("")
+      /** Does the cue occur in `text`? `asciiLower` is `text` lowered when
+        * `text` is pure ASCII, else null. */
+      def find(text: String, asciiLower: String): Boolean =
+        if (asciiLower != null) twinM.reset(asciiLower).find() else ruleM.reset(text).find()
+    }
+  }
+  private def cre(s: String) = new Cue(s)
 
   private val IssueCue = cre(
     """\b(whether\b|the\s+(?:question|issue)\s+(?:is|arises|that\s+arises)|falls?\s+for\s+(?:consideration|determination)|issue\s+before\s+(?:us|the\s+court)|point\s+for\s+determination)""")
 
-  private val DispositionCues: List[(Pattern, String)] = List(
+  private val DispositionCues: List[(Cue, String)] = List(
     cre("""\b(?:appeal|petition|application|writ\s+petition|slp|revision)s?\s+(?:is|are|stands?)\s+(?:accordingly\s+)?partly\s+allowed\b""") -> "partly_allowed",
     cre("""\b(?:appeal|petition|application|writ\s+petition|slp|revision)s?\s+(?:is|are|stands?)\s+(?:accordingly\s+)?allowed\b""") -> "allowed",
     cre("""\b(?:appeal|petition|application|writ\s+petition|slp|revision)s?\s+(?:is|are|stands?)\s+(?:accordingly\s+)?(?:dismissed|rejected)\b""") -> "dismissed",
@@ -76,6 +97,9 @@ object DocExtractor {
   private val FactCue = cre(
     """\b(?:filed|issued|passed\s+an?\s+order|arrested|convicted|sentenced|terminated|dismissed\s+from\s+service|executed|entered\s+into|served|received|granted|rejected\s+the\s+application|acquired|notified|published|registered|lodged|paid|deposited|awarded)\b""")
 
+  /** Every sentence-classifier cue. */
+  private[graft] val cues: List[Cue] = IssueCue :: ArgCue :: FactCue :: DispositionCues.map(_._1)
+
   /** Surface cues for argument-actor detection: every alias key of the
     * reference's full actor map (underscores → spaces so multi-word forms
     * match prose), plus counsel phrasing. The matched RAW cue goes through
@@ -88,6 +112,8 @@ object DocExtractor {
       .map(k => k.replace('_', ' ') -> k)
       .toList :+ ("learned counsel" -> "third_party"))
       .sortBy(_._1)
+  private val ActorCueScan = graft.kg.text.PhraseAutomaton.build(ActorCues.map(_._1).toIndexedSeq)
+  private val ActorCueRaw: Array[String] = ActorCues.map(_._2).toArray
 
   /** Pattern names (across the IN/ECHR/TR grammars) whose hit marks a
     * holding sentence. */
@@ -182,7 +208,18 @@ object DocExtractor {
         group.maxBy(e => (Relations.ConfidenceRank.getOrElse(e.confidence, 0), e.id))
       }
       .toVector
-      .sortBy(e => (e.source, e.target, e.relation, e.id))
+      .sorted(EdgeOrder)
+
+  /** Edge output order: (source, target, relation, id). */
+  private[extract] val EdgeOrder: Ordering[EdgeRow] = new Ordering[EdgeRow] {
+    def compare(a: EdgeRow, b: EdgeRow): Int = {
+      var c = a.source.compareTo(b.source)
+      if (c == 0) c = a.target.compareTo(b.target)
+      if (c == 0) c = a.relation.compareTo(b.relation)
+      if (c == 0) c = a.id.compareTo(b.id)
+      c
+    }
+  }
 
   /** Stage-5 requirement satisfaction argmax (extractor.py:1600-1629):
     * score each candidate fact (id, keywordSet, looksNegative) by keyword
@@ -212,28 +249,51 @@ object DocExtractor {
     * `alwaysCandidates`). Public so the oracle harness drives the REAL
     * operator on planted texts/candidates; extract() calls this. */
   def argmaxCluster(
-      mt: graft.kg.ontology.MatchText,
+      mt: MatchText,
       candidates: Iterable[String],
       minScore: Int,
       ontology: OntologyData,
       pseudoLabel: String => String,
-      turkish: Boolean): Option[String] = {
-    val possible: Set[String] =
-      mt.keywords.iterator.flatMap(k => ontology.keywordIndex.getOrElse(k, Nil)).toSet ++
-        ontology.alwaysCandidates
-    var best: Option[String] = None
-    var bestScore = 0
-    for (cid <- candidates
-         if possible.contains(cid) || !ontology.concepts.contains(cid)) {
-      val s = ontology.concepts.get(cid) match {
-        case Some(cdef) => Ontology.conceptMatchScoreFast(mt, cdef, turkish = turkish)
-        case None =>
-          val pseudoKw = Normalize.keywordSet(cid + " " + pseudoLabel(cid))
-          Normalize.overlap(mt.keywords, pseudoKw)
+      turkish: Boolean): Option[String] =
+    argmaxOver(mt, ontology.candidateConcepts(mt.keywords),
+      clusterCandidates(candidates, ontology, pseudoLabel), minScore, turkish)
+
+  /** One candidate of the score-fallback assignment: an ontology concept
+    * (`cdef`, and its index in `OntologyData.conceptIds`), or a pseudo
+    * cluster (`cdef` null, scored by overlap with `pseudoKw`, the keywords of
+    * its id and label). */
+  private final class ClusterCandidate(
+      val cid: String, val cdef: ConceptDef, val conceptIdx: Int, val pseudoKw: TokenSet)
+
+  private def clusterCandidates(cids: Iterable[String], ontology: OntologyData,
+      pseudoLabel: String => String): Array[ClusterCandidate] =
+    cids.iterator.map { cid =>
+      ontology.concepts.get(cid) match {
+        case Some(cdef) => new ClusterCandidate(cid, cdef,
+          java.util.Arrays.binarySearch(ontology.conceptIds.asInstanceOf[Array[AnyRef]], cid), null)
+        case None => new ClusterCandidate(cid, null, -1,
+          Normalize.keywordSet(cid + " " + pseudoLabel(cid)))
       }
-      if (s > bestScore) { bestScore = s; best = Some(cid) }
+    }.toArray
+
+  /** [[argmaxCluster]] over prepared candidates; `possible` is
+    * `ontology.candidateConcepts(mt.keywords)`. */
+  private def argmaxOver(mt: MatchText, possible: Array[Boolean],
+      candidates: Array[ClusterCandidate], minScore: Int, turkish: Boolean): Option[String] = {
+    var best: String = null
+    var bestScore = 0
+    var i = 0
+    while (i < candidates.length) {
+      val c = candidates(i)
+      if (c.cdef == null || possible(c.conceptIdx)) {
+        val s =
+          if (c.cdef != null) Ontology.conceptMatchScoreFast(mt, c.cdef, turkish = turkish)
+          else mt.keywords.overlap(c.pseudoKw, Int.MaxValue)
+        if (s > bestScore) { bestScore = s; best = c.cid }
+      }
+      i += 1
     }
-    best.filter(_ => bestScore >= minScore)
+    if (best != null && bestScore >= minScore) Some(best) else None
   }
 
   /** P7 cluster gate + G1 intra-cluster support fan-out
@@ -322,6 +382,16 @@ object DocExtractor {
       surfaceText.getOrElse(actual.take(150))))
   }
 
+  /** A node's text, a space and its anchor's surface text: the text keyword
+    * sets of stages 4 and 6 are taken from. Words never span the space, so
+    * when the surface text is the node text (every sentence node) the text
+    * alone has the same word set. */
+  private def textAndSurface(n: Node): String = {
+    val text = Option(n.text).getOrElse("")
+    val surface = Option(n.anchor).map(_.surfaceText).getOrElse("")
+    if (text == surface) text else text + " " + surface
+  }
+
   def anchorFor(doc: SegmentedDoc, seg: TextSegment): Anchor =
     Anchor(doc.docId, seg.startChar, seg.endChar,
       Normalize.textHash16(doc.fullText.substring(seg.startChar, seg.endChar)),
@@ -347,6 +417,15 @@ object DocExtractor {
     val docId = Normalize.docId(fullText)
     val doc = Segmenter.segment(fullText, docId)
     val warnings = ArrayBuffer.empty[String]
+    val words = new Normalize.TextWords
+    // one anchor (one text hash) per segment, however many nodes and edges
+    // it anchors
+    val anchors = new java.util.IdentityHashMap[TextSegment, Anchor]
+    def anchorOf(seg: TextSegment): Anchor = {
+      var a = anchors.get(seg)
+      if (a == null) { a = anchorFor(doc, seg); anchors.put(seg, a) }
+      a
+    }
 
     // ---- Stage 2: mention detection ----------------------------------------
     val citations = Citations.extract(fullText, jurisdiction)
@@ -366,7 +445,7 @@ object DocExtractor {
     val scan = if (turkish) ontology.compiledScanTurkish else ontology.compiledScan
     val signalHits = ArrayBuffer.empty[SignalHit]
     val conceptHits = ArrayBuffer.empty[ConceptHit]
-    val concepts = ontology.concepts.toList.sortBy(_._1)
+    val concepts = ontology.sortedConcepts
     // per-sentence hit state as stamp arrays (stamp = sentence index): no
     // per-hit boxing/hashing, no per-sentence clearing
     val nEntries = scan.entries.length
@@ -446,40 +525,49 @@ object DocExtractor {
     val sigBySent: Map[Int, List[SignalHit]] =
       signalHits.toList.groupBy(_.sentIdx)
 
-    def sentHasPattern(i: Int, names: Set[String]): Boolean =
-      sigBySent.getOrElse(i, Nil).exists(h => names.contains(h.patternName))
+    // the cue twins' input: the lowered sentence when it is pure ASCII
+    // (a Turkish fold is not an ASCII lowering), else null
+    val sentAsciiLower: Vector[String] = doc.sentences.indices.map(i =>
+      if (!turkish && Normalize.isAscii(doc.sentences(i).text)) sentLower(i) else null).toVector
+    def cueIn(cue: Cue#Matching, i: Int): Boolean =
+      cue.find(doc.sentences(i).text, sentAsciiLower(i))
+    val issueCue = new IssueCue.Matching
+    val argCue = new ArgCue.Matching
+    val factCue = new FactCue.Matching
+    val dispositionCues = DispositionCues.map { case (c, d) => (new c.Matching, d) }
 
-    val holdingSents = doc.sentences.indices.filter(i =>
-      sentHasPattern(i, HoldingPatterns)).toVector
-    val holdingSet = holdingSents.toSet
-    val issueSents = doc.sentences.indices.filter(i =>
-      containsAny(sentLower(i), IssuePrefilter) &&
-        IssueCue.matcher(doc.sentences(i).text).find() && !holdingSet.contains(i)).toVector
+    // each sentence gets at most one of holding, issue, argument (in that
+    // precedence) and outcome; a fact sentence has none of them. The class
+    // test runs first, so a cue regex never runs on a sentence it cannot
+    // change.
+    val nSent = doc.sentences.length
+    val isHolding = new Array[Boolean](nSent)
+    signalHits.foreach(h => if (HoldingPatterns.contains(h.patternName)) isHolding(h.sentIdx) = true)
+    val holdingSents = (0 until nSent).filter(isHolding).toVector
+    val issueSents = (0 until nSent).filter(i =>
+      !isHolding(i) && containsAny(sentLower(i), IssuePrefilter) && cueIn(issueCue, i)).toVector
     val outcomeSentOpt: Option[(Int, String)] = {
       // last matching sentence wins (operative tail, like the AYM window
       // selector's last-occurrence rule); within that sentence the FIRST cue
       // in priority order wins ("appeal is allowed ... order is set aside"
       // → allowed)
-      val lastIdx = doc.sentences.indices.reverse.find(i =>
-        containsAny(sentLower(i), DispositionPrefilter) &&
-          DispositionCues.exists(_._1.matcher(doc.sentences(i).text).find()))
-      lastIdx.map { i =>
-        val disp = DispositionCues.collectFirst {
-          case (pat, d) if pat.matcher(doc.sentences(i).text).find() => d
-        }.get
-        (i, disp)
+      var found: Option[(Int, String)] = None
+      var i = nSent - 1
+      while (found.isEmpty && i >= 0) {
+        if (containsAny(sentLower(i), DispositionPrefilter))
+          found = dispositionCues.collectFirst { case (m, d) if cueIn(m, i) => (i, d) }
+        i -= 1
       }
+      found
     }
-    val issueSet = issueSents.toSet
-    val argSents = doc.sentences.indices.filter(i =>
-      containsAny(sentLower(i), ArgPrefilter) &&
-        ArgCue.matcher(doc.sentences(i).text).find() &&
-        !holdingSet.contains(i) && !issueSet.contains(i)).toVector
-    val classified: Set[Int] =
-      holdingSet ++ issueSents ++ argSents ++ outcomeSentOpt.map(_._1).toSet
-    val factSents = doc.sentences.indices.filter(i =>
-      containsAny(sentLower(i), FactPrefilter) &&
-        FactCue.matcher(doc.sentences(i).text).find() && !classified.contains(i)).toVector
+    val classified = isHolding.clone()
+    issueSents.foreach(classified(_) = true)
+    val argSents = (0 until nSent).filter(i =>
+      !classified(i) && containsAny(sentLower(i), ArgPrefilter) && cueIn(argCue, i)).toVector
+    argSents.foreach(classified(_) = true)
+    outcomeSentOpt.foreach { case (i, _) => classified(i) = true }
+    val factSents = (0 until nSent).filter(i =>
+      !classified(i) && containsAny(sentLower(i), FactPrefilter) && cueIn(factCue, i)).toVector
 
     val nodes = ArrayBuffer.empty[Node]
     def blankNode(id: String, ntype: String, text: String, anchor: Anchor,
@@ -491,7 +579,7 @@ object DocExtractor {
     // facts
     factSents.zipWithIndex.foreach { case (i, n) =>
       val seg = doc.sentences(i)
-      nodes += blankNode(s"f${n + 1}", "fact", seg.text, anchorFor(doc, seg), "high", "rule")
+      nodes += blankNode(s"f${n + 1}", "fact", seg.text, anchorOf(seg), "high", "rule")
         .copy(factType = "event",
           relevance = "supporting")
     }
@@ -503,51 +591,54 @@ object DocExtractor {
     conceptFirstHit.zipWithIndex.foreach { case ((cid, hit), n) =>
       val seg = doc.sentences(hit.sentIdx)
       val cdef = ontology.concepts(cid)
-      nodes += blankNode(s"c${n + 1}", "concept", cdef.label, anchorFor(doc, seg), "high", "rule")
+      nodes += blankNode(s"c${n + 1}", "concept", cdef.label, anchorOf(seg), "high", "rule")
         .copy(conceptId = cid, kind = cdef.kind, relevance = "supporting")
     }
     // issues
     issueSents.zipWithIndex.foreach { case (i, n) =>
       val seg = doc.sentences(i)
-      nodes += blankNode(s"i${n + 1}", "issue", seg.text, anchorFor(doc, seg), "high", "rule")
+      nodes += blankNode(s"i${n + 1}", "issue", seg.text, anchorOf(seg), "high", "rule")
     }
     // arguments: actor from the earliest alias-cue occurrence coerced through
     // the reference's full actor map + heuristics (extractor.py:365-563);
     // scheme from deterministic cue buckets, normalized to the 19-value enum
+    val actorCueAt = new Array[Int](ActorCueRaw.length)
     argSents.zipWithIndex.foreach { case (i, n) =>
       val seg = doc.sentences(i)
       val low = sentLower(i)
-      // manual argmin over (pos, -cueLen, raw): the iterator/tuple chain
-      // allocated three objects per cue per argument sentence
+      // argmin over (first position, -cueLen, raw) of the cues in the
+      // sentence; one automaton pass finds every cue's first position
+      java.util.Arrays.fill(actorCueAt, -1)
+      ActorCueScan.scan(low, (pid, start) => if (actorCueAt(pid) < 0) actorCueAt(pid) = start)
       var bestPos = Int.MaxValue
       var bestNegLen = 0
       var bestRaw: String = null
-      var cs = ActorCues
-      while (cs.nonEmpty) {
-        val (cue, raw) = cs.head
-        val p = low.indexOf(cue)
+      var pid = 0
+      while (pid < actorCueAt.length) {
+        val p = actorCueAt(pid)
         if (p >= 0) {
-          val nl = -cue.length
+          val nl = -ActorCueScan.phraseLengths(pid)
+          val raw = ActorCueRaw(pid)
           if (bestRaw == null || p < bestPos ||
               (p == bestPos && (nl < bestNegLen ||
                 (nl == bestNegLen && raw < bestRaw)))) {
             bestPos = p; bestNegLen = nl; bestRaw = raw
           }
         }
-        cs = cs.tail
+        pid += 1
       }
       val actor =
         if (bestRaw != null) graft.kg.rules.Actors.coerceActor(bestRaw)
         else "third_party"
       val scheme = graft.kg.rules.Actors.coerceScheme(
         graft.kg.rules.Actors.inferScheme(low))
-      nodes += blankNode(s"a${n + 1}", "argument", seg.text, anchorFor(doc, seg), "high", "rule")
+      nodes += blankNode(s"a${n + 1}", "argument", seg.text, anchorOf(seg), "high", "rule")
         .copy(actor = actor, claim = seg.text, schemes = Seq(scheme))
     }
     // holdings
     holdingSents.zipWithIndex.foreach { case (i, n) =>
       val seg = doc.sentences(i)
-      nodes += blankNode(s"h${n + 1}", "holding", seg.text, anchorFor(doc, seg), "high", "rule")
+      nodes += blankNode(s"h${n + 1}", "holding", seg.text, anchorOf(seg), "high", "rule")
         .copy(isRatio = true)
     }
     // precedents
@@ -561,7 +652,7 @@ object DocExtractor {
     // outcome
     outcomeSentOpt.foreach { case (i, disp) =>
       val seg = doc.sentences(i)
-      nodes += blankNode("outcome", "outcome", seg.text, anchorFor(doc, seg), "high", "rule")
+      nodes += blankNode("outcome", "outcome", seg.text, anchorOf(seg), "high", "rule")
         .copy(disposition = disp)
     }
 
@@ -577,12 +668,9 @@ object DocExtractor {
     // ---- Stage 4: auto-fill resolves_issue (extractor.py:4587-4628) ---------
     if (holdings.nonEmpty && issues.nonEmpty) {
       val kwBilingualCache = mutable.Map.empty[String, Set[String]]
-      def kwBilingual(n: Node): Set[String] = kwBilingualCache.getOrElseUpdate(n.id, {
-        val combined = (Option(n.text).getOrElse("") + " " +
-          Option(n.anchor).map(_.surfaceText).getOrElse(""))
+      def kwBilingual(n: Node): Set[String] = kwBilingualCache.getOrElseUpdate(n.id,
         // \b\w{4,}\b equivalent via the shared scanner (extractor.py:4601)
-        Normalize.tokenSet(combined, 4)
-      })
+        words.words(textAndSurface(n)))
       val issueKw = issues.map(kwBilingual)
       holdings =
         if (issues.size == 1) holdings.map(_.copy(resolvesIssue = issues.head.id))
@@ -595,10 +683,6 @@ object DocExtractor {
     }
 
     // ---- Stage 5: clustering (extractor.py:1409-1637) -----------------------
-    val nodeText: Map[String, String] = (facts ++ issues ++ args ++ holdings).map(n => n.id -> n.text).toMap ++
-      conceptNodes.map(n => n.id -> (n.conceptId + " " + n.text)).toMap ++
-      precedents.map(n => n.id -> List(Option(n.caseName), Option(n.citation)).flatten.mkString(" ")).toMap
-
     final case class Cluster(
         id: String, label: String, logic: String,
         requires: List[String],
@@ -641,23 +725,29 @@ object DocExtractor {
       addMember(best, c)
     }
 
-    // Pre-process each node's text ONCE; scoring against all 54 clusters is
-    // then O(phrases) substring checks per cluster (the naive per-pair
-    // re-normalization was the extraction hot spot).
-    val matchTextCache = mutable.Map.empty[String, graft.kg.ontology.MatchText]
-    def mtOf(text: String): graft.kg.ontology.MatchText =
-      matchTextCache.getOrElseUpdate(text, graft.kg.ontology.MatchText.of(text, turkish))
-
-    // score-fallback assignment = the public argmaxCluster (oracle-driven in
-    // q70) over the cached MatchText, with pseudo labels resolved from the
-    // live cluster table
-    def argmaxClusterLocal(text: String, candidates: Iterable[String], minScore: Int): Option[String] =
-      argmaxCluster(mtOf(text), candidates, minScore, ontology,
-        cid => clusters(cid).label, turkish)
+    // Pre-process each node's text ONCE (within this call); scoring against
+    // all 54 clusters is then O(phrases) substring checks per cluster (the
+    // naive per-pair re-normalization was the extraction hot spot).
+    final class NodeText(text: String) {
+      val mt: MatchText = MatchText.of(text, turkish, words.keywords(text))
+      lazy val possible: Array[Boolean] = ontology.candidateConcepts(mt.keywords)
+    }
+    val nodeTextCache = mutable.HashMap.empty[String, NodeText]
+    def textOf(text: String): NodeText = nodeTextCache.getOrElseUpdate(text, new NodeText(text))
+    def mtOf(text: String): MatchText = textOf(text).mt
 
     // candidate list in legacy insertion order (all ontology cids + pseudos
-    // created by the concept pass above — later passes never add clusters)
-    val allCandidates: List[String] = canonicalClusterIds.toList
+    // created by the concept pass above — later passes never add clusters),
+    // with pseudo labels resolved from the live cluster table
+    val allCandidates: Array[ClusterCandidate] =
+      clusterCandidates(canonicalClusterIds.toList, ontology, cid => clusters(cid).label)
+
+    // score-fallback assignment = the public argmaxCluster (oracle-driven in
+    // q70) over the cached node text and the prepared candidates
+    def argmaxClusterLocal(text: String, candidates: Array[ClusterCandidate], minScore: Int): Option[String] = {
+      val nt = textOf(text)
+      argmaxOver(nt.mt, nt.possible, candidates, minScore, turkish)
+    }
     // issues: no primary_concepts in v1 → score fallback (min 3)
     for (i <- issues)
       argmaxClusterLocal(i.text, allCandidates, 3).foreach(cid => addMember(cid, i))
@@ -672,9 +762,9 @@ object DocExtractor {
     // facts / arguments: min score 2, only clusters with issues/holdings/concepts
     // (constant during fact/argument/precedent assignment — those additions
     // never seed new clusters — so computed once, not per node)
-    val seededClusters: List[String] = canonicalClusterIds.filter(cid =>
-      clusters.get(cid).exists(cl => cl.members("issue").nonEmpty ||
-        cl.members("holding").nonEmpty || cl.members("concept").nonEmpty)).toList
+    val seededClusters: Array[ClusterCandidate] = allCandidates.filter(c =>
+      clusters.get(c.cid).exists(cl => cl.members("issue").nonEmpty ||
+        cl.members("holding").nonEmpty || cl.members("concept").nonEmpty))
     for (f <- facts)
       argmaxClusterLocal(f.text, seededClusters, 2).foreach(cid => addMember(cid, f))
     for (a <- args)
@@ -684,10 +774,11 @@ object DocExtractor {
       val name = Option(p.caseName).getOrElse("").toLowerCase(Locale.ROOT)
       val hits = if (name.nonEmpty)
         concepts.collect { case (cid, cdef)
-          if cdef.establishingCases.exists(_.toLowerCase(Locale.ROOT).contains(name)) => cid }
+          if cdef.establishingCasesLower.exists(_.contains(name)) => cid }
       else Nil
       if (hits.nonEmpty) hits.foreach(cid => addMember(cid, p))
-      else argmaxClusterLocal(nodeText(p.id), seededClusters, 2).foreach(cid => addMember(cid, p))
+      else argmaxClusterLocal(List(Option(p.caseName), Option(p.citation)).flatten.mkString(" "),
+        seededClusters, 2).foreach(cid => addMember(cid, p))
     }
 
     // requirement satisfaction (extractor.py:1600-1629)
@@ -695,8 +786,8 @@ object DocExtractor {
     val factById = facts.map(f => f.id -> f).toMap
     for (cid <- canonicalClusterIds; cl <- clusters.get(cid)
          if cl.requires.nonEmpty && cl.members("fact").nonEmpty) {
-      val reqKwSets = ontology.concepts.get(cid).map(_.requiresKeywordSets.toMap)
-        .getOrElse(Map.empty)
+      val reqKwSets = ontology.concepts.get(cid).map(_.requiresKeywordSets)
+        .getOrElse(Map.empty[String, TokenSet])
       val factCands = cl.members("fact").toList.map { fid =>
         val f = factById(fid)
         (fid, mtOf(f.text).keywords, Normalize.looksNegative(f.text))
@@ -750,7 +841,7 @@ object DocExtractor {
         val h = holdings.minBy(h0 => (math.abs(h0.anchor.startChar - paraStart), h0.id))
         val rel = TreatmentPatterns(patName)
         rawEdges += mkEdge(s"e_${h.id}_${rel}_${p.id}", h.id, p.id, rel, "high",
-          "strong", critical = false, anchorFor(doc, doc.paragraphs(pi)), null, "rule")
+          "strong", critical = false, anchorOf(doc.paragraphs(pi)), null, "rule")
       }
     }
     // fact→concept pattern edges
@@ -761,9 +852,12 @@ object DocExtractor {
          c <- conceptNodeByCid.get(cid).toList) {
       val conf = ontology.patterns.get(hit.patternName).flatMap(_.confidence).getOrElse("medium")
       rawEdges += mkEdge(s"e_${f.id}_${relRaw}_${c.id}", f.id, c.id, relRaw, conf,
-        "moderate", critical = false, anchorFor(doc, doc.sentences(i)), null, "rule")
+        "moderate", critical = false, anchorOf(doc.sentences(i)), null, "rule")
     }
 
+    // anchor of the first node with each id
+    val firstAnchor = mutable.HashMap.empty[String, Anchor]
+    nodes.foreach(n => if (!firstAnchor.contains(n.id)) firstAnchor(n.id) = n.anchor)
     // (b) gated intra-cluster support edges (replaces LLM pass 8; gate per
     //     extractor.py:4756-4763: ≥2 nodes and (holding or issue or ≥2 args))
     for ((cid, cl) <- liveClusters.toList.sortBy(_._1)) {
@@ -773,7 +867,7 @@ object DocExtractor {
         var n = 0
         for ((src, tgt, rel) <- plan) {
           n += 1
-          val srcAnchor = nodes.find(_.id == src).map(_.anchor).orNull
+          val srcAnchor = firstAnchor.get(src).orNull
           rawEdges += mkEdge(s"e_${tag}_$n", src, tgt, rel, "medium", "moderate",
             critical = false, srcAnchor, null, "rule")
         }
@@ -788,12 +882,11 @@ object DocExtractor {
         "rule")
     }
     outcome.foreach { o =>
-      val outcomeKw = Normalize.keywordSet(
-        Option(o.text).getOrElse("") + " " + Option(o.anchor).map(_.surfaceText).getOrElse(""))
+      val outcomeKw = words.keywords(textAndSurface(o))
       val ratioHoldings = holdings.filter(_.isRatio)
       if (ratioHoldings.nonEmpty) {
         val scored = ratioHoldings.map(h =>
-          (Normalize.overlap(Normalize.keywordSet(h.text), outcomeKw), h))
+          (words.keywords(h.text).overlap(outcomeKw, Int.MaxValue), h))
         // relation per holding incl. the all-zero latest-by-anchor fallback
         // (extractor.py:4160-4168) — shared with the oracle harness; a
         // missing anchor sorts as -1 (extractor.py:4164 `a.start_char if a
@@ -839,7 +932,7 @@ object DocExtractor {
       precedents ++ outcome.toVector)
     val deduped: Vector[EdgeRow] =
       if (repairOrphans) {
-        val (rep, repWarnings) = OrphanRepair.repair(allNodesPreJs, dedupedPreRepair)
+        val (rep, repWarnings) = OrphanRepair.repair(allNodesPreJs, dedupedPreRepair, words = words)
         warnings ++= repWarnings
         rep
       } else dedupedPreRepair

@@ -208,7 +208,7 @@ object GraphAssembly {
     * validation (extractor.py:4832-4847): case-insensitive substring match —
     * error patterns win over cosmetic ones; everything else is substantive. */
   def classifyWarning(w: String): String = {
-    val lw = w.toLowerCase
+    val lw = w.toLowerCase(java.util.Locale.ROOT)
     if (ErrorPatterns.exists(lw.contains)) "error"
     else if (CosmeticPatterns.exists(lw.contains)) "cosmetic"
     else "substantive"

@@ -2,7 +2,7 @@ package graft.kg.extract
 
 import graft.kg.model.{EdgeRow, Node}
 import graft.kg.rules.Relations
-import graft.kg.text.Normalize
+import graft.kg.text.{Normalize, TokenSet}
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
@@ -64,7 +64,7 @@ object OrphanRepair {
 
   /** The repair engine's own stop list — base stopwords + legal/ECHR noise
     * (repair_orphans.py:96-160, ALL_STOPS, ported verbatim). */
-  val RepairStops: Set[String] = Set(
+  val RepairStops: Set[String] = TokenSet.from(Seq(
     "a", "about", "above", "accordance", "accordingly", "accused", "act", "admissibility",
     "admissible", "after", "against", "all", "allegation", "alleged", "alleging", "also",
     "an", "and", "ankara", "any", "appeal", "appellant", "applicant", "applicants",
@@ -95,12 +95,19 @@ object OrphanRepair {
     "this", "those", "through", "to", "trial", "tribunal", "turkey", "turkish",
     "unanimously", "under", "unreasonable", "upon", "view", "violated", "violating", "violation",
     "was", "we", "were", "whereas", "wherein", "whether", "which", "whom",
-    "whose", "will", "with", "without", "would", "writ", "yes", "you")
+    "whose", "will", "with", "without", "would", "writ", "yes", "you"))
 
   /** keyword_set (repair_orphans.py:157-160): ASCII tokens ≥ 4 chars minus
     * the repair stop list. */
-  def repairKeywords(text: String): Set[String] =
+  def repairKeywords(text: String): TokenSet =
     Normalize.asciiKeywordSet(text, 4, RepairStops)
+
+  /** [[repairKeywords]] of `text`, from the words of `words` when the text
+    * is pure ASCII (there the repair tokenizer and the word scanner read the
+    * same tokens). */
+  private def repairKeywords(text: String, words: Normalize.TextWords): TokenSet =
+    if (text != null && Normalize.isAscii(text)) words.words(text).without(RepairStops)
+    else repairKeywords(text)
 
   /** Field-level legitimate-orphan predicate (is_legitimate_orphan,
     * repair_orphans.py:242-262) — public so the oracle harness can drive it
@@ -126,18 +133,38 @@ object OrphanRepair {
     * repair_orphans.py:214-239). The loader/extractor stores the remaining
     * composite parts in `text`; the typed fields re-attach here. */
   private def nodeText(n: Node): String = n.nodeType match {
-    case "concept" =>
-      List(Option(n.conceptId), Option(n.text)).flatten.mkString(" ")
-    case "precedent" =>
-      List(Option(n.citation), Option(n.text), Option(n.caseName)).flatten.mkString(" ")
+    case "concept" => joinPresent(n.conceptId, n.text, null)
+    case "precedent" => joinPresent(n.citation, n.text, n.caseName)
     case _ => Option(n.text).getOrElse("")
   }
 
-  private def anchorMid(n: Node): Option[Int] =
-    Option(n.anchor).flatMap(a =>
-      if (a.endChar > a.startChar && a.startChar >= 0)
-        Some((a.startChar + a.endChar) / 2)
-      else None)
+  /** The non-null parts joined by single spaces. */
+  private def joinPresent(a: String, b: String, c: String): String = {
+    val sb = new java.lang.StringBuilder
+    var first = true
+    def add(p: String): Unit = if (p != null) {
+      if (!first) sb.append(' ')
+      sb.append(p)
+      first = false
+    }
+    add(a); add(b); add(c)
+    sb.toString
+  }
+
+  /** Anchor midpoint, or -1 without a usable anchor. */
+  private def anchorMid(n: Node): Int = {
+    val a = n.anchor
+    if (a != null && a.endChar > a.startChar && a.startChar >= 0) (a.startChar + a.endChar) / 2
+    else -1
+  }
+
+  /** The score in the explanation's one-decimal form, `"%.1f"` under
+    * `Locale.ROOT` written out: every score is a positive overlap count
+    * plus multiples of 0.5, so its tenths are exact and nothing rounds. */
+  private[extract] def oneDecimal(score: Double): String = {
+    val tenths = Math.round(score * 10)
+    s"${tenths / 10}.${tenths % 10}"
+  }
 
   /** Per-pair candidate scoring + direction choice (repair_orphans.py:36-91,
     * 454-543): direction from relation-matrix membership (forward pair wins,
@@ -154,17 +181,48 @@ object OrphanRepair {
       orphanKw: Set[String], candKw: Set[String],
       claimKw: () => Set[String],
       connected: Boolean,
-      minScore: Double): Option[(Double, String, String, String)] = {
-    val pair = (orphan.nodeType, cand.nodeType)
-    val rev = (cand.nodeType, orphan.nodeType)
+      minScore: Double): Option[(Double, String, String, String)] =
+    direction(orphan.nodeType, cand.nodeType).flatMap { case (forward, rel) =>
+      scorePair(orphan, cand, anchorMid(orphan), anchorMid(cand),
+        TokenSet.of(orphanKw), TokenSet.of(candKw), () => TokenSet.of(claimKw()),
+        connected, minScore, forward, rel)
+    }
+
+  private final class TargetDirection(val forward: Boolean, val relation: String)
+
+  /** Node types as small ints: the index into the arrays below (the last
+    * code is every other type). */
+  private val TypeCodes = Vector("fact", "concept", "issue", "argument", "holding", "precedent")
+  private def typeCode(nodeType: String): Int = {
+    val c = TypeCodes.indexOf(nodeType)
+    if (c >= 0) c else TypeCodes.length
+  }
+
+  /** Per orphan type, per candidate type code: the direction and default
+    * relation when the candidate type is one of the orphan type's targets
+    * and has a direction, else null. */
+  private val TargetDirections: Map[String, Array[TargetDirection]] =
+    TargetPriorities.map { case (orphanType, targets) =>
+      orphanType -> Array.tabulate(TypeCodes.length + 1) { code =>
+        if (code < TypeCodes.length && targets.contains(TypeCodes(code)))
+          direction(orphanType, TypeCodes(code)).map { case (fwd, rel) =>
+            new TargetDirection(fwd, rel)
+          }.orNull
+        else null
+      }
+    }
+  private val NoTargets = new Array[TargetDirection](TypeCodes.length + 1)
+
+  /** (forward, default relation) for an orphan of `orphanType` and a
+    * candidate of `candType`: the forward pair when the matrix has it, else
+    * the reversed pair, else None. */
+  private def direction(orphanType: String, candType: String): Option[(Boolean, String)] = {
+    val pair = (orphanType, candType)
+    val rev = (candType, orphanType)
     if (Relations.Matrix.contains(pair))
-      scorePair(orphan, cand, orphanKw, candKw, claimKw, connected, minScore,
-        forward = true, DefaultRelations.getOrElse(pair,
-          Relations.Matrix(pair).toList.sorted.head))
+      Some((true, DefaultRelations.getOrElse(pair, Relations.Matrix(pair).toList.sorted.head)))
     else if (Relations.Matrix.contains(rev))
-      scorePair(orphan, cand, orphanKw, candKw, claimKw, connected, minScore,
-        forward = false, DefaultRelations.getOrElse(rev,
-          Relations.Matrix(rev).toList.sorted.head))
+      Some((false, DefaultRelations.getOrElse(rev, Relations.Matrix(rev).toList.sorted.head)))
     else None
   }
 
@@ -175,25 +233,26 @@ object OrphanRepair {
     * accumulation order is IDENTICAL to the reference. */
   private def scorePair(
       orphan: Node, cand: Node,
-      orphanKw: Set[String], candKw: Set[String],
-      claimKw: () => Set[String],
+      orphanMid: Int, candMid: Int,
+      orphanKw: TokenSet, candKw: TokenSet,
+      claimKw: () => TokenSet,
       connected: Boolean,
       minScore: Double,
       forward: Boolean, rel: String): Option[(Double, String, String, String)] = {
     val src = if (forward) orphan.id else cand.id
     val tgt = if (forward) cand.id else orphan.id
-    val overlap = Normalize.overlap(orphanKw, candKw)
+    val overlap = orphanKw.overlap(candKw, Int.MaxValue)
     if (overlap == 0) None
     else {
       var score = overlap.toDouble
-      for (om <- anchorMid(orphan); cm <- anchorMid(cand)) {
-        val d = math.abs(om - cm)
+      if (orphanMid >= 0 && candMid >= 0) {
+        val d = math.abs(orphanMid - candMid)
         if (d < 300) score += 2.0
         else if (d < 800) score += 1.0
         else if (d < 2000) score += 0.5
       }
       if (orphan.nodeType == "argument" && cand.nodeType == "issue" &&
-        Normalize.overlap(claimKw(), candKw) >= 3) score += 1.5
+        claimKw().overlap(candKw, 3) >= 3) score += 1.5
       if (orphan.nodeType == "fact" && cand.nodeType == "holding" &&
         orphan.courtFinding == "accepted") score += 1.0
       if (orphan.nodeType == "precedent" &&
@@ -218,13 +277,35 @@ object OrphanRepair {
         if (orphan.claim != null) orphan.claim else orphan.text),
       connected, minScore)
 
-  /** Returns (repaired edges, warnings). Input edges are assumed deduped. */
+  /** `candidates` stably sorted by descending score (ties keep their
+    * order, as Python's list.sort): an insertion sort, since an orphan has
+    * tens of candidates, that compares the scores unboxed once each. */
+  private def byScoreDescending(
+      candidates: ArrayBuffer[(Double, String, String, String)]): Array[(Double, String, String, String)] = {
+    val out = candidates.toArray
+    val scores = out.map(_._1)
+    var i = 1
+    while (i < out.length) {
+      val c = out(i)
+      val s = scores(i)
+      var j = i - 1
+      while (j >= 0 && scores(j) < s) { out(j + 1) = out(j); scores(j + 1) = scores(j); j -= 1 }
+      out(j + 1) = c
+      scores(j + 1) = s
+      i += 1
+    }
+    out
+  }
+
+  /** Returns (repaired edges, warnings). Input edges are assumed deduped.
+    * `words` may carry the caller's scans of the node texts. */
   def repair(
       nodes: Vector[Node],
       edges: Vector[EdgeRow],
       minScore: Double = 2.0,
       maxEdgesPerOrphan: Int = 2,
-      runnerUpThreshold: Double = 3.5): (Vector[EdgeRow], Vector[String]) = {
+      runnerUpThreshold: Double = 3.5,
+      words: Normalize.TextWords = new Normalize.TextWords): (Vector[EdgeRow], Vector[String]) = {
 
     val convId = nodes.headOption.map(_.convId).getOrElse("")
     val eligible = nodes.filter(n => n.nodeType != "outcome")
@@ -233,23 +314,29 @@ object OrphanRepair {
     // orphans as indices into the eligible array (same member set and id
     // order as the previous node-valued list)
     val eligibleArr = eligible.toArray
+    val texts = eligibleArr.map(nodeText)
     val orphanIdxs = eligibleArr.indices
       .filter { i =>
         val n = eligibleArr(i)
-        !connected.contains(n.id) && nodeText(n).trim.length >= 10 &&
+        !connected.contains(n.id) && texts(i).trim.length >= 10 &&
           !isLegitimateOrphan(n)
       }
       .sortBy(eligibleArr(_).id)
     if (orphanIdxs.isEmpty) return (edges, Vector.empty)
 
-    // keyword sets cached by ELIGIBLE INDEX (lazy): the previous id-keyed
-    // map hashed the node-id string twice per candidate pair
-    val kwArr = new Array[Set[String]](eligibleArr.length)
-    def kwAt(i: Int): Set[String] = {
+    // per eligible index: keyword set (lazy), anchor midpoint, and whether
+    // the node has an edge (repairs connect more as they are added)
+    val kwArr = new Array[TokenSet](eligibleArr.length)
+    def kwAt(i: Int): TokenSet = {
       var s = kwArr(i)
-      if (s == null) { s = repairKeywords(nodeText(eligibleArr(i))); kwArr(i) = s }
+      if (s == null) { s = repairKeywords(texts(i), words); kwArr(i) = s }
       s
     }
+    val mids = eligibleArr.map(anchorMid)
+    val typeCodes = eligibleArr.map(n => typeCode(n.nodeType))
+    val isConnected = eligibleArr.map(n => connected.contains(n.id))
+    def markConnected(id: String): Unit =
+      eligibleArr.indices.foreach(i => if (eligibleArr(i).id == id) isConnected(i) = true)
 
     val existingSigs = mutable.Set.empty[(String, String, String)]
     val connectedPairs = mutable.Set.empty[Set[String]]
@@ -266,57 +353,28 @@ object OrphanRepair {
 
     for (oi <- orphanIdxs) {
       val orphan = eligibleArr(oi)
-      val priorities = TargetPriorities.getOrElse(orphan.nodeType, Nil)
-      // direction + default relation depend only on the TYPE pair: resolve
-      // once per (orphan, priority type) — parallel arrays double as the
-      // priorities.contains membership test (≤ 4 entries, linear scan)
-      val prioTypes = priorities.toArray
-      val prioFwd = new Array[Boolean](prioTypes.length)
-      val prioRel = new Array[String](prioTypes.length) // null = no valid direction
-      var pi = 0
-      while (pi < prioTypes.length) {
-        val t = prioTypes(pi)
-        val pair = (orphan.nodeType, t)
-        val rev = (t, orphan.nodeType)
-        if (Relations.Matrix.contains(pair)) {
-          prioFwd(pi) = true
-          prioRel(pi) = DefaultRelations.getOrElse(pair,
-            Relations.Matrix(pair).toList.sorted.head)
-        } else if (Relations.Matrix.contains(rev)) {
-          prioFwd(pi) = false
-          prioRel(pi) = DefaultRelations.getOrElse(rev,
-            Relations.Matrix(rev).toList.sorted.head)
-        }
-        pi += 1
-      }
+      val targets = TargetDirections.getOrElse(orphan.nodeType, NoTargets)
       val orphanKw = kwAt(oi)
       // claim keywords are per-ORPHAN, not per-pair — computed once here
-      lazy val claimKw: Set[String] = {
-        val claimText = if (orphan.claim != null) orphan.claim else orphan.text
-        repairKeywords(claimText)
-      }
+      lazy val claimKw: TokenSet =
+        repairKeywords(if (orphan.claim != null) orphan.claim else orphan.text, words)
       // (score, relation, src, tgt) in candidate-node order — the sort below
       // is stable, so equal scores keep this order (reference list.sort)
       val candidates = ArrayBuffer.empty[(Double, String, String, String)]
+      val claimOf = () => claimKw
       var cj = 0
       while (cj < eligibleArr.length) {
         val cand = eligibleArr(cj)
-        var ti = -1
-        var x = 0
-        while (x < prioTypes.length && ti < 0) {
-          if (prioTypes(x) == cand.nodeType) ti = x
-          x += 1
-        }
-        if (ti >= 0 && cand.id != orphan.id && prioRel(ti) != null)
-          scorePair(orphan, cand, orphanKw, kwAt(cj), () => claimKw,
-            connected.contains(cand.id), minScore, prioFwd(ti), prioRel(ti))
+        val t = targets(typeCodes(cj))
+        if (t != null && cand.id != orphan.id)
+          scorePair(orphan, cand, mids(oi), mids(cj), orphanKw, kwAt(cj), claimOf,
+            isConnected(cj), minScore, t.forward, t.relation)
             .foreach(candidates += _)
         cj += 1
       }
-      val sorted = candidates.sortBy(-_._1) // stable: ties keep node order
       var added = 0
       var stop = false
-      for ((score, rel, src, tgt) <- sorted if !stop) {
+      for ((score, rel, src, tgt) <- byScoreDescending(candidates) if !stop) {
         if (added >= maxEdgesPerOrphan || (added >= 1 && score < runnerUpThreshold))
           stop = true
         else {
@@ -333,8 +391,7 @@ object OrphanRepair {
               isCritical = false,
               supportGroupIds = Seq.empty,
               // Locale.ROOT: the decimal point must not follow the default locale
-              explanation = "Orphan repair: score=" +
-                "%.1f".formatLocal(java.util.Locale.ROOT, score) + ", " +
+              explanation = "Orphan repair: score=" + oneDecimal(score) + ", " +
                 s"${Relations.nodeTypeFromId(src)}->${Relations.nodeTypeFromId(tgt)}",
               anchor = null,
               method = "inference",
@@ -342,8 +399,8 @@ object OrphanRepair {
             existingSigs += sig
             existingIds += id
             connectedPairs += pairKey
-            connected += src
-            connected += tgt
+            markConnected(src)
+            markConnected(tgt)
             added += 1
           }
         }
@@ -351,8 +408,7 @@ object OrphanRepair {
       if (added > 0) warnings += s"orphan ${orphan.id} repaired with $added edge(s)"
     }
 
-    ((edges ++ newEdges).sortBy(e => (e.source, e.target, e.relation, e.id)),
-      warnings.toVector)
+    ((edges ++ newEdges).sorted(DocExtractor.EdgeOrder), warnings.toVector)
   }
 
   /** Only the repair-added edges, in creation order — the comparable unit of

@@ -1,7 +1,8 @@
 package graft.kg.ontology
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import graft.kg.text.Normalize
+import graft.kg.text.{Normalize, TokenSet}
+import java.util.Locale
 import java.util.regex.Pattern
 import scala.jdk.CollectionConverters._
 
@@ -19,40 +20,48 @@ final case class ConceptDef(
 ) {
   /** Pre-computed keyword sets + lowered phrase forms for scoring (computed
     * once per broadcast ontology, not per node). */
-  lazy val conceptKeywords: Set[String] =
+  lazy val conceptKeywords: TokenSet =
     Normalize.keywordSet((label :: requires ::: defeaters ::: keyPhrases).mkString(" "))
-  lazy val requiresKeywords: Set[String] = Normalize.keywordSet(requires.mkString(" "))
-  lazy val idAndTextKeywords: Set[String] =
+  lazy val requiresKeywords: TokenSet = Normalize.keywordSet(requires.mkString(" "))
+  lazy val idAndTextKeywords: TokenSet =
     Normalize.keywordSet((id :: label :: requires ::: keyPhrases).mkString(" "))
   lazy val keyPhrasesLower: List[String] =
-    keyPhrases.filter(_.nonEmpty).map(_.toLowerCase(java.util.Locale.ROOT))
+    keyPhrases.filter(_.nonEmpty).map(_.toLowerCase(Locale.ROOT))
   lazy val keyPhrasesTurkish: List[String] =
     keyPhrases.filter(_.nonEmpty).map(Normalize.turkishLower)
   /** establishing case names, whitespace-normalized + lowered, len >= 8 */
   lazy val establishingCasesNorm: List[String] = establishingCases
     .map(cn => Normalize.normalizeWithMapping(cn)._1.trim)
-    .filter(_.length >= 8).map(_.toLowerCase(java.util.Locale.ROOT))
+    .filter(_.length >= 8).map(_.toLowerCase(Locale.ROOT))
   lazy val establishingCasesTurkish: List[String] = establishingCases
     .map(cn => Normalize.normalizeWithMapping(cn)._1.trim)
     .filter(_.length >= 8).map(Normalize.turkishLower)
   lazy val typicalFactPatternsLower: List[String] =
-    typicalFactPatterns.filter(_.nonEmpty).map(_.toLowerCase(java.util.Locale.ROOT))
+    typicalFactPatterns.filter(_.nonEmpty).map(_.toLowerCase(Locale.ROOT))
   lazy val typicalFactPatternsTurkish: List[String] =
     typicalFactPatterns.filter(_.nonEmpty).map(Normalize.turkishLower)
-  lazy val requiresKeywordSets: List[(String, Set[String])] =
-    requires.map(r => r -> Normalize.keywordSet(r))
+  lazy val requiresKeywordSets: Map[String, TokenSet] =
+    requires.map(r => r -> Normalize.keywordSet(r)).toMap
+  /** establishing case names lowered as written, for precedent-name
+    * containment */
+  lazy val establishingCasesLower: List[String] =
+    establishingCases.map(_.toLowerCase(Locale.ROOT))
 }
 
 /** A node text pre-processed once for repeated concept scoring: the
   * whitespace-normalized lowered form + keyword set. */
-final case class MatchText(raw: String, normLower: String, keywords: Set[String])
+final case class MatchText(raw: String, normLower: String, keywords: TokenSet)
 
 object MatchText {
-  def of(text: String, turkish: Boolean): MatchText = {
+  def of(text: String, turkish: Boolean): MatchText =
+    of(text, turkish, Normalize.keywordSet(text))
+
+  /** `keywords` must be `Normalize.keywordSet(text)`. */
+  def of(text: String, turkish: Boolean, keywords: TokenSet): MatchText = {
     val t = if (text == null) "" else text
-    val (norm, _) = Normalize.normalizeWithMapping(t)
-    val low = if (turkish) Normalize.turkishLower(norm) else norm.toLowerCase(java.util.Locale.ROOT)
-    MatchText(t, low, Normalize.keywordSet(t))
+    val norm = Normalize.collapseWhitespace(t)
+    val low = if (turkish) Normalize.turkishLower(norm) else norm.toLowerCase(Locale.ROOT)
+    MatchText(t, low, keywords)
   }
 }
 
@@ -73,7 +82,7 @@ final case class SignalPattern(
   lazy val matchablePhrases: List[String] = signals.flatMap { s =>
     val segments = s.split("\\[[^\\]]*\\]|\\.\\.\\.|\u2026").map(_.trim).filter(_.length >= 5)
     if (segments.isEmpty) Nil
-    else List(segments.maxBy(_.length).toLowerCase(java.util.Locale.ROOT))
+    else List(segments.maxBy(_.length).toLowerCase(Locale.ROOT))
   }.distinct
 }
 
@@ -135,24 +144,45 @@ final case class OntologyData(
   @transient lazy val compiledScan: CompiledScan = CompiledScan.build(this, turkish = false)
   @transient lazy val compiledScanTurkish: CompiledScan = CompiledScan.build(this, turkish = true)
 
-  /** Inverted keyword → concept-ids index for candidate pruning in cluster
-    * scoring. A concept can score > 0 only if it shares ≥1 index keyword
-    * with the node text OR one of its matchable phrases has an empty keyword
-    * set (those land in `alwaysCandidates`). Pruning therefore preserves the
-    * exact argmax (including iteration-order tie-breaks on the pruned-but-
-    * order-preserved candidate list). */
-  lazy val (keywordIndex: Map[String, List[String]], alwaysCandidates: Set[String]) = {
-    val idx = scala.collection.mutable.Map.empty[String, List[String]]
-    val always = scala.collection.mutable.Set.empty[String]
-    for ((cid, c) <- concepts.toList.sortBy(_._1)) {
+  /** Concept ids in sorted order. A concept's index here is its index in
+    * [[candidateConcepts]]. */
+  @transient lazy val conceptIds: Array[String] = concepts.keys.toArray.sorted
+
+  /** (id, definition) in id order. */
+  @transient lazy val sortedConcepts: List[(String, ConceptDef)] =
+    conceptIds.iterator.map(id => id -> concepts(id)).toList
+
+  /** Inverted keyword → concept-index index for candidate pruning in
+    * cluster scoring, and the concepts that are always candidates. A concept
+    * can score > 0 only if it shares ≥1 index keyword with the node text OR
+    * one of its matchable phrases has an empty keyword set (those are always
+    * candidates). Pruning therefore preserves the exact argmax (including
+    * iteration-order tie-breaks on the pruned-but-order-preserved candidate
+    * list). */
+  @transient private lazy val candidateIndex: (java.util.HashMap[String, Array[Int]], Array[Boolean]) = {
+    val idx = new java.util.HashMap[String, Array[Int]]
+    val always = new Array[Boolean](conceptIds.length)
+    for ((cid, ci) <- conceptIds.zipWithIndex) {
+      val c = concepts(cid)
       val kws = Normalize.keywordSet((cid :: c.label :: c.requires ::: c.defeaters :::
         c.keyPhrases ::: c.establishingCases ::: c.typicalFactPatterns).mkString(" "))
-      kws.foreach(k => idx(k) = idx.getOrElse(k, Nil) :+ cid)
-      val phraseless = (c.keyPhrases ++ c.establishingCasesNorm ++ c.typicalFactPatterns)
+      kws.foreach(k => idx.merge(k, Array(ci), (a, b) => a ++ b))
+      always(ci) = (c.keyPhrases ++ c.establishingCasesNorm ++ c.typicalFactPatterns)
         .exists(p => p.nonEmpty && Normalize.keywordSet(p).isEmpty)
-      if (phraseless) always += cid
     }
-    (idx.toMap, always.toSet)
+    (idx, always)
+  }
+
+  /** Per concept index: can the concept score > 0 against a text with
+    * these keywords? */
+  def candidateConcepts(keywords: TokenSet): Array[Boolean] = {
+    val (keywordIndex, alwaysCandidates) = candidateIndex
+    val out = alwaysCandidates.clone()
+    keywords.foreach { k =>
+      val cis = keywordIndex.get(k)
+      if (cis != null) cis.foreach(ci => out(ci) = true)
+    }
+    out
   }
 }
 
@@ -186,16 +216,16 @@ object Ontology {
       val items = l.map(x => String.valueOf(x).trim)
       if (items.isEmpty) ("and", Nil)
       else {
-        val first = items.head.toUpperCase
+        val first = items.head.toUpperCase(Locale.ROOT)
         val logic = if (first.startsWith("[OR")) "or" else "and"
         val start = if (first.startsWith("[")) 1 else 0
-        (logic, items.drop(start).filter(s => s.nonEmpty && !s.toUpperCase.startsWith("[")))
+        (logic, items.drop(start).filter(s => s.nonEmpty && !s.toUpperCase(Locale.ROOT).startsWith("[")))
       }
     case s: String =>
       var text = s.trim
       if (text.isEmpty) return ("and", Nil)
       var logic = "and"
-      val up = text.toUpperCase
+      val up = text.toUpperCase(Locale.ROOT)
       if (up.startsWith("[OR")) { logic = "or"; text = text.replaceFirst("(?i)^\\s*\\[OR\\]?\\s*", "") }
       else if (up.startsWith("[AND")) { text = text.replaceFirst("(?i)^\\s*\\[AND\\]?\\s*", "") }
       val parts =
@@ -343,18 +373,27 @@ object Ontology {
     if (mt.raw.isEmpty) return 0
     val low = mt.normLower
     var score = 0
-    val phrases = if (turkish) c.keyPhrasesTurkish else c.keyPhrasesLower
-    for (ph <- phrases if low.contains(ph)) score += phraseWeight
-
-    val cases = if (turkish) c.establishingCasesTurkish else c.establishingCasesNorm
-    if (cases.exists(low.contains)) score += 8
-
-    val pats = if (turkish) c.typicalFactPatternsTurkish else c.typicalFactPatternsLower
-    if (pats.exists(low.contains)) score += 3
-
-    score += Normalize.overlap(mt.keywords, c.conceptKeywords, cap = 4)
-    score += Normalize.overlap(mt.keywords, c.requiresKeywords, cap = 4)
+    var phrases = if (turkish) c.keyPhrasesTurkish else c.keyPhrasesLower
+    while (phrases.nonEmpty) {
+      if (low.contains(phrases.head)) score += phraseWeight
+      phrases = phrases.tail
+    }
+    if (containsAny(low, if (turkish) c.establishingCasesTurkish else c.establishingCasesNorm))
+      score += 8
+    if (containsAny(low, if (turkish) c.typicalFactPatternsTurkish else c.typicalFactPatternsLower))
+      score += 3
+    score += mt.keywords.overlap(c.conceptKeywords, 4)
+    score += mt.keywords.overlap(c.requiresKeywords, 4)
     score
+  }
+
+  private def containsAny(low: String, phrases: List[String]): Boolean = {
+    var ps = phrases
+    while (ps.nonEmpty) {
+      if (low.contains(ps.head)) return true
+      ps = ps.tail
+    }
+    false
   }
 
   /** Best ontology concept for a raw concept id + text: exact id, substring of
@@ -370,7 +409,7 @@ object Ontology {
     if (concepts.contains(cid)) return Some(cid)
     val sub = concepts.keys.filter(_.contains(cid))
     if (sub.nonEmpty) return Some(sub.toList.sortBy(k => (-k.length, k)).head)
-    val rawId = cid.toUpperCase
+    val rawId = cid.toUpperCase(Locale.ROOT)
     if (List("CONST_", "STATUTE_", "PROCEDURE_", "REMEDY_", "RIGHT_").exists(rawId.startsWith))
       return None
     val nodeKw = Normalize.keywordSet(cid + " " + Option(nodeText).getOrElse(""))

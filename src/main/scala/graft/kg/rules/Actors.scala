@@ -75,11 +75,11 @@ object Actors {
       val mapped = extraAliases.get(normalized)
         .orElse(extraAliases.get(canonKey(actor)))
       for (m <- mapped) {
-        val mn = Option(normalizeActor(m)).getOrElse(m.trim.toLowerCase)
+        val mn = Option(normalizeActor(m)).getOrElse(m.trim.toLowerCase(java.util.Locale.ROOT))
         if (ActorTypes.contains(mn)) return mn
       }
     }
-    val a = normalized.toLowerCase
+    val a = normalized.toLowerCase(java.util.Locale.ROOT)
     def anyOf(pats: String*): Boolean = pats.exists(a.contains)
     if (anyOf("gov", "union", "state", "ministry", "department", "authority",
       "board", "commission", "corporation", "municipal", "council", "committee"))

@@ -91,7 +91,7 @@ object Relations {
       }
       new String(buf, 0, n)
     } else {
-      sIn.trim.toLowerCase.replace("-", "_").replace(" ", "_")
+      sIn.trim.toLowerCase(java.util.Locale.ROOT).replace("-", "_").replace(" ", "_")
         .replaceAll("_+", "_")
     }
   }

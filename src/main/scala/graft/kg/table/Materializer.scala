@@ -3,6 +3,7 @@ package graft.kg.table
 import graft.kg.pipeline.KgPipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Materialize the full KG table set (nodes, edges, triples, justification
   * sets, chains, cluster members, requirements, summaries) partitioned by
@@ -91,6 +92,11 @@ object Materializer {
       "requirements" -> branch("requirement"),
       "summaries" -> branch("summary"))
 
+    // the schema each table is written with: reading a table back with it
+    // counts an empty table (no part files to infer a schema from) as 0
+    val written: Map[String, StructType] =
+      outputs.map { case (name, df) => name -> addBucket(df, "convId").schema }.toMap
+
     // materialize the shared extraction cache ONCE (a cheap columnar count)
     // before fanning the 8 independent table writes out over a small thread
     // pool: concurrent jobs back-fill each other's straggler tails instead
@@ -113,7 +119,7 @@ object Materializer {
               .partitionBy("bucket").parquet(s"$root/$name")
             // count what was WRITTEN (column-less scan over the output
             // footers), not a recompute of the table's full lineage
-            name -> spark.read.parquet(s"$root/$name").count()
+            name -> readAs(spark, root, name, written.get(name)).count()
           }
         }
         scala.concurrent.Await.result(
@@ -138,7 +144,7 @@ object Materializer {
     union.unpersist()
 
     // a bucket without conversations has no rows but is still committed
-    val found = lineage(spark, root, "extract", Some(pendingBuckets))
+    val found = lineage(spark, root, "extract", Some(pendingBuckets), written)
     val snap = store.commit(pendingBuckets.map(b =>
       found.getOrElse(b, BucketLineage(b, "extract", 0L, Map.empty, Map.empty, "0"))))
     Report(snap.id, pendingBuckets, done.toList.sorted, rowCounts)
@@ -146,7 +152,13 @@ object Materializer {
 
   /** Read a materialized table (bucket-partitioned parquet). */
   def read(spark: SparkSession, root: String, table: String): DataFrame =
-    spark.read.parquet(s"$root/$table")
+    readAs(spark, root, table, None)
+
+  /** [[read]] with the schema the table was written with, when known;
+    * else the schema is inferred from the part files. */
+  private def readAs(spark: SparkSession, root: String, table: String,
+      schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(s"$root/$table")
 
   /** Stats reconstruction (run_iltur.py:625-668): when the snapshot log is
     * lost or partial, re-derive per-bucket lineage (counts + content hash)
@@ -161,11 +173,12 @@ object Materializer {
     * (all when None): extraction counts from summaries and an
     * order-independent content hash over the triple set. Both aggregate
     * tiny bucket-pruned columnar scans of the parquet on disk, never the
-    * extraction cache. */
+    * extraction cache. `schemas` are the written schemas, when known. */
   private def lineage(spark: SparkSession, root: String, stage: String,
-      only: Option[Seq[Int]]): Map[Int, BucketLineage] = {
+      only: Option[Seq[Int]],
+      schemas: Map[String, StructType] = Map.empty): Map[Int, BucketLineage] = {
     def scan(table: String): DataFrame = {
-      val df = read(spark, root, table)
+      val df = readAs(spark, root, table, schemas.get(table))
       only.fold(df)(bs => df.filter(col("bucket").isin(bs: _*)))
     }
     val hashByBucket = scan("triples")

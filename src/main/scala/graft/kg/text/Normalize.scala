@@ -35,6 +35,38 @@ object Normalize {
     (sb.toString, map.result())
   }
 
+  /** The string of [[normalizeWithMapping]] without the index map; `raw`
+    * itself when every whitespace char in it is a lone space. */
+  def collapseWhitespace(raw: String): String = {
+    var i = 0
+    var prevWs = false
+    while (i < raw.length) {
+      val c = raw.charAt(i)
+      if ((c <= ' ' || c >= 0x80) && Character.isWhitespace(c)) {
+        if (c != ' ' || prevWs) return collapseRuns(raw)
+        prevWs = true
+      } else prevWs = false
+      i += 1
+    }
+    raw
+  }
+
+  private def collapseRuns(raw: String): String = {
+    val sb = new java.lang.StringBuilder(raw.length)
+    var inWs = false
+    var i = 0
+    while (i < raw.length) {
+      val ch = raw.charAt(i)
+      if (Character.isWhitespace(ch)) {
+        if (!inWs) { sb.append(' '); inWs = true }
+      } else {
+        sb.append(ch); inWs = false
+      }
+      i += 1
+    }
+    sb.toString
+  }
+
   private val TrLowerFrom = "İIŞÇÖÜĞ"
   private val TrLowerTo   = "iışçöüğ"
 
@@ -56,7 +88,7 @@ object Normalize {
     * scanner below skip the full-string `toLowerCase` copy (ASCII lowering
     * is context-free, so per-char lowering is bit-identical; non-ASCII text
     * keeps the locale-correct full-string path). */
-  private def isAscii(text: String): Boolean = {
+  private[graft] def isAscii(text: String): Boolean = {
     var i = 0
     val n = text.length
     while (i < n) { if (text.charAt(i) >= 0x80) return false; i += 1 }
@@ -66,13 +98,14 @@ object Normalize {
   @inline private def asciiWordChar(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') || c == '_'
 
-  /** Lowered [start, end) slice of an all-ASCII string, copying once. */
+  @inline private def asciiFold(c: Char): Char = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+
+  /** [start, end) slice with `A`-`Z` lowered, copying once. */
   private def lowerSlice(text: String, start: Int, end: Int): String = {
     val out = new Array[Char](end - start)
     var i = start
     while (i < end) {
-      val c = text.charAt(i)
-      out(i - start) = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+      out(i - start) = asciiFold(text.charAt(i))
       i += 1
     }
     new String(out)
@@ -83,9 +116,11 @@ object Normalize {
     * token instead of a fresh substring per occurrence — token Strings were
     * the extractor's top allocation site, and the canonical copies carry a
     * cached hashCode for all the keyword-set operations downstream.
-    * Open-addressing over a power-of-two table keyed by the LOWERED char
-    * region; the table doubles until `MaxCap`, after which new tokens fall
-    * back to plain allocation (pathological vocabularies stay bounded). */
+    * Open-addressing over a power-of-two table keyed by the char region
+    * with `A`-`Z` lowered (a ROOT-lowered region has none, so one fold
+    * serves both scanner paths); the table doubles until `MaxCap`, after
+    * which new tokens fall back to plain allocation (pathological
+    * vocabularies stay bounded). */
   private final class TokenIntern {
     private var cap = 1 << 12
     private var mask = cap - 1
@@ -93,27 +128,12 @@ object Normalize {
     private var size = 0
     private val MaxCap = 1 << 17
 
-    // matches String.hashCode over the lowered region
-    private def hash(text: String, start: Int, end: Int, preLowered: Boolean): Int = {
-      var h = 0
-      var i = start
-      while (i < end) {
-        val c0 = text.charAt(i)
-        val c = if (!preLowered && c0 >= 'A' && c0 <= 'Z') (c0 + 32).toChar else c0
-        h = h * 31 + c
-        i += 1
-      }
-      h
-    }
-
-    private def regionEq(k: String, text: String, start: Int, end: Int, preLowered: Boolean): Boolean = {
+    private def regionEq(k: String, text: String, start: Int, end: Int): Boolean = {
       if (k.length != end - start) return false
       var i = 0
       val n = k.length
       while (i < n) {
-        val c0 = text.charAt(start + i)
-        val c = if (!preLowered && c0 >= 'A' && c0 <= 'Z') (c0 + 32).toChar else c0
-        if (c != k.charAt(i)) return false
+        if (asciiFold(text.charAt(start + i)) != k.charAt(i)) return false
         i += 1
       }
       true
@@ -136,19 +156,17 @@ object Normalize {
       }
     }
 
-    /** Canonical lowered String for text[start, end). `preLowered` = the
-      * region is already lowercase (the non-ASCII path). */
-    def get(text: String, start: Int, end: Int, preLowered: Boolean): String = {
-      val h = hash(text, start, end, preLowered)
+    /** Canonical lowered String for text[start, end); `h` is the
+      * `String.hashCode` of that lowered region. */
+    def get(text: String, start: Int, end: Int, h: Int): String = {
       var slot = h & mask
       var k = keys(slot)
       while (k != null) {
-        if (k.hashCode == h && regionEq(k, text, start, end, preLowered)) return k
+        if (k.hashCode == h && regionEq(k, text, start, end)) return k
         slot = (slot + 1) & mask
         k = keys(slot)
       }
-      val fresh =
-        if (preLowered) text.substring(start, end) else lowerSlice(text, start, end)
+      val fresh = lowerSlice(text, start, end)
       if (size < (cap - (cap >> 2))) { // load factor <= 0.75
         keys(slot) = fresh
         size += 1
@@ -167,18 +185,13 @@ object Normalize {
 
   /** |a ∩ b| without allocating the intersection, counting at most `cap`
     * hits — the clustering/autofill/repair scorers only ever compare or cap
-    * the overlap size, and `intersect` allocated a set per scored pair in
-    * the extraction inner loop. Iterates the smaller side. */
-  def overlap(a: Set[String], b: Set[String], cap: Int = Int.MaxValue): Int = {
-    val (small, large) = if (a.size <= b.size) (a, b) else (b, a)
-    var n = 0
-    val it = small.iterator
-    while (n < cap && it.hasNext) if (large.contains(it.next())) n += 1
-    n
-  }
+    * the overlap size. The scanner's sets are [[TokenSet]]s, which intersect
+    * by an ordered merge; any other set is converted first. */
+  def overlap(a: Set[String], b: Set[String], cap: Int = Int.MaxValue): Int =
+    TokenSet.of(a).overlap(TokenSet.of(b), cap)
 
   /** EN + TR + FR function-word stopword set (extractor.py:1069-1083). */
-  val Stopwords: Set[String] = Set(
+  val Stopwords: Set[String] = TokenSet.from(Seq(
     "the", "a", "an", "and", "or", "to", "of", "in", "on", "for", "by", "with", "without",
     "is", "was", "were", "are", "be", "been", "being", "as", "at", "from", "that", "this",
     "it", "its", "their", "his", "her", "they", "them", "he", "she", "we", "our", "you",
@@ -190,53 +203,78 @@ object Normalize {
     "bakimindan", "suretiyle", "niteliğinde", "niteligi", "kapsamında", "kapsaminda",
     "dans", "pour", "avec", "sur", "par", "une", "des", "les", "aux", "est",
     "que", "qui", "sont", "été", "pas", "ont", "cette", "ces", "mais", "aussi"
-  )
+  ))
 
   /** The one token scanner: the distinct word tokens of the lowered text
     * with length ≥ `minLen` and not in `stops`, built in one pass. Words are
     * `(?U)\\w+` runs when `unicodeWords` (extractor.py:1110-1116), else
     * `[a-z0-9_]+` runs (the repair engine's tokenizer,
     * repair_orphans.py:152-154). ASCII input, the overwhelming case, is
-    * scanned in place and lowered per char by the intern; any other input
-    * is lowered once with `Locale.ROOT` first. A ROOT-lowered string holds
-    * no `A`-`Z`, so `asciiWordChar` is exactly `[a-z0-9_]` on it, and chars
-    * that lower to ASCII word chars (the Kelvin sign) count. Sub-minimum
-    * tokens are skipped before any copy. */
-  private def scan(text: String, unicodeWords: Boolean, minLen: Int, stops: Set[String]): Set[String] = {
-    if (text == null || text.isEmpty) return Set.empty
+    * scanned in place and lowered per char; any other input is lowered once
+    * with `Locale.ROOT` first. A ROOT-lowered string holds no `A`-`Z`, so
+    * `asciiWordChar` is exactly `[a-z0-9_]` on it, and chars that lower to
+    * ASCII word chars (the Kelvin sign) count. The token's hash is summed
+    * while its chars are read, and sub-minimum tokens are skipped before
+    * any lookup or copy. */
+  private def scan(text: String, unicodeWords: Boolean, minLen: Int, stops: Set[String]): TokenSet = {
+    if (text == null || text.isEmpty) return TokenSet.empty
     val ascii = isAscii(text)
     val s = if (ascii) text else text.toLowerCase(Locale.ROOT)
     val unicode = unicodeWords && !ascii
     val tin = Interned.get()
-    val out = Set.newBuilder[String]
+    var buf = new Array[String](16)
+    var k = 0
     val n = s.length
     var i = 0
     while (i < n) {
       val start = i
-      while (i < n && {
-        val c = s.charAt(i)
-        if (unicode) Character.isLetterOrDigit(c) || c == '_' else asciiWordChar(c)
-      }) i += 1
+      var h = 0
+      var c = s.charAt(i)
+      while (if (unicode) Character.isLetterOrDigit(c) || c == '_' else asciiWordChar(c)) {
+        h = h * 31 + asciiFold(c)
+        i += 1
+        c = if (i < n) s.charAt(i) else ' '
+      }
       if (i == start) i += 1
       else if (i - start >= minLen) {
-        val t = tin.get(s, start, i, preLowered = !ascii)
-        if (!stops.contains(t)) out += t
+        val t = tin.get(s, start, i, h)
+        if (!stops.contains(t)) {
+          if (k == buf.length) buf = java.util.Arrays.copyOf(buf, k * 2)
+          buf(k) = t
+          k += 1
+        }
       }
     }
-    out.result()
+    TokenSet.fromBuffer(buf, k)
   }
 
   /** Tokens of length ≥ 4 minus stopwords (extractor.py:1119-1121); the
     * engine's hottest set constructor. */
-  def keywordSet(text: String): Set[String] = scan(text, unicodeWords = true, 4, Stopwords)
+  def keywordSet(text: String): TokenSet = scan(text, unicodeWords = true, 4, Stopwords)
+
+  /** The ≥ 4-char word tokens of texts, each text instance scanned once:
+    * `keywords(t)` is `keywordSet(t)` and `words(t)` is `tokenSet(t, 4)`,
+    * and other stop lists derive from `words` the same way. Texts are keyed
+    * by identity (node texts are shared instances; hashing them would read
+    * every char). One instance serves one extract call and keeps nothing
+    * past it. */
+  final class TextWords {
+    private val cache = new java.util.IdentityHashMap[String, TokenSet]
+    def words(text: String): TokenSet = {
+      var w = cache.get(text)
+      if (w == null) { w = tokenSet(text, 4); cache.put(text, w) }
+      w
+    }
+    def keywords(text: String): TokenSet = words(text).without(Stopwords)
+  }
 
   /** Unicode word tokens of length ≥ `minLen` minus `stops`. */
-  def tokenSet(text: String, minLen: Int, stops: Set[String] = Set.empty): Set[String] =
+  def tokenSet(text: String, minLen: Int, stops: Set[String] = TokenSet.empty): TokenSet =
     scan(text, unicodeWords = true, minLen, stops)
 
   /** ASCII word tokens ≥ `minLen` minus `stops` (the repair engine's
     * keyword_set shape, repair_orphans.py:157-160). */
-  def asciiKeywordSet(text: String, minLen: Int, stops: Set[String]): Set[String] =
+  def asciiKeywordSet(text: String, minLen: Int, stops: Set[String]): TokenSet =
     scan(text, unicodeWords = false, minLen, stops)
 
   /** Case-insensitive (optionally Turkish-folded) substring test (extractor.py:1124-1129). */

@@ -12,7 +12,9 @@ import scala.collection.mutable.ArrayBuffer
   * The goto/fail trie is closed into a full DFA over a COMPACT alphabet
   * (only characters that occur in some phrase get a class; everything else
   * shares class 0, which always leads back to the root), so the scan loop is
-  * two array loads per character — no fail chasing, no per-node search.
+  * two array loads per character — no fail chasing, no per-node search. A
+  * table entry is the target state's row offset, complemented when that
+  * state has outputs, so a character without a hit costs no output lookup.
   *
   * Matching is plain char equality — the caller lowers text and phrases
   * consistently (ASCII or Turkish lowering), exactly like the scan loops it
@@ -21,7 +23,9 @@ import scala.collection.mutable.ArrayBuffer
   */
 final class PhraseAutomaton private (
     charClass: Array[Short],   // char → alphabet class (0 = not in any phrase)
-    delta: Array[Int],         // flattened [state × alphabetSize] DFA table
+    delta: Array[Int],         // flattened [state × alphabetSize] DFA table:
+                               // target × alphabetSize, complemented when the
+                               // target has outputs
     alphabetSize: Int,
     outputs: Array[Array[Int]], // per-state phrase ids incl. fail-chain merges
     val phraseLengths: Array[Int]) {
@@ -30,16 +34,16 @@ final class PhraseAutomaton private (
     * occurrence of every phrase (phrases sharing a suffix all fire).
     * Primitive-int callback trait: no boxing on the per-char hot path. */
   def scan(text: String, sink: PhraseAutomaton.Sink): Unit = {
-    var s = 0
+    var row = 0
     var i = 0
     val n = text.length
     val cc = charClass
     val d = delta
-    val k = alphabetSize
     while (i < n) {
-      s = d(s * k + cc(text.charAt(i)))
-      val out = outputs(s)
-      if (out.length > 0) {
+      row = d(row + cc(text.charAt(i)))
+      if (row < 0) {
+        row = ~row
+        val out = outputs(row / alphabetSize)
         var j = 0
         while (j < out.length) {
           val pid = out(j)
@@ -125,6 +129,12 @@ object PhraseAutomaton {
     while (s < nNodes) {
       if (merged(s) == null) merged(s) = ownOut(s)
       s += 1
+    }
+    var e = 0
+    while (e < delta.length) {
+      val t = delta(e)
+      delta(e) = if (merged(t).nonEmpty) ~(t * k) else t * k
+      e += 1
     }
     new PhraseAutomaton(charClass, delta, k,
       merged.map(l => l.sorted.toArray), phrases.map(_.length).toArray)

@@ -1,6 +1,5 @@
 package graft.kg.text
 
-import java.util.regex.Pattern
 import scala.collection.mutable.ArrayBuffer
 
 /** A text segment with stable char offsets into the assembled document. */
@@ -37,58 +36,126 @@ final case class SegmentedDoc(
   * the assembled conversation document); paragraph split on blank lines,
   * numbered-item line starts, or sentence-final newlines; sentence split on
   * terminal punctuation followed by whitespace and an upper-case/digit start.
+  *
+  * The two boundary rules are hand-written scans with the exact semantics of
+  * successive `Matcher.find()` calls of these patterns (TextProps holds them
+  * equal on random text):
+  *   - paragraphs: `\n\s*\n|\n(?=\d+\.?\s)|(?<=\.)\s*\n`
+  *   - sentences:  `(?<=[.!?])\s+(?=[A-ZÀ-ÖØ-Þ0-9İŞĞÇÖÜ])`
+  * `\s` is the regex's ASCII class `[ \t\n\x0B\f\r]`.
   */
 object Segmenter {
 
-  private val ParaPattern: Pattern =
-    Pattern.compile("\\n\\s*\\n|\\n(?=\\d+\\.?\\s)|(?<=\\.)\\s*\\n")
+  @inline private def isSpace(c: Char): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r') // \t \n \x0B \f \r
 
-  private val SentPattern: Pattern =
-    Pattern.compile("(?<=[.!?])\\s+(?=[A-ZÀ-ÖØ-Þ0-9İŞĞÇÖÜ])")
+  @inline private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
+
+  /** `[A-ZÀ-ÖØ-Þ0-9İŞĞÇÖÜ]` (Ç, Ö and Ü already lie in the Latin-1 ranges). */
+  @inline private def isSentenceStart(c: Char): Boolean =
+    (c >= 'A' && c <= 'Z') || isDigit(c) ||
+      (c >= '\u00C0' && c <= '\u00DE' && c != '\u00D7') ||
+      c == '\u0130' || c == '\u015E' || c == '\u011E'
+
+  /** Index of the last `\n` in the whitespace run starting at `i`, or -1. */
+  private def lastNewlineInRun(t: String, i: Int): Int = {
+    var j = i
+    var last = -1
+    while (j < t.length && isSpace(t.charAt(j))) {
+      if (t.charAt(j) == '\n') last = j
+      j += 1
+    }
+    last
+  }
+
+  /** End of the paragraph-break match that starts at `i`, or -1: the three
+    * alternatives tried in pattern order, each with its greedy extent. */
+  private def paragraphBreakAt(t: String, i: Int): Int = {
+    val c = t.charAt(i)
+    if (c == '\n') {
+      val nl = lastNewlineInRun(t, i + 1)
+      if (nl >= 0) return nl + 1                       // \n\s*\n
+      var d = i + 1
+      while (d < t.length && isDigit(t.charAt(d))) d += 1
+      if (d > i + 1 && d < t.length && (isSpace(t.charAt(d)) ||
+          (t.charAt(d) == '.' && d + 1 < t.length && isSpace(t.charAt(d + 1)))))
+        return i + 1                                   // \n(?=\d+\.?\s)
+      if (i > 0 && t.charAt(i - 1) == '.') i + 1 else -1 // (?<=\.)\s*\n
+    } else if (i > 0 && t.charAt(i - 1) == '.' && isSpace(c)) {
+      val nl = lastNewlineInRun(t, i)                  // (?<=\.)\s*\n
+      if (nl >= 0) nl + 1 else -1
+    } else -1
+  }
+
+  /** Match ends of the paragraph pattern over `t`, in order. A match can
+    * only start at a `\n` or right after a `.`, so the scan jumps between
+    * those (`indexOf`) instead of trying every position. */
+  private[graft] def paragraphBreaks(t: String): Array[Int] = {
+    val out = new scala.collection.mutable.ArrayBuilder.ofInt
+    var nl = t.indexOf('\n')
+    var dot = t.indexOf('.')
+    var i = 0
+    while (i < t.length && (nl >= 0 || dot >= 0)) {
+      if (nl >= 0 && nl < i) nl = t.indexOf('\n', i)
+      if (dot >= 0 && dot + 1 < i) dot = t.indexOf('.', i - 1)
+      val p = math.min(if (nl >= 0) nl else Int.MaxValue, if (dot >= 0) dot + 1 else Int.MaxValue)
+      if (p < t.length) {
+        val e = paragraphBreakAt(t, p)
+        if (e >= 0) { out += e; i = e } else i = p + 1
+      } else i = t.length
+    }
+    out.result()
+  }
+
+  /** Match ends of the sentence pattern over `t.substring(from, to)`, as
+    * offsets into `t`: lookbehind and lookahead do not see past the region. */
+  private[graft] def sentenceBreaks(t: String, from: Int, to: Int): Array[Int] = {
+    val out = new scala.collection.mutable.ArrayBuilder.ofInt
+    var i = from + 1
+    while (i < to) {
+      val p = t.charAt(i - 1)
+      if ((p == '.' || p == '!' || p == '?') && isSpace(t.charAt(i))) {
+        var j = i + 1
+        while (j < to && isSpace(t.charAt(j))) j += 1
+        if (j < to && isSentenceStart(t.charAt(j))) out += j
+        i = j + 1 // a char after whitespace has no terminal char before it
+      } else i += 1
+    }
+    out.result()
+  }
 
   def segment(text: String, docId: String): SegmentedDoc = {
     val paragraphs = ArrayBuffer.empty[TextSegment]
     val sentences = ArrayBuffer.empty[TextSegment]
 
-    val paraStarts = ArrayBuffer(0)
-    val pm = ParaPattern.matcher(text)
-    while (pm.find()) paraStarts += pm.end()
-    paraStarts += text.length
-
+    val breaks = paragraphBreaks(text)
     var pi = 0
-    while (pi < paraStarts.length - 1) {
-      val start = paraStarts(pi)
-      val end = paraStarts(pi + 1)
+    while (pi <= breaks.length) {
+      val start = if (pi == 0) 0 else breaks(pi - 1)
+      val end = if (pi == breaks.length) text.length else breaks(pi)
       // trim bounds computed in place (String.trim semantics: chars <= ' '),
-      // so each non-empty paragraph/sentence costs exactly ONE substring —
-      // the raw-substring + trim + regex-replaceFirst triple was a profiled
-      // allocation hot spot
+      // so each non-empty paragraph/sentence costs exactly ONE substring
       var adjStart = start
       var adjEnd = end
       while (adjStart < adjEnd && text.charAt(adjStart) <= ' ') adjStart += 1
       while (adjEnd > adjStart && text.charAt(adjEnd - 1) <= ' ') adjEnd -= 1
       if (adjEnd > adjStart) {
-        val paraText = text.substring(adjStart, adjEnd)
-        val paraSeg = TextSegment(paraText, adjStart, adjEnd, paragraphs.length, -1)
+        val paraSeg = TextSegment(text.substring(adjStart, adjEnd), adjStart, adjEnd,
+          paragraphs.length, -1)
         paragraphs += paraSeg
 
-        val sentStarts = ArrayBuffer(0)
-        val sm = SentPattern.matcher(paraText)
-        while (sm.find()) sentStarts += sm.end()
-        sentStarts += paraText.length
-
+        val sentBreaks = sentenceBreaks(text, adjStart, adjEnd)
         var si = 0
         var sentIdx = 0
-        while (si < sentStarts.length - 1) {
-          val sStart = sentStarts(si)
-          val sEnd = sentStarts(si + 1)
+        while (si <= sentBreaks.length) {
+          val sStart = if (si == 0) adjStart else sentBreaks(si - 1)
+          val sEnd = if (si == sentBreaks.length) adjEnd else sentBreaks(si)
           var ts = sStart
           var te = sEnd
-          while (ts < te && paraText.charAt(ts) <= ' ') ts += 1
-          while (te > ts && paraText.charAt(te - 1) <= ' ') te -= 1
+          while (ts < te && text.charAt(ts) <= ' ') ts += 1
+          while (te > ts && text.charAt(te - 1) <= ' ') te -= 1
           if (te > ts) {
-            sentences += TextSegment(
-              paraText.substring(ts, te), adjStart + sStart, adjStart + sEnd,
+            sentences += TextSegment(text.substring(ts, te), sStart, sEnd,
               paraSeg.paraIndex, sentIdx)
             sentIdx += 1
           }

@@ -75,6 +75,18 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("plans canonical_chain writes its plan and deletes its generated input") {
+    val tmpRoot = Paths.get(System.getProperty("java.io.tmpdir"))
+    def chainDirs(): Set[Path] = Files.list(tmpRoot).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("plandump_chain")).toSet
+    val before = chainDirs()
+    val out = Files.createTempDirectory("graft_main_plans")
+    Main.run(spark, "plans", Map("output" -> out.toString, "suffix" -> "t",
+      "names" -> "canonical_chain"))
+    assert(Files.readString(out.resolve("canonical_chain_t.txt")).contains("Physical Plan"))
+    assert((chainDirs() -- before).isEmpty, "the generated chain input is left behind")
+  }
+
   test("graft.Main, Bench, Verify and GoldenGen are the only mains in src/main/scala") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root: $root missing")

@@ -154,6 +154,22 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lin.forall(_.contentHash.nonEmpty))
   }
 
+  test("an empty input materializes empty tables, commits every bucket and resumes") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_mat_empty").toString
+    val empty = Seq.empty[graft.kg.model.Turn].toDF()
+    val report = Materializer.run(spark, empty, root, nBuckets = 4)
+    assert(report.bucketsCommitted == (0 until 4).toList)
+    assert(report.rows == Materializer.Tables.map(_ -> 0L).toMap)
+    val store = new SnapshotStore(root)
+    assert(store.completedBuckets == (0 until 4).toSet)
+    assert(store.snapshots.last.lineage.forall(l =>
+      l.inputRows == 0 && l.contentHash == "0"))
+    val again = Materializer.run(spark, empty, root, nBuckets = 4)
+    assert(again.bucketsCommitted.isEmpty && again.bucketsSkipped == (0 until 4).toList)
+    assert(new SnapshotStore(root).snapshots.size == 1)
+  }
+
   test("resume skips committed buckets and is idempotent") {
     val root = Files.createTempDirectory("graft_resume").toString
     val df = transcriptsDF(60)
