@@ -63,7 +63,7 @@ object DocExtractor {
     * sentence the rule's case-sensitive twin over the ASCII-lowered sentence
     * finds the same: an ASCII char folds only to ASCII chars and to the
     * Kelvin sign and long s, which such a sentence cannot hold, and lowering
-    * keeps every `\b` (TextProps holds twin and rule equal). */
+    * keeps every `\b` (ExtractionProps holds twin and rule equal). */
   private[graft] final class Cue(val regex: String) {
     require(regex == regex.toLowerCase(Locale.ROOT), s"cue regex must be lower case: $regex")
     private val rule = Pattern.compile(regex, Pattern.CASE_INSENSITIVE | Pattern.UNICODE_CASE)

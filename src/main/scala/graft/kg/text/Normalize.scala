@@ -43,28 +43,12 @@ object Normalize {
     while (i < raw.length) {
       val c = raw.charAt(i)
       if ((c <= ' ' || c >= 0x80) && Character.isWhitespace(c)) {
-        if (c != ' ' || prevWs) return collapseRuns(raw)
+        if (c != ' ' || prevWs) return normalizeWithMapping(raw)._1
         prevWs = true
       } else prevWs = false
       i += 1
     }
     raw
-  }
-
-  private def collapseRuns(raw: String): String = {
-    val sb = new java.lang.StringBuilder(raw.length)
-    var inWs = false
-    var i = 0
-    while (i < raw.length) {
-      val ch = raw.charAt(i)
-      if (Character.isWhitespace(ch)) {
-        if (!inWs) { sb.append(' '); inWs = true }
-      } else {
-        sb.append(ch); inWs = false
-      }
-      i += 1
-    }
-    sb.toString
   }
 
   private val TrLowerFrom = "İIŞÇÖÜĞ"

@@ -38,8 +38,8 @@ final case class SegmentedDoc(
   * terminal punctuation followed by whitespace and an upper-case/digit start.
   *
   * The two boundary rules are hand-written scans with the exact semantics of
-  * successive `Matcher.find()` calls of these patterns (TextProps holds them
-  * equal on random text):
+  * successive `Matcher.find()` calls of these patterns (ExtractionProps holds
+  * them equal on random text):
   *   - paragraphs: `\n\s*\n|\n(?=\d+\.?\s)|(?<=\.)\s*\n`
   *   - sentences:  `(?<=[.!?])\s+(?=[A-ZÀ-ÖØ-Þ0-9İŞĞÇÖÜ])`
   * `\s` is the regex's ASCII class `[ \t\n\x0B\f\r]`.

@@ -20,10 +20,12 @@ import scala.collection.immutable.AbstractSet
   * open-addressing table over the hashes, built on first use.
   *
   * It is a `Set[String]`, so equality, `contains` and iteration mean what
-  * they mean for any set; iteration order is the sorted order.
+  * they mean for any set; iteration order is the sorted order. It must
+  * stay `Serializable`: Spark closures capture ontology concepts, whose
+  * keyword sets are `TokenSet`s.
   */
 final class TokenSet private (private val toks: Array[String], private val hashes: Array[Int])
-    extends AbstractSet[String] {
+    extends AbstractSet[String] with Serializable {
 
   override def size: Int = toks.length
   override def knownSize: Int = toks.length

@@ -266,4 +266,33 @@ class ExtractorSpec extends AnyFunSuite {
     // zero score -> None regardless of threshold
     assert(pick("zzz qqq", 2).isEmpty)
   }
+  test("ontology concepts and keyword sets stay Java-serializable after extraction") {
+    import graft.kg.ontology.{ConceptDef, MatchText, Ontology}
+    import graft.kg.text.{Normalize, TokenSet}
+    import java.io._
+    def roundTrip[T](x: T): T = {
+      val bytes = new ByteArrayOutputStream
+      val out = new ObjectOutputStream(bytes)
+      out.writeObject(x); out.close()
+      new ObjectInputStream(new ByteArrayInputStream(bytes.toByteArray)).readObject().asInstanceOf[T]
+    }
+    assert(g.nodes.nonEmpty) // an extraction in this JVM fills the concepts' lazy keyword sets
+    val text = turns(7)._2
+    // Spark UDFs capture ConceptDefs of the shared default ontology (SparkEntry q34)
+    Ontology.default.concepts.values.foreach { c =>
+      c.conceptKeywords; c.requiresKeywords; c.idAndTextKeywords; c.requiresKeywordSets
+      val back = roundTrip(c)
+      assert(back == c)
+      assert(back.conceptKeywords == c.conceptKeywords)
+      assert(Ontology.conceptMatchScore(text, back) == Ontology.conceptMatchScore(text, c), c.id)
+    }
+    val mt = MatchText.of(text, turkish = false)
+    assert(roundTrip(mt) == mt)
+    // a set large enough to answer `contains` from its transient hash table
+    val big: TokenSet = Normalize.keywordSet(turns.map(_._2).mkString(" "))
+    assert(big.size > 16)
+    big.contains("natural") // builds the table before serializing
+    val bigBack = roundTrip(big)
+    assert(bigBack == big && big.forall(bigBack.contains) && !bigBack.contains("zzz"))
+  }
 }
